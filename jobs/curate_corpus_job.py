@@ -83,10 +83,9 @@ def main(argv=None):
     if bool(args.pack_budget) != bool(args.packed):
         ap.error("--pack-budget and --packed must be given together")
 
-    from pyspark.sql import SparkSession
+    from schisma_spark.session import attach_session
 
-    spark = SparkSession.builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = attach_session()
 
     from schisma_spark.functions.curate import (
         curation_keep_list, stratified_sample,

@@ -52,11 +52,11 @@ def main(argv=None):
         ap.error("--pairs requires --eval-id-col (a stable id column "
                  "on the eval table for attribution)")
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = SparkSession.builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    from schisma_spark.session import attach_session
+
+    spark = attach_session()
 
     from schisma_spark.functions.dedup import decontaminate
     from schisma_spark.manifest import Manifest

@@ -44,12 +44,12 @@ def main(argv=None):
                          "compared KS-style afterwards")
     args = ap.parse_args(argv)
 
-    # under spark-submit the session already exists; getOrCreate attaches
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = SparkSession.builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    from schisma_spark.session import attach_session
+
+    # attach before the first Column is built (see DRIVER_CONF)
+    spark = attach_session()
 
     from schisma_spark.image.fixtures import dim_fmt, images_schema_dsl
     from schisma_spark.runner import RunConfig, ValidationRun

@@ -34,11 +34,11 @@ def main(argv=None):
     ap.add_argument("--buckets", type=int, default=16)
     args = ap.parse_args(argv)
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = SparkSession.builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    from schisma_spark.session import attach_session
+
+    spark = attach_session()
 
     from schisma_spark.image.fixtures import images_schema_dsl
     from schisma_spark.sources import read_table, write_table

@@ -896,6 +896,12 @@ def connected_components(
       exchange. At scale ``target`` is large, AQE (and its skew
       splitting) stays on, and the seed/empty changes are the only
       difference. Conf is restored in a ``finally``."""
+    if max_iterations < 2:
+        # round 1 is the seed; fewer than two rounds never probes, so
+        # convergence could never be shown
+        raise ValueError(
+            f"connected_components: max_iterations must be >= 2, got "
+            f"{max_iterations}")
     spark = pairs.sparkSession
     jsc = spark.sparkContext._jsc
 
@@ -903,10 +909,14 @@ def connected_components(
         return {e.getKey() for e in
                 jsc.getPersistentRDDs().entrySet().toArray()}
 
+    held: set = set()  # checkpoint blocks this call has not freed yet
+
     def _ckpt(lazy: DataFrame, eager: bool = True):
         before = _persistent_ids()
         ck = lazy.localCheckpoint(eager=eager)
-        return ck, _persistent_ids() - before
+        ids = _persistent_ids() - before
+        held.update(ids)
+        return ck, ids
 
     def _free(ids: set) -> None:
         # DataFrame.unpersist can't reach localCheckpoint blocks; release
@@ -914,6 +924,7 @@ def connected_components(
         for e in jsc.getPersistentRDDs().entrySet().toArray():
             if e.getKey() in ids:
                 e.getValue().unpersist(True)
+        held.difference_update(ids)
 
     # symmetric edges PLUS a self-loop per node (r7): the self-loops ride
     # the same distinct for free and make one propagation round a single
@@ -1074,6 +1085,11 @@ def connected_components(
                 break
             if rounds >= 2:
                 batch = min(batch * 2, 8)
+    except BaseException:
+        # a failed call leaves no blocks behind — including the
+        # pre-resize edges, which only the first probe would free
+        _free(held)
+        raise
     finally:
         conf.set("spark.sql.adaptive.enabled", prev_aqe)
         conf.set("spark.sql.shuffle.partitions", prev_parts)

@@ -188,14 +188,16 @@ def decode_image(data: bytes, fmt: str, w: int, h: int) -> np.ndarray:
 def psnr(a: np.ndarray, b: np.ndarray) -> float:
     """Peak signal-to-noise ratio in dB; inf for identical images.
 
-    Sum of squares via one int32 dot (r7): half the wall of the
-    mean-of-squares form (6 us vs 11 us per 32x32x3 image — np.mean's
-    dispatch overhead dominates at these sizes). Bit-identical: the
-    squared diffs are ints and their total is < 2^53, so every summation
-    order yields the same exact float64."""
+    Sum of squares via one float64 dot: half the wall of the
+    mean-of-squares form at 32x32x3 (np.mean's dispatch overhead
+    dominates at these sizes). Exact: each squared diff is at most 255^2,
+    so every partial sum is an integer below 2^53 for any image under
+    10^11 channel values and every summation order gives the same
+    float64. An int32 dot would wrap past 2^31, which a worst-case
+    256x256 RGB diff already reaches."""
     if a.shape != b.shape:
         return 0.0
-    d = (a.astype(np.int32) - b).ravel()
+    d = (a.astype(np.float64) - b).ravel()
     mse = float(np.dot(d, d)) / d.size
     if mse == 0:
         return float("inf")

@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 from schisma_spark.checks import fk_violations, uniqueness_violations
 from schisma_spark.dsl import Schema
 from schisma_spark.manifest import Manifest
-from schisma_spark.validate import validate
+from schisma_spark.validate import ValidationResult, validate
 
 
 @dataclass
@@ -47,18 +47,28 @@ class ValidationRun:
         self.schema = sch
         self.config = config or RunConfig()
 
-    def row_pass(self, df: DataFrame) -> "ValidationRunPlan":
+    def row_pass(self, df: DataFrame) -> ValidationResult:
         cfg = self.config
-        res = validate(
+        return validate(
             df, self.schema, keys=[*cfg.keys, cfg.part_col],
             ignore_unexpected=True,
         )
-        return res
 
     def violations(self, df: DataFrame, dims: dict | None = None) -> DataFrame:
         """Union of row-level + aggregate violation rows (E10)."""
+        return self._violations(self.row_pass(df), dims)
+
+    def verdicts(self, df: DataFrame) -> DataFrame:
+        return self.row_pass(df).verdicts([self.config.part_col])
+
+    # Compiling the schema is driver work paid per row_pass() call, so
+    # write_outputs and run_resumable compile once and feed the SAME
+    # ValidationResult to both the violation and the verdict frame.
+
+    def _violations(self, res: ValidationResult,
+                    dims: dict | None) -> DataFrame:
         cfg = self.config
-        res = self.row_pass(df)
+        df = res.df
         out = res.violations
         ident = [*cfg.keys, cfg.part_col]
         for key_cols in cfg.unique_on:
@@ -77,9 +87,6 @@ class ValidationRun:
             )
         return out
 
-    def verdicts(self, df: DataFrame) -> DataFrame:
-        return self.row_pass(df).verdicts([self.config.part_col])
-
     def write_outputs(self, df: DataFrame, violations_path: str,
                       verdicts_path: str, dims: dict | None = None,
                       fmt: str = "auto") -> None:
@@ -88,9 +95,11 @@ class ValidationRun:
         small table."""
         from schisma_spark.sources import write_table
 
-        write_table(self.violations(df, dims), violations_path, fmt=fmt,
+        res = self.row_pass(df)
+        write_table(self._violations(res, dims), violations_path, fmt=fmt,
                     mode="append", partition_by=[self.config.part_col])
-        write_table(self.verdicts(df), verdicts_path, fmt=fmt, mode="append")
+        write_table(res.verdicts([self.config.part_col]), verdicts_path,
+                    fmt=fmt, mode="append")
 
     def run_resumable(self, df: DataFrame, manifest_path: str,
                       lineage: dict | None = None,
@@ -120,20 +129,22 @@ class ValidationRun:
         sub, remaining = plan_remaining(df, part_col, m, batch_partitions)
         if sub is None:
             empty = df.where(F.lit(False))
+            res = self.row_pass(empty)
             return RunResult(
-                violations=self.violations(empty, dims),
-                verdicts=self.verdicts(empty),
+                violations=self._violations(res, dims),
+                verdicts=res.verdicts([part_col]),
                 manifest_records=[],
                 batch=empty,
             )
-        verd_df = self.verdicts(sub)
+        res = self.row_pass(sub)
+        verd_df = res.verdicts([part_col])
         verd_rows = verd_df.collect()
         recs = verdict_records(verd_rows, part_col, lineage)
         # rebuild the small verdicts frame from the collected rows so
         # callers don't re-run the scan+aggregate a second time
         spark = df.sparkSession
         verd_small = spark.createDataFrame(verd_rows, verd_df.schema)
-        viols = self.violations(sub, dims)
+        viols = self._violations(res, dims)
         if sinks is not None:
             sinks(viols, verd_small)
         m.append(recs)  # LAST: done-in-manifest implies sinks committed

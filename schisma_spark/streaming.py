@@ -20,6 +20,7 @@ projection applied per micro-batch:
 from __future__ import annotations
 
 import time
+from dataclasses import replace
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -46,13 +47,20 @@ def validate_stream(
 ):
     """Continuously validate files arriving under ``input_path``.
     ``available_now=True`` drains what exists and stops (test/backfill
-    mode); False runs until ``query.stop()``."""
+    mode); False runs until ``query.stop()``.
+
+    The schema compiles ONCE per query, on the first micro-batch: every
+    batch has ``spark_schema`` and the compiled columns bind by name, so
+    later batches re-point the same result at their frame."""
     stream = spark.readStream.schema(spark_schema).parquet(input_path)
     manifest = Manifest(manifest_path)
+    compiled = []
 
     def process(batch_df: DataFrame, batch_id: int):
-        res = validate(batch_df, sch, keys=[*keys, part_col],
-                       ignore_unexpected=True)
+        if not compiled:
+            compiled.append(validate(batch_df, sch, keys=[*keys, part_col],
+                                     ignore_unexpected=True))
+        res = replace(compiled[0], df=batch_df)
         if violations_path:
             res.violations.write.mode("append").parquet(violations_path)
         verd = res.verdicts([part_col]).collect()

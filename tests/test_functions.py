@@ -453,6 +453,49 @@ def test_connected_components_shortcut_log_rounds(spark):
     assert plain == fast
 
 
+def test_connected_components_rejects_max_iterations_below_two(spark):
+    from schisma_spark.functions.dedup import connected_components
+
+    pairs = spark.createDataFrame([(0, 1)], "id_a long, id_b long")
+    for bad in (0, 1):
+        with pytest.raises(ValueError, match="max_iterations must be >= 2"):
+            connected_components(pairs, max_iterations=bad)
+
+
+def test_connected_components_failure_frees_checkpoints(spark, monkeypatch):
+    """A call that fails before its first convergence probe finishes must
+    leave no localCheckpoint blocks behind — the pre-resize edge blocks,
+    which only that probe would free, included."""
+    from schisma_spark.functions.dedup import connected_components
+
+    jsc = spark.sparkContext._jsc
+
+    def persistent_ids():
+        return {e.getKey() for e in
+                jsc.getPersistentRDDs().entrySet().toArray()}
+
+    pairs = spark.createDataFrame([(i, i + 1) for i in range(20)],
+                                  "id_a long, id_b long")
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    prev = spark.conf.get(key)
+    # keep the checkpointed edge set at its shuffle width, so the call
+    # resizes it and defers freeing the original blocks to the probe
+    spark.conf.set(key, "false")
+
+    def probe_fails(self):
+        raise RuntimeError("probe failed")
+
+    before = persistent_ids()
+    try:
+        monkeypatch.setattr(type(pairs), "collect", probe_fails)
+        with pytest.raises(RuntimeError, match="probe failed"):
+            connected_components(pairs)
+    finally:
+        monkeypatch.undo()
+        spark.conf.set(key, prev)
+    assert persistent_ids() == before
+
+
 def test_stratified_sample_deterministic_cap(spark):
     """r4: per-stratum cap is exact, deterministic across partitionings,
     and leaves small strata whole."""

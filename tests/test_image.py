@@ -45,6 +45,20 @@ def test_psnr():
     assert psnr(a, b) < 20  # unrelated images
 
 
+@pytest.mark.parametrize("side", [256, 384])
+def test_psnr_large_worst_case_diff(side):
+    # a sum of squared diffs past 2^31 must not wrap: all-255 vs all-0 is
+    # MSE 255^2, exactly 0 dB
+    white = np.full((side, side, 3), 255, np.uint8)
+    black = np.zeros_like(white)
+    assert psnr(white, black) == 0.0
+    a = gen_pixels("a", side, side)
+    b = 255 - a  # a large diff on every channel value
+    mse = np.mean((a.astype(np.float64) - b) ** 2)
+    assert psnr(a, b) == pytest.approx(10 * np.log10(255.0**2 / mse),
+                                       rel=1e-12)
+
+
 def test_generator_deterministic(spark):
     a = images_table(spark, 200, seed=42).collect()
     b = images_table(spark, 200, seed=42).collect()
