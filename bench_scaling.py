@@ -86,13 +86,12 @@ meta = spark.read.parquet(meta_path).drop("bytes").repartition(128).cache()
 n = meta.count()  # materialize cache
 
 def stats_job():
-    # salt_buckets=0 = plain hash aggregate, the engine's DOCUMENTED
-    # recommendation for COUNT-based uniqueness (checks/uniqueness.py:
-    # map-side partials already bound hot keys; measured at 40M rows /
-    # local[32]: plain 3.96 s vs salted 7.72 s vs hash-prefilter 4.92 s).
-    # Salting remains the knob for large agg states.
+    # duplicate_keys is one plain hash aggregate, the engine's DOCUMENTED
+    # choice for COUNT-based uniqueness (checks/uniqueness.py: map-side
+    # partials already bound hot keys; measured at 40M rows / local[32]:
+    # plain 3.96 s vs salted 7.72 s vs hash-prefilter 4.92 s).
     sch.validate(meta, keys=["image_id", "part"]).verdicts(["part"]).collect()
-    duplicate_keys(meta, ["image_id"], salt_buckets=0).agg(
+    duplicate_keys(meta, ["image_id"]).agg(
         F.count(F.lit(1))).collect()
 
 def trivial_job():

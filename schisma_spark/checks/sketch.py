@@ -26,6 +26,8 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from schisma_spark.sources import local_frame
+
 #: DataSketches KLL k=200: ~1.65 % single-sided normalized rank error at
 #: 99 % confidence; 3x margin for the hard verdict so the oracle row never
 #: flakes on the randomized compaction (still a tight +-5 % rank bound).
@@ -116,9 +118,8 @@ def kll_quantile_check(df: DataFrame, value_col: str,
     # an empty / all-null column yields ZERO rank rows; re-anchor on the
     # literal probe list so the degenerate input surfaces as
     # within_tol=NULL per probe instead of a silent empty result
-    probe_rows = df.sparkSession.createDataFrame(
-        [(float(q),) for q in probs], "q double"
-    )
+    probe_rows = local_frame(df.sparkSession, [(float(q),) for q in probs],
+                             "q double")
     return probe_rows.join(ranks, "q", "left").select(
         "q",
         (F.abs(F.col("exact_rank") - F.col("q")) <= F.lit(tol))

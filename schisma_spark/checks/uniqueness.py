@@ -1,21 +1,18 @@
-"""Uniqueness with explicit skew salting (SURVEY.md §2.B E5).
+"""Uniqueness checks (SURVEY.md §2.B E5): duplicated keys and the rows
+that carry them.
 
 BASELINE.json:6 names "uniqueness via salted hash-aggregate on
-image_id/phash". Two exact strategies, both provided:
-
-  salted (two-stage):
-    stage 1: groupBy(key, salt).count()  -- salt = spark_partition_id() % S
-    stage 2: groupBy(key).sum(count)     -- merges <= S tiny rows per key
-  plain: groupBy(key).count()
-
-When does salting pay? For COUNT, Catalyst's map-side partial aggregation
-already bounds a hot key's reducer load to one partial row per map task —
-measured on 40M rows with a 1%-hot key, plain wins (7.5 s vs 13.2 s at
-local[32]; the salt's extra full-width shuffle costs more than it saves).
-Salting is the right tool when per-key aggregation STATE is large
-(collect_set/approx sketches) or map tasks vastly outnumber reducers, so
-``salt_buckets`` stays an explicit knob: the hot-key splitting mechanism is
-exact either way (counts are associative — SURVEY.md §7 hard-part (d)).
+image_id/phash". The engine counts keys with ONE plain hash aggregate,
+``groupBy(key).count()``: Catalyst's map-side partial aggregation already
+bounds a hot key's reducer load to one partial row per map task, which is
+all that salting would buy for a COUNT. Measured against the two-stage
+salted plan (``groupBy(key, spark_partition_id() % S).count()`` then
+``groupBy(key).sum``): on 40M rows with a 1%-hot key plain wins, 7.5 s vs
+13.2 s at local[32]; at 2M/600k rows plain ran 0.72-0.78x the salted
+wall. Salting stays the right tool for LARGE per-key aggregation state
+(collect_set / sketches), which a uniqueness count never builds — so the
+old ``salt_buckets`` argument is accepted only for compatibility, does
+nothing and warns.
 
 Also measured and rejected for COUNT (r2): a hash-PREFILTER variant that
 groups ``xxhash64(key)`` longs first and exact-verifies only colliding
@@ -26,6 +23,7 @@ again because map-side partials already shrink the wide shuffle.
 
 from __future__ import annotations
 
+import warnings
 from typing import Sequence
 
 from pyspark.sql import DataFrame
@@ -35,29 +33,30 @@ from schisma_spark.compiler import viol
 from schisma_spark.result import INVALID
 
 
+def _salt_ignored(salt_buckets: int | None) -> None:
+    if salt_buckets is not None:
+        warnings.warn(
+            "salt_buckets is ignored (uniqueness counts use one plain hash "
+            "aggregate) and will be removed", DeprecationWarning,
+            stacklevel=3)
+
+
 def duplicate_keys(
     df: DataFrame,
     key_cols: Sequence[str],
-    salt_buckets: int = 64,
+    *,
     min_count: int = 2,
+    salt_buckets: int | None = None,
 ) -> DataFrame:
     """Keys occurring >= ``min_count`` times: ``key..., cnt``. Rows with any
-    NULL key component are ignored (null = missing, handled by row checks)."""
+    NULL key component are ignored (null = missing, handled by row checks).
+    ``salt_buckets`` is deprecated and ignored (see the module docstring)."""
+    _salt_ignored(salt_buckets)
     key_cols = list(key_cols)
     notnull = F.col(key_cols[0]).isNotNull()
     for k in key_cols[1:]:
         notnull = notnull & F.col(k).isNotNull()
     keyed = df.select(*key_cols).where(notnull)  # IsNotNull pushes to scan
-    # r7: this function only ever computes COUNT, and for COUNT the
-    # module docstring's own measurements show the salted two-stage
-    # LOSES at every tested size (map-side partial aggregation already
-    # bounds a hot key's reducer load to one tiny row per map task;
-    # re-measured here: plain 0.72-0.78x the salted wall at 2M/600k
-    # rows, and 7.5 s vs 13.2 s at 40M in r2). ``salt_buckets`` stays in
-    # the signature as the documented no-op it has become for counts —
-    # salting remains the right tool only for LARGE aggregation state
-    # (collect_set / sketches), which this function never builds.
-    del salt_buckets
     counts = keyed.groupBy(*key_cols).agg(F.count(F.lit(1)).alias("cnt"))
     return counts.where(F.col("cnt") >= min_count)
 
@@ -66,8 +65,9 @@ def uniqueness_violations(
     df: DataFrame,
     key_cols: Sequence[str],
     keys: Sequence[str] | None = None,
-    salt_buckets: int = 64,
+    *,
     strategy: str = "auto",  # auto | broadcast | shuffle_hash
+    salt_buckets: int | None = None,
 ) -> DataFrame:
     """Schisma-shaped violation rows for duplicated keys: the offending rows
     are recovered by joining the duplicate key set back onto the table.
@@ -78,9 +78,11 @@ def uniqueness_violations(
     when the built set is actually small and falls back to a shuffled hash
     join when it isn't (the forced-broadcast failure mode in CLAUDE.md).
     ``'broadcast'`` / ``'shuffle_hash'`` remain explicit caller knobs, same
-    surface as :func:`fk_violations`."""
+    surface as :func:`fk_violations`. ``salt_buckets`` is deprecated and
+    ignored."""
+    _salt_ignored(salt_buckets)
     key_cols = list(key_cols)
-    dups = duplicate_keys(df, key_cols, salt_buckets=salt_buckets)
+    dups = duplicate_keys(df, key_cols)
     if strategy == "broadcast":
         dups = F.broadcast(dups)
     elif strategy == "shuffle_hash":

@@ -26,6 +26,7 @@ from schisma_spark.functions.portable import (
     bind, hash32, hash32_native, lit_longs,
 )
 from schisma_spark.functions.text import TOKEN_RE  # noqa: F401  (re-export)
+from schisma_spark.sources import local_frame
 
 MINHASH_P = 4294967311  # smallest prime > 2^32 (universal-hash modulus;
 #                         doubles as the empty-shingle minhash sentinel)
@@ -961,7 +962,7 @@ def connected_components(
         if stats_out is not None:
             stats_out["rounds"] = 0
         node_t = pairs.schema[a_col].dataType
-        return spark.createDataFrame([], _T.StructType([
+        return local_frame(spark, [], _T.StructType([
             _T.StructField("node", node_t), _T.StructField("component", node_t),
         ]))
     target = max(1, min(edges.rdd.getNumPartitions(),

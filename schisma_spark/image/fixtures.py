@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from schisma_spark.image.synth import encode_image, gen_pixels
+from schisma_spark.sources import local_frame
 
 IMAGES_SCHEMA = T.StructType(
     [
@@ -151,8 +152,9 @@ def images_ref(spark: SparkSession, n: int, seed: int = 42,
 
 def dim_fmt(spark: SparkSession) -> DataFrame:
     """FIXTURES.md A3 — format dimension; png is the lossy stand-in."""
-    return spark.createDataFrame(
-        [("raw", False), ("bmp", False), ("png", True)], "fmt string, lossy boolean"
+    return local_frame(
+        spark, [("raw", False), ("bmp", False), ("png", True)],
+        "fmt string, lossy boolean",
     )
 
 

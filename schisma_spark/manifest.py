@@ -80,6 +80,18 @@ class Manifest:
 MAX_PARTITIONS = 1_000_000
 
 
+def check_partition_count(n: int, part_col: str, max_partitions: int) -> None:
+    """Raise ``ValueError`` when ``n`` rows, one per partition value and
+    collected under ``limit(max_partitions + 1)``, show ``part_col`` to be
+    finer than the driver bound (see :data:`MAX_PARTITIONS`)."""
+    if n > max_partitions:
+        raise ValueError(
+            f"{part_col!r} has more than {max_partitions} distinct values; "
+            "the resume planner keeps the partition list on the driver — "
+            "coarsen the partition column (e.g. pmod(hash(id), 4096))"
+        )
+
+
 def plan_remaining(
     df: DataFrame,
     part_col: str,
@@ -104,12 +116,7 @@ def plan_remaining(
     distinct_rows = (
         df.select(part_col).distinct().limit(max_partitions + 1).collect()
     )
-    if len(distinct_rows) > max_partitions:
-        raise ValueError(
-            f"{part_col!r} has more than {max_partitions} distinct values; "
-            "the resume planner keeps the partition list on the driver — "
-            "coarsen the partition column (e.g. pmod(hash(id), 4096))"
-        )
+    check_partition_count(len(distinct_rows), part_col, max_partitions)
     remaining = [r[0] for r in distinct_rows if str(r[0]) not in done]
     remaining.sort(key=str)
     if batch_partitions is not None:

@@ -47,10 +47,14 @@ def test_column_stats_conformance(spark):
 
 
 def test_duplicate_keys_salted_exact(spark, lineitem):
-    # salted two-stage must equal plain groupBy-count exactly (SURVEY §7(d))
+    # must equal plain groupBy-count exactly (SURVEY §7(d)); the deprecated
+    # salt_buckets keyword is still accepted, warns and changes nothing
+    with pytest.warns(DeprecationWarning, match="salt_buckets"):
+        dk = duplicate_keys(lineitem, ["l_orderkey", "l_linenumber"],
+                            salt_buckets=16)
     got = {
         tuple(r[k] for k in ("l_orderkey", "l_linenumber")): r["cnt"]
-        for r in duplicate_keys(lineitem, ["l_orderkey", "l_linenumber"], salt_buckets=16).collect()
+        for r in dk.collect()
     }
     plain = {
         (r["l_orderkey"], r["l_linenumber"]): r["cnt"]
@@ -65,7 +69,7 @@ def test_duplicate_keys_salted_exact(spark, lineitem):
     # planted duplicates are found
     dup = lineitem.limit(5)
     with_dups = lineitem.unionAll(dup)
-    found = duplicate_keys(with_dups, ["l_orderkey", "l_linenumber"], salt_buckets=8)
+    found = duplicate_keys(with_dups, ["l_orderkey", "l_linenumber"])
     assert found.count() >= 5
 
 

@@ -7,6 +7,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+import schisma_spark.manifest as manifest_mod
+from schisma_spark import Field, schema
 from schisma_spark.image.fixtures import images_schema_dsl, images_table
 from schisma_spark.manifest import Manifest, run_resumable
 from schisma_spark.runner import RunConfig, ValidationRun
@@ -82,3 +84,57 @@ def test_plan_remaining_partition_cap(spark, tmp_path):
     # at or below the cap it plans normally
     sub, remaining = plan_remaining(df, "part", m, max_partitions=500)
     assert len(remaining) == 500 and sub is not None
+
+
+@pytest.fixture()
+def plan_calls(monkeypatch):
+    calls = []
+    real = manifest_mod.plan_remaining
+
+    def counting(*a, **kw):
+        calls.append(1)
+        return real(*a, **kw)
+
+    monkeypatch.setattr(manifest_mod, "plan_remaining", counting)
+    return calls
+
+
+def test_fresh_manifest_runs_no_planning_job(spark, imgs, tmp_path,
+                                             plan_calls):
+    """A fresh manifest with no batch limit processes the whole table
+    without the distinct(part) planning job; resumed and batched runs
+    still plan, and both routes give the same manifest metrics."""
+    run = ValidationRun(images_schema_dsl(), RunConfig())
+    fresh = Manifest(str(tmp_path / "fresh"))
+    res = run.run_resumable(imgs, fresh.path)
+    assert plan_calls == []
+    assert len(res.manifest_records) == 16 and res.batch is imgs
+
+    batched = Manifest(str(tmp_path / "batched"))
+    run.run_resumable(imgs, batched.path, batch_partitions=5)
+    run.run_resumable(imgs, batched.path)
+    assert len(plan_calls) == 2
+    assert batched.metrics() == fresh.metrics()
+    assert fresh.metrics()["n_rows"] == 600
+
+
+def test_fresh_manifest_partition_cap(spark, tmp_path, plan_calls,
+                                      monkeypatch):
+    """Without the planning job the verdict collect carries the driver
+    bound: a too-fine part column raises before any sink or manifest
+    write."""
+    monkeypatch.setattr(manifest_mod, "MAX_PARTITIONS", 100)
+    df = spark.range(500).select("id", F.col("id").alias("part"),
+                                 F.lit(1.0).alias("v"))
+    run = ValidationRun(schema({"v": Field(type=float)}),
+                        RunConfig(keys=("id",), unique_on=()))
+    sinks = []
+    mpath = str(tmp_path / "m")
+    with pytest.raises(ValueError, match="distinct values"):
+        run.run_resumable(df, mpath, sinks=lambda *a: sinks.append(a))
+    assert plan_calls == [] and sinks == []
+    assert Manifest(mpath).records() == []
+    # at the cap it runs
+    run.run_resumable(df.where("part < 100"), mpath,
+                      sinks=lambda *a: sinks.append(a))
+    assert len(sinks) == 1 and Manifest(mpath).metrics()["n_partitions"] == 100
