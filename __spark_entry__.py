@@ -118,7 +118,7 @@ def q_violations_orders(spark, sf):
 
 
 def q_dups_partkey(spark, sf):
-    d = duplicate_keys(_t(spark, sf, "lineitem"), ["l_partkey"], salt_buckets=32)
+    d = duplicate_keys(_t(spark, sf, "lineitem"), ["l_partkey"])
     return d.select("l_partkey", F.col("cnt").cast("long").alias("cnt"))
 
 

@@ -133,7 +133,7 @@ def main():
     )
     timed(
         "image_uniqueness",
-        lambda: duplicate_keys(imgs, ["image_id"], salt_buckets=64)
+        lambda: duplicate_keys(imgs, ["image_id"])
         .agg(F.count(F.lit(1)), F.max("cnt")).collect(),
         rows=N_IMAGES,
     )

@@ -10,9 +10,7 @@ salted plan (``groupBy(key, spark_partition_id() % S).count()`` then
 ``groupBy(key).sum``): on 40M rows with a 1%-hot key plain wins, 7.5 s vs
 13.2 s at local[32]; at 2M/600k rows plain ran 0.72-0.78x the salted
 wall. Salting stays the right tool for LARGE per-key aggregation state
-(collect_set / sketches), which a uniqueness count never builds — so the
-old ``salt_buckets`` argument is accepted only for compatibility, does
-nothing and warns.
+(collect_set / sketches), which a uniqueness count never builds.
 
 Also measured and rejected for COUNT (r2): a hash-PREFILTER variant that
 groups ``xxhash64(key)`` longs first and exact-verifies only colliding
@@ -23,7 +21,6 @@ again because map-side partials already shrink the wide shuffle.
 
 from __future__ import annotations
 
-import warnings
 from typing import Sequence
 
 from pyspark.sql import DataFrame
@@ -33,25 +30,14 @@ from schisma_spark.compiler import viol
 from schisma_spark.result import INVALID
 
 
-def _salt_ignored(salt_buckets: int | None) -> None:
-    if salt_buckets is not None:
-        warnings.warn(
-            "salt_buckets is ignored (uniqueness counts use one plain hash "
-            "aggregate) and will be removed", DeprecationWarning,
-            stacklevel=3)
-
-
 def duplicate_keys(
     df: DataFrame,
     key_cols: Sequence[str],
     *,
     min_count: int = 2,
-    salt_buckets: int | None = None,
 ) -> DataFrame:
     """Keys occurring >= ``min_count`` times: ``key..., cnt``. Rows with any
-    NULL key component are ignored (null = missing, handled by row checks).
-    ``salt_buckets`` is deprecated and ignored (see the module docstring)."""
-    _salt_ignored(salt_buckets)
+    NULL key component are ignored (null = missing, handled by row checks)."""
     key_cols = list(key_cols)
     notnull = F.col(key_cols[0]).isNotNull()
     for k in key_cols[1:]:
@@ -67,7 +53,6 @@ def uniqueness_violations(
     keys: Sequence[str] | None = None,
     *,
     strategy: str = "auto",  # auto | broadcast | shuffle_hash
-    salt_buckets: int | None = None,
 ) -> DataFrame:
     """Schisma-shaped violation rows for duplicated keys: the offending rows
     are recovered by joining the duplicate key set back onto the table.
@@ -78,9 +63,7 @@ def uniqueness_violations(
     when the built set is actually small and falls back to a shuffled hash
     join when it isn't (the forced-broadcast failure mode in CLAUDE.md).
     ``'broadcast'`` / ``'shuffle_hash'`` remain explicit caller knobs, same
-    surface as :func:`fk_violations`. ``salt_buckets`` is deprecated and
-    ignored."""
-    _salt_ignored(salt_buckets)
+    surface as :func:`fk_violations`."""
     key_cols = list(key_cols)
     dups = duplicate_keys(df, key_cols)
     if strategy == "broadcast":

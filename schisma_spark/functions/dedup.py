@@ -26,7 +26,7 @@ from schisma_spark.functions.portable import (
     bind, hash32, hash32_native, lit_longs,
 )
 from schisma_spark.functions.text import TOKEN_RE  # noqa: F401  (re-export)
-from schisma_spark.sources import local_frame
+from schisma_spark.sources import Checkpoints, local_frame, materialize
 
 MINHASH_P = 4294967311  # smallest prime > 2^32 (universal-hash modulus;
 #                         doubles as the empty-shingle minhash sentinel)
@@ -873,10 +873,11 @@ def connected_components(
     nests every prior round's plan and OOMs the driver via the plan
     STRING alone — and the previous round's blocks are freed after the
     convergence check so at most two label frames are ever held. The
-    convergence probe is a count aggregate (one scalar to the driver per
-    round, never rows). ``stats_out``, when passed, receives
-    ``{"rounds": n}`` (property-tested: a 200-node chain with shortcut
-    converges in <= ceil(log2(200)) + 1 rounds).
+    convergence probe is an observed sum on the action that fills the
+    round's checkpoint (``sources.materialize``: one scalar to the driver
+    per round, never rows, and no extra aggregate job). ``stats_out``,
+    when passed, receives ``{"rounds": n}`` (property-tested: a 200-node
+    chain with shortcut converges in <= ceil(log2(200)) + 1 rounds).
 
     r7 round-trip discipline (guide §1.2/§2): the iterative phase is
     LATENCY-bound, not data-bound, once the graph is small relative to
@@ -904,28 +905,7 @@ def connected_components(
             f"connected_components: max_iterations must be >= 2, got "
             f"{max_iterations}")
     spark = pairs.sparkSession
-    jsc = spark.sparkContext._jsc
-
-    def _persistent_ids() -> set:
-        return {e.getKey() for e in
-                jsc.getPersistentRDDs().entrySet().toArray()}
-
-    held: set = set()  # checkpoint blocks this call has not freed yet
-
-    def _ckpt(lazy: DataFrame, eager: bool = True):
-        before = _persistent_ids()
-        ck = lazy.localCheckpoint(eager=eager)
-        ids = _persistent_ids() - before
-        held.update(ids)
-        return ck, ids
-
-    def _free(ids: set) -> None:
-        # DataFrame.unpersist can't reach localCheckpoint blocks; release
-        # by id-diff over getPersistentRDDs (recursive_validate.py:151)
-        for e in jsc.getPersistentRDDs().entrySet().toArray():
-            if e.getKey() in ids:
-                e.getValue().unpersist(True)
-        held.difference_update(ids)
+    ckpts = Checkpoints(spark)
 
     # symmetric edges PLUS a self-loop per node (r7): the self-loops ride
     # the same distinct for free and make one propagation round a single
@@ -934,7 +914,7 @@ def connected_components(
     # labels frame per step is also what keeps the batched rounds below
     # LINEAR in plan size (a two-reference step doubles the lazy plan per
     # chained step — 2^k analysis blowup, measured 26 s at batch 8).
-    edges, eids = _ckpt(
+    edges, eids = ckpts.take(
         pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
         .unionByName(
             pairs.select(F.col(b_col).alias("src"),
@@ -958,7 +938,7 @@ def connected_components(
     # blocks.
     n_edges = edges.count()
     if n_edges == 0:
-        _free(eids)
+        ckpts.free(eids)
         if stats_out is not None:
             stats_out["rounds"] = 0
         node_t = pairs.schema[a_col].dataType
@@ -975,14 +955,14 @@ def connected_components(
         if tiny:
             conf.set("spark.sql.adaptive.enabled", "false")
             conf.set("spark.sql.shuffle.partitions", str(target))
-        pending_free: set = set()
+        pending_free = frozenset()
         if target < edges.rdd.getNumPartitions():
             # lazy resize: materialized by the first probe job; the old
             # edges blocks can only be freed AFTER that (localCheckpoint
             # truncates lineage — freeing a parent before the child
             # materializes would lose the data), so the free is deferred
-            resized, rids = _ckpt(edges.repartition(target, "dst"),
-                                  eager=False)
+            resized, rids = ckpts.take(edges.repartition(target, "dst"),
+                                       eager=False)
             pending_free = eids
             edges, eids = resized, rids
         # seed = propagation round 1 from the identity labeling: min over
@@ -991,7 +971,7 @@ def connected_components(
         # select(src).distinct(); one whole round's checkpoint + probe +
         # (in shortcut mode) jump never happens. LAZY checkpoint: the
         # first probe job materializes seed and round-1 labels together.
-        labels, lids = _ckpt(
+        labels, lids = ckpts.take(
             edges.groupBy(F.col("src").alias("node"))
             .agg(F.min("dst").alias("component")),
             eager=False,
@@ -1050,15 +1030,16 @@ def connected_components(
             for _s in range(steps - 1):
                 cur = _propagate(cur)
             cur = _propagate_chg(cur)
-            new_labels, new_ids = _ckpt(cur, eager=False)
+            new_labels, new_ids = ckpts.take(cur, eager=False)
             rounds += steps
             # ONE action: materializes the lazy checkpoint AND reads the
             # change count (a no-op FINAL step proves the fixpoint, so
             # batch-level detection is exact)
-            changed = new_labels.agg(F.sum("_chg")).collect()[0][0] or 0
+            changed = materialize(
+                new_labels, F.sum("_chg").alias("chg"))["chg"] or 0
             if pending_free:
-                _free(pending_free)  # resize input; now materialized past
-                pending_free = set()
+                ckpts.free(pending_free)  # resize input; now materialized past
+                pending_free = frozenset()
             if shortcut and changed > 0:
                 # pointer jump on the materialized step labels (a
                 # self-join of a LAZY frame would recompute the whole
@@ -1066,7 +1047,7 @@ def connected_components(
                 # node ids — coalesce is belt-and-braces
                 lk = new_labels.select(F.col("node").alias("_ln"),
                                        F.col("component").alias("_lc"))
-                jumped, jumped_ids = _ckpt(
+                jumped, jumped_ids = ckpts.take(
                     new_labels.join(lk, new_labels["component"] == lk["_ln"],
                                     "left")
                     .select(
@@ -1075,11 +1056,11 @@ def connected_components(
                         .alias("component"),
                     )
                 )
-                _free(new_ids)
+                ckpts.free(new_ids)
                 new_labels, new_ids = jumped, jumped_ids
             else:
                 new_labels = new_labels.drop("_chg")
-            _free(lids)
+            ckpts.free(lids)
             labels, lids = new_labels, new_ids
             if changed == 0:
                 converged = True
@@ -1089,12 +1070,12 @@ def connected_components(
     except BaseException:
         # a failed call leaves no blocks behind — including the
         # pre-resize edges, which only the first probe would free
-        _free(held)
+        ckpts.free_all()
         raise
     finally:
         conf.set("spark.sql.adaptive.enabled", prev_aqe)
         conf.set("spark.sql.shuffle.partitions", prev_parts)
-    _free(eids)
+    ckpts.free(eids)
     if stats_out is not None:
         stats_out["rounds"] = rounds
     if not converged:
@@ -1102,7 +1083,7 @@ def connected_components(
         # "canonical" docs per giant cluster (r4 review) — fail loudly;
         # a chain needing >max_iterations rounds means the corpus has a
         # transitive near-dup path that long
-        _free(lids)
+        ckpts.free(lids)
         raise RuntimeError(
             f"connected_components did not converge in {max_iterations} "
             "iterations; the pair graph has a longer transitive chain — "

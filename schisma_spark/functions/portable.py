@@ -14,6 +14,8 @@ bits still fits a signed int64 on both sides. For purely internal hashing
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -39,37 +41,37 @@ def hash60(c: Column) -> Column:
     return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
 
 
-def lit_doubles(values) -> Column:
-    """Literal ``array<double>`` (or ``array<array<double>>``) via ONE
-    parsed SQL expression. ``F.lit`` converts Python lists element-wise
-    over py4j — 1.2 s for 3,072 floats (measured, r4); the SQL string is
-    a single call (~2 ms) and ``Double.parseDouble`` of ``repr(x)``
-    round-trips exactly (both sides IEEE nearest), so values are
-    bit-identical. The ``D`` suffix forces DOUBLE — a bare ``1.0`` parses
-    as DECIMAL in Spark SQL."""
-    def _d(x) -> str:
-        return repr(float(x)) + "D"
-
+def _lit_array(values, elem: str, conv) -> Column:
+    """``values`` (a flat list, or a list of lists) as ONE folded array
+    literal of ``elem``: the JSON text of the values under ``from_json``.
+    The optimizer folds the call into a single array Literal, so the
+    analyzed plan of every frame derived from it holds one node — an
+    ``array(array(0.1D, ...), ...)`` SQL string held one unresolved node
+    per element (~3,100 for the 8x6x64 hyperplane matrix), re-resolved for
+    every derived select, join and distinct. ``F.lit(list)`` is worse
+    still: it converts element-wise over py4j (1.2 s for 3,072 floats)."""
     if values and isinstance(values[0], (list, tuple)):
-        inner = ",".join(
-            "array(" + ",".join(_d(x) for x in row) + ")" for row in values
-        )
-        return F.expr(f"array({inner})")
-    return F.expr("array(" + ",".join(_d(x) for x in values) + ")")
+        values = [[conv(x) for x in row] for row in values]
+        elem = f"array<{elem}>"
+    else:
+        values = [conv(x) for x in values]
+    return F.from_json(F.lit(json.dumps(values, allow_nan=False)),
+                       f"array<{elem}>")
+
+
+def lit_doubles(values) -> Column:
+    """Literal ``array<double>`` (or ``array<array<double>>``), bit-exact:
+    ``json.dumps`` writes each float's shortest round-trip repr and Spark's
+    JSON reader parses it correctly rounded (``-0.0``, subnormals and the
+    extremes included). NaN and infinities have no JSON spelling and raise
+    ``ValueError``."""
+    return _lit_array(values, "double", float)
 
 
 def lit_longs(values) -> Column:
-    """Literal ``array<bigint>`` via one parsed SQL expression (see
-    ``lit_doubles``). MIN_LONG can't be written directly — the parser
-    reads the positive magnitude first, which overflows — so it is
-    spelled as an expression."""
-    def _l(x) -> str:
-        x = int(x)
-        if x == -(1 << 63):
-            return "(-9223372036854775807L - 1L)"
-        return f"{x}L"
-
-    return F.expr("array(" + ",".join(_l(x) for x in values) + ")")
+    """Literal ``array<bigint>`` (see ``lit_doubles``); JSON integers are
+    exact over the whole signed 64-bit range."""
+    return _lit_array(values, "bigint", int)
 
 
 def bind(value: Column, body) -> Column:

@@ -221,8 +221,8 @@ def conform_json(
             if isinstance(a, Node):
                 branches.append(_render_value(kv, a))
             elif isinstance(a, ObjectAlt):
-                # variant paths must be foldable, so nested key sets go
-                # through the map<string,variant> view; taken straight
+                # nested key sets are enumerated through the
+                # map<string,variant> view; taken straight
                 # off the variant (r7 — no to_json/from_json round trip;
                 # probe-verified: JSON null stays a present VOID variant,
                 # absent keys stay SQL NULL). bind() so the map is

@@ -12,18 +12,31 @@ constant.
 Scale shape: level L's frontier holds every node at depth L across ALL
 documents — one narrow DataFrame (keys, path, variant subtree) — so each
 iteration is a single distributed pass; nothing ever collects to the
-driver and no row recurses in Python. Spark job count = O(max document
-depth) (a dozen-ish for real corpora), not rows.
+driver and no row recurses in Python.
 
-Storage discipline (r2 VERDICT #1): at most TWO frontiers are ever
-persisted at once — level L−1 is unpersisted (blocking) as soon as level L
-and level L−1's violations are materialized; per-level violation frames
-are small (problem rows only) and clean levels are swapped for
-lineage-free empties so the final union never re-walks the corpus.
-Carrier subtree JSON is NOT materialized during the descent: a second
-descent runs ONLY over documents that actually have a problem boundary
-(semi-join prefilter, the dedup.py:199-210 trick), so ``to_json`` bytes
-are O(problem docs × their depth), zero for a clean corpus.
+Driver cost is constant per level, not per expression:
+
+- ONE compile: the level check is built once over the columns ``_v``
+  (node variant) and ``_where`` (its path) and reused by every level;
+  level 0 feeds it from a projection that parses each document once and
+  wraps it in the NULL-input and malformed-JSON branches.
+- ONE Spark job per level: each level is lazily ``localCheckpoint``'d and
+  a single ``sources.materialize`` action both fills the checkpoint and
+  returns the level's row, has-violations and has-children counts, which
+  steer the loop. Job count = max document depth + one per level with
+  violations + the caller's collect.
+
+Storage discipline: at most TWO frontier checkpoints are held at once
+(level L−1 is freed as soon as level L is materialized); per-level
+violation frames are small (problem rows only) and clean levels hold
+none, so the final union never re-walks the corpus.
+
+Carrier rows (schisma.mjs:143-152) need no second descent: a carrier sits
+at every boundary prefix of a violation path (``children.0``,
+``children.0.children.1``, ...), so the returned frame LAZILY joins those
+distinct prefixes back to their documents on ``keys`` and reads each
+subtree by path (``$.children[0].children[1]``). Only problem documents
+reach ``to_json``; a clean corpus never builds the join at all.
 
 Violation parity with the reference run (verified by executing the
 reference on a planted-error tree):
@@ -39,6 +52,8 @@ reference on a planted-error tree):
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -46,6 +61,7 @@ from schisma_spark.compiler import Opts, empty_varr, viol
 from schisma_spark.dsl import Field, schema as make_schema
 from schisma_spark.functions.portable import bind
 from schisma_spark.result import INVALID, VIOLATION_FIELDS
+from schisma_spark.sources import Checkpoints, materialize
 from schisma_spark.variant_validate import check_variant_node
 
 
@@ -71,6 +87,19 @@ def _boundary_prefixes(where: Column, recurse_field: str) -> Column:
     return bind(F.split(where, r"\."), body)
 
 
+def _chain_path(path: Column, recurse_field: str, key: str) -> Column:
+    """Variant path of a pure ``<rf>.<i>(.<rf>.<i>)*`` chain:
+    ``children.0.children.1`` -> ``$.children[0].children[1]``. The index
+    segments are digits, so every ``.<rf>.`` left after the leading
+    ``<rf>.`` is a boundary between two indices."""
+    return F.concat(
+        F.lit(f"${key}["),
+        F.replace(F.substring(path, len(recurse_field) + 2, 1 << 30),
+                  F.lit(f".{recurse_field}."), F.lit(f"]{key}[")),
+        F.lit("]"),
+    )
+
+
 def validate_json_recursive(
     df: DataFrame,
     json_col: str,
@@ -93,159 +122,92 @@ def validate_json_recursive(
     its size, so the loop always terminates; the guard catches documents
     far beyond the design depth and raises instead of looping on)."""
     keys = list(keys)
-    spark = df.sparkSession
     opts = Opts(ignore_unexpected=ignore_unexpected)
     level = make_schema(
         {**fields, recurse_field: Field(typeof=[[]], required=False)}
     ).root
+    # variant path key for the recursive field (bracket-quoted when the
+    # dot form would not parse)
+    key = (f".{recurse_field}" if "[" not in recurse_field
+           else f"['{recurse_field}']")
 
     col = F.col(json_col)
-    parsed = F.try_parse_json(col)
+    node = check_variant_node(level, F.col("_v"), F.col("_where"), opts)
+    children = F.try_variant_get(F.col("_v"), f"${key}", "array<variant>")
 
-    def root_frontier(src: DataFrame) -> DataFrame:
-        return (
-            src.select(*keys, F.lit(None).cast("string").alias("_where"),
-                       parsed.alias("_v"))
-            .where(F.col("_v").isNotNull())
-        )
+    def check(frontier: DataFrame, viols: Column) -> DataFrame:
+        return frontier.select(*keys, "_where", viols.alias("_viols"),
+                               children.alias("_ch"))
 
-    def descend(fr: DataFrame) -> DataFrame:
-        arr = F.try_variant_get(F.col("_v"), f"$.{recurse_field}",
-                                "array<variant>")
-        return (
-            fr.where(arr.isNotNull())
-            .select(*keys, "_where",
-                    F.posexplode(arr).alias("_i", "_cv"))
-            .select(*keys,
-                    F.concat_ws(".", "_where", F.lit(recurse_field),
-                                F.col("_i").cast("string")).alias("_where"),
-                    F.col("_cv").alias("_v"))
-        )
+    # level 0: NULL input -> no violations; malformed -> the reference's
+    # single INVALID row; else the level check. The parse sits in the
+    # lower projection, so it runs once per row however many references
+    # the check hangs off ``_v`` (CollapseProject keeps a non-cheap
+    # expression with several consumers below them).
+    roots = df.select(
+        *keys, F.lit(None).cast("string").alias("_where"),
+        col.isNull().alias("_null"), F.substring(col, 1, 64).alias("_head"),
+        F.try_parse_json(col).alias("_v"),
+    )
+    malformed = viol(INVALID, where=None, expected="json",
+                     received=F.col("_head"), message="malformed json")
+    combined_lazy = check(
+        roots,
+        F.when(F.col("_null"), empty_varr())
+        .when(F.col("_v").isNull(), F.array(malformed))
+        .otherwise(node.viols),
+    )
 
-    # -- storage/lineage discipline -----------------------------------------
-    # Every level is localCheckpoint'd: the lineage CUT is what keeps plans
-    # constant-size (a persist()-chained frontier nests every prior level's
-    # InMemoryRelation — at 60 levels the AQE plan STRING alone OOM'd the
-    # driver), and the id-diff bookkeeping is what releases a dead level's
-    # blocks DETERMINISTICALLY (DataFrame.unpersist can't reach a
-    # localCheckpoint's blocks; the ContextCleaner only reclaims them on a
-    # later GC). Id attribution is exact because the driver builds plans on
-    # one thread.
-    jsc = spark.sparkContext._jsc
-
-    def _persistent_ids() -> set:
-        return {e.getKey() for e in
-                jsc.getPersistentRDDs().entrySet().toArray()}
-
-    def _ckpt(lazy: DataFrame, eager: bool = True):
-        before = _persistent_ids()
-        ck = lazy.localCheckpoint(eager=eager)
-        return ck, _persistent_ids() - before
-
-    def _free(ids: set) -> None:
-        for e in jsc.getPersistentRDDs().entrySet().toArray():
-            if e.getKey() in ids:
-                e.getValue().unpersist(True)
-
-    # ONE ACTION per level (r7; r4 had one eager checkpoint + three probe
-    # jobs): the combined frame (violations array + child array) is
-    # LAZY-checkpointed and a single stats aggregate — row count,
-    # has-violations count, has-children count — both materializes it
-    # and steers the loop. ``nv == 0`` skips the per-level violations
-    # checkpoint outright; ``nc == 0`` ends the descent without paying a
-    # probe on the empty next frontier. Level 0 additionally folds the
-    # malformed-JSON violation into its projection (one let-bound parse),
-    # where the old shape ran a second full scan+parse of the corpus at
-    # collect time just to find malformed rows. Block discipline
-    # unchanged: combined L-1 is freed as soon as combined L exists.
-    def next_combined(pending: DataFrame) -> DataFrame:
-        res = check_variant_node(level, F.col("_v"), F.col("_where"), opts)
-        arr = F.try_variant_get(F.col("_v"), f"$.{recurse_field}",
-                                "array<variant>")
-        return pending.select(
-            *keys, "_where",
-            res.viols.alias("_viols"), arr.alias("_ch"),
-        )
-
-    def root_level_combined(src: DataFrame) -> DataFrame:
-        # level 0 with the malformed check FOLDED IN: one let-bound
-        # try_parse_json per row however many references the check hangs
-        # off it (the validate_variant _root lesson). NULL input -> no
-        # violations; malformed -> the reference's single INVALID row;
-        # else the level check. Saves the separate malformed frame that
-        # re-scanned and re-parsed the whole corpus at collect time.
-        def body(vv: Column) -> Column:
-            res = check_variant_node(level, vv,
-                                     F.lit(None).cast("string"), opts)
-            arr = F.try_variant_get(vv, f"$.{recurse_field}",
-                                    "array<variant>")
-            mal = viol(INVALID, where=None, expected="json",
-                       received=F.substring(col, 1, 64),
-                       message="malformed json")
-            return F.struct(
-                F.when(col.isNull(), empty_varr())
-                .when(vv.isNull(), F.array(mal))
-                .otherwise(res.viols).alias("v"),
-                F.when(vv.isNotNull(), arr).alias("ch"),
-            )
-
-        return (
-            src.select(*keys, F.lit(None).cast("string").alias("_where"),
-                       bind(F.try_parse_json(col), body).alias("_c"))
-            .select(*keys, "_where", F.col("_c.v").alias("_viols"),
-                    F.col("_c.ch").alias("_ch"))
-        )
-
+    ckpts = Checkpoints(df.sparkSession)
     level_viols: list[DataFrame] = []
-    prev_ids: set = set()
+    prev = frozenset()
     depth = 0
-    combined_lazy = None
-    while True:
-        if combined_lazy is None:
-            combined_lazy = root_level_combined(df)
-        combined, cids = _ckpt(combined_lazy, eager=False)
-        stats = combined.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(F.sum((F.size("_viols") > 0).cast("long")),
-                       F.lit(0)).alias("nv"),
-            F.coalesce(F.sum(F.col("_ch").isNotNull().cast("long")),
-                       F.lit(0)).alias("nc"),
-        ).collect()[0]
-        _free(prev_ids)  # level L-1's blocks die here
-        if stats["n"] == 0:
-            _free(cids)
-            break
-        # guard AFTER the emptiness test (r4 review): a corpus whose
-        # deepest node sits exactly at max_depth must validate — only a
-        # NON-empty frontier beyond the limit is a runaway
-        if depth > max_depth:
-            _free(cids)
-            raise RuntimeError(
-                f"document depth exceeds max_depth={max_depth}; raise the "
-                "guard if this corpus is genuinely that deep"
+    try:
+        while True:
+            combined, cur = ckpts.take(combined_lazy, eager=False)
+            stats = materialize(
+                combined,
+                F.count(F.lit(1)).alias("n"),
+                F.sum((F.size("_viols") > 0).cast("long")).alias("nv"),
+                F.sum(F.col("_ch").isNotNull().cast("long")).alias("nc"),
             )
-        if stats["nv"]:
-            level_viols.append(_ckpt(
-                combined.where(F.size("_viols") > 0)
-                .select(*keys, F.explode("_viols").alias("_x"))
-                .select(*keys, *[F.col(f"_x.{f}").alias(f)
-                                 for f in VIOLATION_FIELDS])
-            )[0])
-        if stats["nc"] == 0:
-            _free(cids)  # no deeper frontier; violations already forced
-            prev_ids = set()
-            break
-        combined_lazy = next_combined(
-            combined.where(F.col("_ch").isNotNull())
-            .select(*keys, "_where",
-                    F.posexplode("_ch").alias("_i", "_cv"))
-            .select(*keys,
-                    F.concat_ws(".", "_where", F.lit(recurse_field),
-                                F.col("_i").cast("string")).alias("_where"),
-                    F.col("_cv").alias("_v"))
-        )
-        prev_ids = cids
-        depth += 1
+            ckpts.free(prev)  # level L-1's blocks die here
+            prev = cur
+            if stats["n"] == 0:
+                break
+            # guard AFTER the emptiness test: a corpus whose deepest node
+            # sits exactly at max_depth must validate — only a NON-empty
+            # frontier beyond the limit is a runaway
+            if depth > max_depth:
+                raise RuntimeError(
+                    f"document depth exceeds max_depth={max_depth}; raise "
+                    "the guard if this corpus is genuinely that deep"
+                )
+            if stats["nv"]:
+                level_viols.append(ckpts.take(
+                    combined.where(F.size("_viols") > 0)
+                    .select(*keys, F.explode("_viols").alias("_x"))
+                    .select(*keys, *[F.col(f"_x.{f}").alias(f)
+                                     for f in VIOLATION_FIELDS])
+                )[0])
+            if not stats["nc"]:
+                break
+            combined_lazy = check(
+                combined.where(F.col("_ch").isNotNull())
+                .select(*keys, "_where",
+                        F.posexplode("_ch").alias("_i", "_v"))
+                .select(*keys,
+                        F.concat_ws(".", "_where", F.lit(recurse_field),
+                                    F.col("_i").cast("string"))
+                        .alias("_where"),
+                        "_v"),
+                node.viols,
+            )
+            depth += 1
+        ckpts.free(prev)
+    except BaseException:
+        ckpts.free_all()
+        raise
 
     if not level_viols:
         # zero violations anywhere: a limit(0) projection in the exact
@@ -258,63 +220,27 @@ def validate_json_recursive(
     for v in level_viols[1:]:
         viols = viols.unionByName(v)
 
-    # carrier pass (schisma.mjs:143-152): every recursion boundary with a
-    # problem in its subtree emits an INVALID row whose value is the
-    # subtree JSON. Subtrees are re-derived in a SECOND descent restricted
-    # to problem documents only (leftsemi prefilter) and to_json runs after
-    # the path join — O(problem docs) bytes, no pass for a clean corpus.
-    # r7 action shape: the boundary set is lazy-checkpointed and probed
-    # by ONE aggregate (count + deepest path); each carrier level runs
-    # ONE action — a one-row crossJoin of the frontier count and the
-    # carrier count materializes both lazy checkpoints together.
-    anc, aids = _ckpt(
-        viols.select(
-            *keys,
-            F.explode(_boundary_prefixes(F.col("where"),
-                                         recurse_field)).alias("_path"),
-        ).distinct(),
-        eager=False,
+    # carriers: the distinct boundary prefixes that the descent could
+    # reach (pure recurse-field chains from the root), looked up in their
+    # documents by path. A path with no node (a duplicate key's other
+    # document) reads SQL NULL and is dropped, as the old descent's join
+    # dropped it.
+    rf = re.escape(recurse_field)
+    paths = (
+        viols.select(*keys, F.explode(_boundary_prefixes(
+            F.col("where"), recurse_field)).alias("_path"))
+        .where(F.col("_path").rlike(rf"^{rf}\.[0-9]+(\.{rf}\.[0-9]+)*$"))
+        .distinct()
     )
-    arow = anc.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.max(F.size(F.split("_path", r"\."))).alias("m"),
-    ).collect()[0]
-    if arow["n"] == 0:
-        _free(aids)
-        return viols
-    # deepest boundary = half the max segment count ('field.idx' pairs);
-    # the second descent stops THERE, not at the documents' full depth —
-    # a deep clean tail below the last problem boundary is never walked.
-    max_depth_needed = arow["m"] // 2
-    prob_docs = anc.select(*keys).distinct()
-    fr, fids = _ckpt(root_frontier(df.join(prob_docs, on=keys,
-                                           how="leftsemi")), eager=False)
-    carrier_levels: list[DataFrame] = []
-    for _lvl in range(max_depth_needed):
-        nxt, nids = _ckpt(descend(fr), eager=False)
-        car, carids = _ckpt(
-            nxt.withColumnRenamed("_where", "_path")
-            .join(anc, on=[*keys, "_path"])
-            .select(*keys,
-                    viol(INVALID, where=F.col("_path"),
-                         value=F.to_json("_v")).alias("_x"))
-            .select(*keys, "_x.*"),
-            eager=False,
-        )
-        crow = (nxt.agg(F.count(F.lit(1)).alias("a"))
-                .crossJoin(car.agg(F.count(F.lit(1)).alias("b")))
-                ).collect()[0]
-        _free(fids)
-        fr, fids = nxt, nids
-        if crow["a"] == 0:
-            _free(carids)
-            break
-        if crow["b"] == 0:
-            _free(carids)
-        else:
-            carrier_levels.append(car)
-    _free(fids)
-    _free(aids)  # carrier frames are materialized; anc no longer needed
-    for c in carrier_levels:
-        viols = viols.unionByName(c)
-    return viols
+    subtree = F.try_variant_get(F.try_parse_json(col),
+                                _chain_path(F.col("_path"), recurse_field,
+                                            key), "variant")
+    carriers = (
+        paths.join(df.select(*keys, json_col), on=keys)
+        .select(*keys, "_path", subtree.alias("_s"))
+        .where(F.col("_s").isNotNull())
+        .select(*keys, viol(INVALID, where=F.col("_path"),
+                            value=F.to_json("_s")).alias("_x"))
+        .select(*keys, "_x.*")
+    )
+    return viols.unionByName(carriers)

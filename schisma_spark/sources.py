@@ -21,7 +21,7 @@ itself is covered by dispatch-level tests with a stubbed reader/writer
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 
 
 def _has_iceberg(spark: SparkSession) -> bool:
@@ -102,6 +102,58 @@ def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
         schema=arrow_schema,
     )
     return spark.createDataFrame(table, schema)
+
+
+def materialize(df: DataFrame, *metrics: Column) -> dict:
+    """Run ``df`` once (a lazy ``localCheckpoint`` is filled by it) and
+    return the aggregate ``metrics`` (aliased Columns) computed on the way,
+    keyed by alias.
+
+    One Spark job for a shuffle-free ``df``: the metrics ride an
+    ``Observation`` on a ``noop`` write. ``df.agg(...).collect()`` costs a
+    partial-aggregate map job plus a result job under AQE, which turns
+    every shuffle stage into a job of its own. An empty ``df`` still
+    reports (``count`` 0, ``sum`` NULL)."""
+    obs = Observation()
+    df.observe(obs, *metrics).write.format("noop").mode("overwrite").save()
+    return obs.get
+
+
+class Checkpoints:
+    """``localCheckpoint`` frames of an iterative operator, with their
+    blocks released deterministically.
+
+    ``DataFrame.unpersist`` cannot reach a local checkpoint's blocks and
+    the ContextCleaner frees them only on a later GC, so ``take`` returns
+    a handle naming the RDDs the checkpoint persisted (the ids that
+    appeared while it was taken; exact, since the driver builds plans on
+    one thread) and ``free`` unpersists exactly those. ``free_all`` drops
+    every block not yet freed: the cleanup of a failing call."""
+
+    def __init__(self, spark: SparkSession):
+        self._jsc = spark.sparkContext._jsc
+        self._held: set = set()
+
+    def _ids(self) -> set:
+        return {e.getKey() for e in
+                self._jsc.getPersistentRDDs().entrySet().toArray()}
+
+    def take(self, lazy: DataFrame, eager: bool = True
+             ) -> tuple[DataFrame, frozenset]:
+        before = self._ids()
+        ck = lazy.localCheckpoint(eager=eager)
+        ids = frozenset(self._ids() - before)
+        self._held |= ids
+        return ck, ids
+
+    def free(self, handle: frozenset) -> None:
+        for e in self._jsc.getPersistentRDDs().entrySet().toArray():
+            if e.getKey() in handle:
+                e.getValue().unpersist(True)
+        self._held -= handle
+
+    def free_all(self) -> None:
+        self.free(frozenset(self._held))
 
 
 def write_table(df: DataFrame, ref: str, fmt: str = "auto",

@@ -19,10 +19,10 @@ Scope: atoms (number/bigint/string/boolean/null), unions, fixed-key
 objects nested to any depth (unexpected-key detection included), arrays of
 union elements, ``$validate`` via typed extraction, and (r2) regex keys
 with full VALUE validation — dynamic keys dispatch per row through a
-``map<string,variant>`` view (variant paths must be foldable, so dynamic
-access goes through one to_json/from_json round trip), matching the
-reference's runtime regex loop (schisma.mjs:256-295) with the same
-best-of-matching-patterns scoring as compiler._check_map.
+``try_variant_get(v, '$', 'map<string,variant>')`` view of the object
+(its keys and variant values; a JSON-null value stays a present key),
+matching the reference's runtime regex loop (schisma.mjs:256-295) with the
+same best-of-matching-patterns scoring as compiler._check_map.
 """
 
 from __future__ import annotations
@@ -311,9 +311,9 @@ def _check_variant_object(alt: ObjectAlt, idx, kv: Column, where: Column,
         lambda k: ~F.array_contains(fixed, k)
         & ~functools_reduce_or([k.rlike(p) for p, _ in alt.regex]),
     )
-    # regex-matched dynamic keys: VALUE validation per row (r2). Variant
-    # get paths must be foldable, so dynamic entries are accessed through
-    # a map<string,variant> view; each matching pattern is tried and the
+    # regex-matched dynamic keys: VALUE validation per row (r2). The key
+    # set is known only per row, so entries are enumerated through a
+    # map<string,variant> view; each matching pattern is tried and the
     # best result kept (non-problems first, then max h — the same scoring
     # as compiler._check_map / schisma.mjs:256-295).
     if alt.regex:

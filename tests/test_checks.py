@@ -47,11 +47,11 @@ def test_column_stats_conformance(spark):
 
 
 def test_duplicate_keys_salted_exact(spark, lineitem):
-    # must equal plain groupBy-count exactly (SURVEY §7(d)); the deprecated
-    # salt_buckets keyword is still accepted, warns and changes nothing
-    with pytest.warns(DeprecationWarning, match="salt_buckets"):
-        dk = duplicate_keys(lineitem, ["l_orderkey", "l_linenumber"],
-                            salt_buckets=16)
+    # must equal plain groupBy-count exactly (SURVEY §7(d)); the removed
+    # salt_buckets keyword is rejected
+    with pytest.raises(TypeError, match="salt_buckets"):
+        duplicate_keys(lineitem, ["l_orderkey"], salt_buckets=16)
+    dk = duplicate_keys(lineitem, ["l_orderkey", "l_linenumber"])
     got = {
         tuple(r[k] for k in ("l_orderkey", "l_linenumber")): r["cnt"]
         for r in dk.collect()

@@ -466,6 +466,7 @@ def test_connected_components_failure_frees_checkpoints(spark, monkeypatch):
     """A call that fails before its first convergence probe finishes must
     leave no localCheckpoint blocks behind — the pre-resize edge blocks,
     which only that probe would free, included."""
+    from schisma_spark.functions import dedup
     from schisma_spark.functions.dedup import connected_components
 
     jsc = spark.sparkContext._jsc
@@ -482,12 +483,12 @@ def test_connected_components_failure_frees_checkpoints(spark, monkeypatch):
     # resizes it and defers freeing the original blocks to the probe
     spark.conf.set(key, "false")
 
-    def probe_fails(self):
+    def probe_fails(df, *metrics):
         raise RuntimeError("probe failed")
 
     before = persistent_ids()
     try:
-        monkeypatch.setattr(type(pairs), "collect", probe_fails)
+        monkeypatch.setattr(dedup, "materialize", probe_fails)
         with pytest.raises(RuntimeError, match="probe failed"):
             connected_components(pairs)
     finally:
@@ -1763,3 +1764,39 @@ def test_kmeans_topics_assignment(spark):
     assert mean2 >= mean0 - 1e-9
     plan = base._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
+
+
+def test_lit_arrays_bit_exact_and_folded(spark):
+    """``lit_doubles``/``lit_longs`` hand back every value bit for bit —
+    signed zero, the smallest subnormal, the largest double, 0.1, the
+    8x6x64 hyperplane matrix, the long extremes — as ONE folded array
+    Literal in the optimized plan; non-finite doubles have no literal."""
+    import struct
+
+    from schisma_spark.functions.portable import lit_doubles, lit_longs
+    from schisma_spark.functions.similarity import _plane_coefs
+
+    def bits(xs):
+        return [struct.pack(">d", x) for x in xs]
+
+    flat = [-0.0, 5e-324, 1.7976931348623157e308, 0.1, -2.5]
+    matrix = [row for t in range(8) for row in _plane_coefs(64, 6, f"t{t}")]
+    longs = [-(1 << 63), (1 << 63) - 1, 0, -1, 1 << 53]
+    df = spark.range(1).select(lit_doubles(flat).alias("d"),
+                               lit_doubles(matrix).alias("m"),
+                               lit_longs(longs).alias("l"))
+    row = df.collect()[0]
+    assert bits(row["d"]) == bits(flat)
+    assert [bits(r) for r in row["m"]] == [bits(r) for r in matrix]
+    assert row["l"] == longs
+
+    plan = spark.range(3).select(
+        F.transform(lit_doubles(matrix), lambda p: F.size(p) + F.col("id"))
+        .alias("t"))._jdf.queryExecution().optimizedPlan()
+    proj = plan.toString()
+    assert "from_json" not in proj and "array(" not in proj
+    assert proj.count("[[") == 1  # the matrix, as one literal
+
+    for bad in (float("nan"), float("inf"), -float("inf")):
+        with pytest.raises(ValueError):
+            lit_doubles([1.0, bad])

@@ -1,11 +1,14 @@
 """Property-based tests (hypothesis) — beyond the reference's
 example-based goldens (its closest is test/automated.mjs:19-77, the
-primitive-pair matrix). Driver-side properties run without Spark; one
-Spark property cross-checks conform against the driver-side create()."""
+primitive-pair matrix). Driver-side properties run without Spark; the
+recursive-validation property runs all its examples through ONE Spark
+call and checks them against a pure-Python walk of the reference."""
 
 from __future__ import annotations
 
+import json
 import math
+from collections import Counter
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -96,3 +99,144 @@ def test_object_create_only_required(keys_values):
     sch = schema(defn)
     out = sch.create()
     assert set(out) == {k for k, f in defn.items() if f.required}
+
+
+# -- validate_json_recursive against a pure-Python walk of the reference ------
+
+RF = "children"
+_names = st.one_of(st.just("n"), st.integers(0, 9), st.none(), st.booleans())
+_info_elems = st.lists(st.one_of(st.integers(0, 3), st.fixed_dictionaries(
+    {}, optional={"a": st.one_of(st.just("x"), st.integers(0, 3)),
+                  "b": st.just(1)})), min_size=1, max_size=3)
+_info = st.one_of(  # a non-recursive field whose array is named like RF
+    st.fixed_dictionaries({RF: _info_elems}), st.none(), st.just({}),
+    st.integers(0, 3), st.just({RF: None}))
+
+_FIELDS = {"name": str,
+           "info": Field(typeof=[{RF: [{"a": str}]}], required=False)}
+
+
+def _trees(depth: int):
+    sub = _trees(depth - 1) if depth else st.none()
+    kid = st.one_of(sub, sub, sub, st.none(), st.integers(0, 3))
+    other = {"name": _names, "nam": st.just("typo"), "info": _info}
+    return st.one_of(
+        st.fixed_dictionaries({RF: st.lists(kid, min_size=1, max_size=3)},
+                              optional=other),
+        st.fixed_dictionaries({}, optional={**other, RF: st.sampled_from(
+            [[], "nope", None])}))
+
+
+_doc = _trees(6).map(json.dumps)
+_corpus = st.lists(st.tuples(
+    # duplicate and NULL keys
+    st.integers(-1, 3).map(lambda k: None if k < 0 else k),
+    st.one_of(_doc, _doc, st.sampled_from(["{broken", None, "[]"]))),
+    min_size=1, max_size=6)
+
+
+def _walk(v, path, out):
+    """Field errors of one node and its subtree (the level schema of
+    ``_FIELDS``): missing/wrong-typed keys, unexpected keys, non-object
+    nodes, a non-array ``children``."""
+    def err(code, *seg):
+        out.append((code, ".".join(path + list(seg)) or None))
+    if not isinstance(v, dict):
+        return err("no match")
+    if "name" not in v:
+        err("missing key", "name")
+    elif not isinstance(v["name"], str):
+        err("no match", "name")
+    for k in v.keys() - {"name", "info", RF}:
+        err("unexpected key", k)
+    info = v.get("info", {RF: []})
+    if not isinstance(info, dict):
+        err("no match", "info")
+    elif not isinstance(info.get(RF), list):
+        err("missing key" if RF not in info else "no match", "info", RF)
+    else:
+        for j, e in enumerate(info[RF]):
+            p = ["info", RF, str(j)]
+            if not isinstance(e, dict):
+                err("no match", *p)
+            elif not isinstance(e.get("a"), str):
+                err("missing key" if "a" not in e else "no match", *p, "a")
+            for k in (e.keys() - {"a"} if isinstance(e, dict) else ()):
+                err("unexpected key", *p, k)
+    kids = v.get(RF, [])
+    if not isinstance(kids, list):
+        return err("no match", RF)
+    for i, c in enumerate(kids):
+        _walk(c, path + [RF, str(i)], out)
+
+
+def _reference(corpus):
+    """Field errors per document, plus one INVALID carrier per (document,
+    boundary) for every recursion boundary — a pure children.<i> chain —
+    that is a strict prefix of a violation path of ANY document sharing
+    the key; its value is that document's subtree."""
+    rows, paths, docs = [], {}, []
+    for key, text in corpus:
+        if text is None:
+            continue
+        try:
+            doc = json.loads(text)
+        except ValueError:
+            rows.append((key, "invalid", None, None))
+            continue
+        out: list = []
+        _walk(doc, [], out)
+        rows += [(key, code, w, None) for code, w in out]
+        docs.append((key, doc))
+        for _, w in out:
+            s = (w or "").split(".")
+            for j in range(1, len(s) - 1, 2):
+                if s[j - 1] != RF or not s[j].isdigit():
+                    break
+                paths.setdefault(key, set()).add(".".join(s[:j + 1]))
+    for key, doc in docs:
+        for p in paths.get(key, ()) if key is not None else ():
+            v = doc
+            for i in map(int, p.split(".")[1::2]):
+                kids = v.get(RF) if isinstance(v, dict) else None
+                v = kids[i] if isinstance(kids, list) and i < len(kids) else ...
+            if v is not ...:
+                rows.append((key, "invalid", p, json.dumps(v, sort_keys=True)))
+    return rows
+
+
+def test_recursive_validate_matches_reference_walk(spark):
+    """Random trees (depth <= 6, fan-out <= 3) with wrong-typed, missing
+    and misspelt names, non-object and JSON-null children, a non-array
+    ``children``, malformed and NULL documents, duplicate and NULL keys,
+    and a non-recursive field holding an array named ``children``: the
+    engine's rows equal the reference walk's. All examples run as ONE
+    frame through ONE call."""
+    from pyspark.sql import Row
+
+    from schisma_spark.recursive_validate import validate_json_recursive
+
+    corpora = []
+
+    @given(_corpus)
+    @settings(max_examples=100, deadline=None, derandomize=True,
+              database=None)
+    def draw(c):
+        corpora.append(c)
+
+    draw()
+    df = spark.createDataFrame(
+        [Row(ex=n, id=k, doc=d) for n, c in enumerate(corpora)
+         for k, d in c], "ex int, id int, doc string")
+    got = validate_json_recursive(df, "doc", _FIELDS, keys=["ex", "id"])
+    want = Counter(((n, key), code, where, value)
+                   for n, c in enumerate(corpora)
+                   for key, code, where, value in _reference(c))
+    rows = Counter(
+        ((r["ex"], r["id"]), r["code"], r["where"],
+         json.dumps(json.loads(r["value"]), sort_keys=True)
+         if r["code"] == "invalid" and r["where"] is not None else None)
+        for r in got.collect())
+    assert rows == want
+    assert sum(1 for r in want if r[1] == "invalid" and r[2]) > 20
+

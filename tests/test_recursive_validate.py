@@ -99,7 +99,7 @@ def test_recursive_storage_and_plan_discipline(spark):
     returns — clean corpora leave storage exactly as found; (b) a clean
     corpus never computes subtree ``to_json`` (the carrier pass is skipped
     entirely); (c) a problem corpus persists only the small per-level
-    violation/carrier frames, never the frontiers."""
+    violation frames, never the frontiers."""
     jsc = spark.sparkContext._jsc
 
     before = jsc.getPersistentRDDs().size()
@@ -109,14 +109,34 @@ def test_recursive_storage_and_plan_discipline(spark):
     plan = out._jdf.queryExecution().optimizedPlan().toString()
     assert "to_json" not in plan
 
-    # problem corpus: result-sized localCheckpoints only (level-2
-    # violations + boundary-path set + two carrier levels for BAD = 4
-    # frames); lingering frontiers would add ~6 more (3 descent + 3
-    # carrier-pass levels)
+    # problem corpus: result-sized localCheckpoints only — BAD has
+    # violations at level 2 alone, so one frame; carriers are a lazy
+    # join, and a lingering frontier would add one per level (3)
     before_bad = jsc.getPersistentRDDs().size()
     assert _run(spark, [BAD]).count() == 6
     growth = jsc.getPersistentRDDs().size() - before_bad
-    assert growth <= 4, f"unexpected persisted frames: {growth}"
+    assert growth <= 1, f"unexpected persisted frames: {growth}"
+
+
+def test_recursive_runs_one_job_per_level(spark):
+    """A depth-1 corpus with field errors at depth 1 costs at most 8 Spark
+    jobs, the caller's collect included: one per level, one for the level
+    that has violations, and the collect of violations plus carriers."""
+    docs = [json.dumps({"name": "n", "children": [{"name": i % 3 or "c"}]})
+            for i in range(40)]
+    df = spark.createDataFrame([Row(id=i, doc=d) for i, d in enumerate(docs)])
+    sc = spark.sparkContext
+    group = "recursive-job-count"
+    sc.setJobGroup(group, "validate_json_recursive")
+    try:
+        rows = validate_json_recursive(df, "doc", {"name": str},
+                                       keys=["id"]).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sorted((r["code"], r["where"]) for r in rows if r["id"] == 1) \
+        == [("invalid", "children.0"), ("no match", "children.0.name")]
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= 8, f"{len(jobs)} jobs"
 
 
 def test_recursive_malformed_and_nonarray_children(spark):

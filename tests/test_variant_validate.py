@@ -160,3 +160,47 @@ def test_variant_regex_multiple_patterns_best_wins(spark):
     df = spark.createDataFrame([Row(id=1, p='{"xy_1": "s"}')])
     sch = schema({"$/^x": [float], "$/^xy": [str]})
     assert validate_variant(df, "p", sch, keys=["id"]).violations.count() == 0
+
+
+def test_json_null_values_and_non_objects_through_map_view(spark):
+    """The ``map<string,variant>`` view enumerates runtime keys for the
+    unexpected-key and regex-key checks. A key holding JSON null is
+    PRESENT (a variant null, not a SQL NULL the view could drop): it is
+    an unexpected key, or a regex key whose value is validated (and kept
+    by conform_json). A non-object document is one root NO_MATCH with its
+    typeof, and conform_json replaces it with the create() default."""
+    from schisma_spark.json_validate import conform_json
+
+    docs = ['{"k": null}', '{"a": 1, "x_a": null, "zz": null}',
+            '[1]', '3', '"s"', 'null', 'true']
+    df = spark.createDataFrame([Row(id=i, p=d) for i, d in enumerate(docs)])
+    roots = [(i, "no match", None, t) for i, t in
+             enumerate(["array", "number", "string", "null", "boolean"], 2)]
+
+    def got(sch, **kw):
+        rows = validate_variant(df, "p", sch, keys=["id"], **kw)
+        return sorted((r["id"], r["code"], r["where"], r["received"])
+                      for r in rows.violations.collect())
+
+    fixed = schema({"a": float})
+    assert got(fixed) == sorted([
+        (0, "missing key", "a", None), (0, "unexpected key", "k", None),
+        (1, "unexpected key", "x_a", None), (1, "unexpected key", "zz", None),
+        *roots])
+    assert got(fixed, ignore_unexpected=True) == sorted([
+        (0, "missing key", "a", None), *roots])
+
+    regex = schema({"a": Field(type=float, default=0.0), "$/^x_": [str]})
+    assert got(regex) == sorted([
+        (0, "missing key", "a", None), (0, "unexpected key", "k", None),
+        (1, "no match", "x_a", "null"), (1, "unexpected key", "zz", None),
+        *roots])
+    nullable = schema({"a": Field(type=float, default=0.0),
+                       "$/^x_": [str, Null]})
+    assert got(nullable, ignore_unexpected=True) == sorted([
+        (0, "missing key", "a", None), *roots])
+
+    out = {r["id"]: json.loads(r["p"])
+           for r in conform_json(df, "p", nullable).collect()}
+    assert out == {0: {"a": 0.0}, 1: {"a": 1.0, "x_a": None},
+                   **{i: {"a": 0.0} for i in range(2, 7)}}
