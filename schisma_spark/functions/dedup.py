@@ -294,6 +294,30 @@ def cap_bucket_size(banded: DataFrame, key_cols: list[str], id_col: str,
     )
 
 
+def banded_pairs(banded: DataFrame, keys: list[str], id_col: str,
+                 max_bucket_size: int | None) -> DataFrame:
+    """The LSH candidate self-join every banded operator shares: rows of
+    ``banded`` that agree on ``keys`` (a band, table bucket or shingle
+    hash) pair up as ``id_a < id_b``; every other column ``c`` of
+    ``banded`` rides along as ``c_a``/``c_b``. Hot buckets are capped
+    first (``cap_bucket_size``). No ``distinct``: a pair sharing several
+    keys appears once per key, and the caller dedups after (or instead
+    of) its verify step.
+
+    The cross joins (``incremental_near_dups``, ``embedding_decontaminate``,
+    ``lsh_ann_topk``) keep their own cap + equi-join: they cap one side
+    only and filter on something other than ``id_a < id_b``."""
+    banded = cap_bucket_size(banded, keys, id_col, max_bucket_size)
+    rest = [c for c in banded.columns if c != id_col and c not in keys]
+
+    def side(s: str) -> DataFrame:
+        return banded.select(*keys, F.col(id_col).alias(f"id_{s}"),
+                             *[F.col(c).alias(f"{c}_{s}") for c in rest])
+
+    return (side("a").join(side("b"), on=keys)
+            .where(F.col("id_a") < F.col("id_b")))
+
+
 def exact_dup_groups(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """Exact duplicate groups by normalized-text fingerprint:
     ``fp, n_dups, min_id`` for groups of size >= 2. Only (fp, id) shuffles."""
@@ -495,17 +519,9 @@ def minhash_candidate_pairs(
     # interleaved in one session — the interpreted array machinery costs
     # more than the second codegen'd signature pass at every tested
     # shape. The renamed-branch hash join stays.
-    banded = cap_bucket_size(banded, ["band_idx", "band_hash"], "_id",
-                             max_bucket_size)
-    left = banded.select(
-        F.col("band_idx"), F.col("band_hash"), F.col("_id").alias("id_a")
-    )
-    right = banded.select(
-        F.col("band_idx"), F.col("band_hash"), F.col("_id").alias("id_b")
-    )
     return (
-        left.join(right, on=["band_idx", "band_hash"])
-        .where(F.col("id_a") < F.col("id_b"))
+        banded_pairs(banded, ["band_idx", "band_hash"], "_id",
+                     max_bucket_size)
         .select("id_a", "id_b")
         .distinct()
     )
@@ -622,9 +638,7 @@ def containment_near_dups(
                .where(F.col("_df") > max_doc_freq).select("h"))
         inv = inv.join(hot, "h", "left_anti")
     cands = (
-        inv.select(F.col("h"), F.col("_id").alias("id_a"))
-        .join(inv.select(F.col("h"), F.col("_id").alias("id_b")), "h")
-        .where(F.col("id_a") < F.col("id_b"))
+        banded_pairs(inv, ["h"], "_id", None)
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("_shared"))
         .where(F.col("_shared") >= min_shared)
@@ -1265,15 +1279,9 @@ def hamming_near_dups(
     banded = s.select(
         "_id", "sig", F.posexplode(bands).alias("band_idx", "band_val")
     )
-    banded = cap_bucket_size(banded, ["band_idx", "band_val"], "_id",
-                             max_bucket_size)
-    a = banded.select("band_idx", "band_val", F.col("_id").alias("id_a"),
-                      F.col("sig").alias("sig_a"))
-    b = banded.select("band_idx", "band_val", F.col("_id").alias("id_b"),
-                      F.col("sig").alias("sig_b"))
     return (
-        a.join(b, on=["band_idx", "band_val"])
-        .where(F.col("id_a") < F.col("id_b"))
+        banded_pairs(banded, ["band_idx", "band_val"], "_id",
+                     max_bucket_size)
         .select("id_a", "id_b",
                 F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
                 .alias("hamming"))
@@ -1291,7 +1299,8 @@ def simhash_near_dups(
     max_bucket_size: int | None = None,
 ) -> DataFrame:
     """SimHash near-duplicate pairs: ``id_a, id_b, hamming`` with
-    ``hamming <= max_hamming``.
+    ``hamming <= max_hamming`` — ``hamming_near_dups`` over the 32-bit
+    ``simhash`` with 4 byte-bands (``n_bands=4, band_bits=8``).
 
     Pigeonhole banding: two 32-bit signatures within Hamming distance
     d <= 3 must agree on at least one of the 4 bytes (4 differing bits
@@ -1299,8 +1308,8 @@ def simhash_near_dups(
     sharing ANY byte-band — shuffle O(docs * 4), never all-pairs — and the
     exact ``bit_count(xor)`` verifies. ``max_hamming`` above 3 VOIDS the
     guarantee (the banded pair set goes silently incomplete), so it
-    raises (r4 ADVICE); split nibbles into 8 bands if a looser radius
-    ever matters.
+    raises (r4 ADVICE); use ``hamming_near_dups`` with more, narrower
+    bands if a looser radius ever matters.
 
     SCALE CEILING (r3 VERDICT): 8-bit bands take <= 256 values, so bucket
     occupancy grows O(N) and the self-join O(N^2/256) — fine at test SF,
@@ -1308,35 +1317,11 @@ def simhash_near_dups(
     (16-bit bands, 65,536 values per band); this 32-bit variant stays as
     the byte-band oracle twin.
     """
-    if max_hamming >= 4:
-        raise ValueError(
-            f"max_hamming={max_hamming} voids the 4-byte-band pigeonhole "
-            "guarantee (need max_hamming < 4); use hamming_near_dups with "
-            "more, narrower bands for a looser radius"
-        )
     sig = simhash(F.col(text_col), hasher=hasher)
     s = df.select(F.col(id_col).alias("_id"), sig.alias("sig"))
-    bands = F.array(*[
-        F.shiftright("sig", 8 * b).bitwiseAND(F.lit(0xFF)).cast("int")
-        for b in range(4)
-    ])
-    banded = s.select(
-        "_id", "sig", F.posexplode(bands).alias("band_idx", "band_val")
-    )
-    banded = cap_bucket_size(banded, ["band_idx", "band_val"], "_id",
-                             max_bucket_size)
-    a = banded.select("band_idx", "band_val", F.col("_id").alias("id_a"),
-                      F.col("sig").alias("sig_a"))
-    b = banded.select("band_idx", "band_val", F.col("_id").alias("id_b"),
-                      F.col("sig").alias("sig_b"))
-    return (
-        a.join(b, on=["band_idx", "band_val"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b",
-                hamming32(F.col("sig_a"), F.col("sig_b")).alias("hamming"))
-        .where(F.col("hamming") <= max_hamming)
-        .distinct()
-    )
+    return hamming_near_dups(s, "sig", "_id", max_hamming=max_hamming,
+                             n_bands=4, band_bits=8,
+                             max_bucket_size=max_bucket_size)
 
 
 def _window_hashes(c: Column, k: int, hasher: str) -> Column:

@@ -9,6 +9,8 @@
   multi-probe neighbors), turning O(N*Q) into O(Q * bucket_size).
 
 Dot products are ``zip_with`` + ``aggregate`` in the JVM — no Python.
+Every operator drops rows that fail ``valid_vector`` (NULL, NULL element,
+zero or non-finite norm) from its bucket, pair and scoring stages.
 """
 
 from __future__ import annotations
@@ -16,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from schisma_spark.functions.dedup import banded_pairs, cap_bucket_size
 from schisma_spark.functions.portable import bind, lit_doubles
 
 
@@ -56,6 +59,37 @@ def _pair_cos(a: Column, b: Column, na: Column, nb: Column,
     return F.round(c, round_to) if round_to is not None else c
 
 
+def _vectors(df: DataFrame, id_col: str, vec_col: str, out_id: str,
+             vec: str, norm: str, *extra: Column) -> DataFrame:
+    """``out_id, vec, norm`` (id, vector, its ``_norm``) plus ``extra``
+    for every ``valid_vector`` row of ``df`` — the scoring side of every
+    pair operator."""
+    return df.where(valid_vector(F.col(vec_col))).select(
+        F.col(id_col).alias(out_id), F.col(vec_col).alias(vec),
+        _norm(F.col(vec_col)).alias(norm), *extra)
+
+
+def _buckets(df: DataFrame, vec_col: str, sigs: Column,
+             *cols: Column) -> DataFrame:
+    """``cols, table_id, bucket`` for every ``valid_vector`` row of
+    ``df``: one row per hyperplane table of ``sigs``
+    (``hyperplane_signatures`` over ``vec_col``)."""
+    return df.where(valid_vector(F.col(vec_col))).select(
+        *cols, F.posexplode(sigs).alias("table_id", "bucket"))
+
+
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """Each probe's ``k`` best neighbours by ``cos``, ties to the lower
+    ``neighbor_id`` (deterministic, oracle-hashable), as ``rank``."""
+    w = Window.partitionBy("probe_id").orderBy(
+        F.col("cos").desc(), F.col("neighbor_id").asc()
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+    )
+
+
 def brute_force_topk(
     df: DataFrame,
     probes: DataFrame,
@@ -66,30 +100,17 @@ def brute_force_topk(
 ) -> DataFrame:
     """Exact top-k neighbors for each probe row:
     ``probe_id, neighbor_id, cos, rank``. Ties break on neighbor_id so the
-    result is fully deterministic (oracle-hashable)."""
-    p = F.broadcast(
-        probes.select(
-            F.col(id_col).alias("probe_id"), F.col(vec_col).alias("_pv"),
-            _norm(F.col(vec_col)).alias("_pn"),
-        )
-    )
-    base = df.select(F.col(id_col).alias("neighbor_id"),
-                     F.col(vec_col).alias("_nv"),
-                     _norm(F.col(vec_col)).alias("_nn"))
+    result is fully deterministic (oracle-hashable). Invalid vectors
+    (``valid_vector``) on either side take no part."""
+    p = F.broadcast(_vectors(probes, id_col, vec_col, "probe_id", "_pv",
+                             "_pn"))
+    base = _vectors(df, id_col, vec_col, "neighbor_id", "_nv", "_nn")
     cos = _pair_cos(F.col("_pv"), F.col("_nv"), F.col("_pn"), F.col("_nn"),
                     round_to)
-    scored = (
+    return _top_k(
         p.crossJoin(base)
         .where(F.col("probe_id") != F.col("neighbor_id"))
-        .select("probe_id", "neighbor_id", cos.alias("cos"))
-    )
-    w = Window.partitionBy("probe_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
+        .select("probe_id", "neighbor_id", cos.alias("cos")), k)
 
 
 def _plane_coefs(dim: int, n_planes: int, seed: str) -> list[list[float]]:
@@ -218,13 +239,14 @@ def lsh_bucket_stats(
     cheap relative to the join it is protecting. ``n_planes=None``
     reports on the same derived m the operators would use (an EAGER
     count at call time unless ``n_rows`` is given — see
-    ``_resolve_n_planes``)."""
+    ``_resolve_n_planes``). Like the operators, it counts only
+    ``valid_vector`` rows."""
     n_planes = _resolve_n_planes(df, n_planes, target_bucket_size, n_rows)
     sigs = hyperplane_signatures(
         F.col(vec_col), dim, n_planes, [f"t{t}" for t in range(n_tables)]
     )
     buckets = (
-        df.select(F.posexplode(sigs).alias("table_id", "bucket"))
+        _buckets(df, vec_col, sigs)
         .groupBy("table_id", "bucket")
         .agg(F.count(F.lit(1)).alias("b_rows"))
     )
@@ -281,28 +303,14 @@ def cosine_near_dups(
     sigs = hyperplane_signatures(
         F.col(vec_col), dim, n_planes, [f"t{t}" for t in range(n_tables)]
     )
-    banded = df.select(
-        F.col(id_col).alias("_id"),
-        F.posexplode(sigs).alias("table_id", "bucket"),
-    )
-    # hot-bucket guard (near-constant embeddings collapse into one bucket
-    # and the self-join below goes O(b^2)) — deterministic unbiased sample
-    from schisma_spark.functions.dedup import cap_bucket_size
-
-    banded = cap_bucket_size(banded, ["table_id", "bucket"], "_id",
-                             max_bucket_size)
-    a = banded.select("table_id", "bucket", F.col("_id").alias("id_a"))
-    b = banded.select("table_id", "bucket", F.col("_id").alias("id_b"))
     cands = (
-        a.join(b, on=["table_id", "bucket"])
-        .where(F.col("id_a") < F.col("id_b"))
+        banded_pairs(_buckets(df, vec_col, sigs, F.col(id_col).alias("_id")),
+                     ["table_id", "bucket"], "_id", max_bucket_size)
         .select("id_a", "id_b")
         .distinct()
     )
-    va = df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("_va"),
-                   _norm(F.col(vec_col)).alias("_na"))
-    vb = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("_vb"),
-                   _norm(F.col(vec_col)).alias("_nb"))
+    va = _vectors(df, id_col, vec_col, "id_a", "_va", "_na")
+    vb = _vectors(df, id_col, vec_col, "id_b", "_vb", "_nb")
     cos = _pair_cos(F.col("_va"), F.col("_vb"), F.col("_na"), F.col("_nb"),
                     round_to)
     return (
@@ -327,8 +335,6 @@ def valid_vector(v: Column) -> Column:
     isfinite(...)``. The O(dim) fold is let-bound (bind) — the three
     references would otherwise re-run it per row in these interpreted
     (HOF) filter stages."""
-    from schisma_spark.functions.portable import bind
-
     sq = F.aggregate(
         v, F.lit(0.0),
         lambda acc, x: acc + x.cast("double") * x.cast("double"))
@@ -456,26 +462,19 @@ def embedding_decontaminate(
     n_planes = _resolve_n_planes(corpus, n_planes, target_bucket_size,
                                  n_rows)
     seeds = [f"t{t}" for t in range(n_tables)]
-
-    def _banded(df: DataFrame, idc: str, vc: str, out_id: str) -> DataFrame:
-        sigs = hyperplane_signatures(F.col(vc), dim, n_planes, seeds)
-        return (df.where(valid_vector(F.col(vc)))
-                .select(F.col(idc).alias(out_id),
-                        F.posexplode(sigs).alias("table_id", "bucket")))
-
-    from schisma_spark.functions.dedup import cap_bucket_size
-
-    cb = cap_bucket_size(_banded(corpus, id_col, vec_col, "_cid"),
-                         ["table_id", "bucket"], "_cid", max_bucket_size)
-    eb = _banded(eval_df, eval_id_col, eval_vec_col, "_eid")
+    cb = cap_bucket_size(
+        _buckets(corpus, vec_col,
+                 hyperplane_signatures(F.col(vec_col), dim, n_planes, seeds),
+                 F.col(id_col).alias("_cid")),
+        ["table_id", "bucket"], "_cid", max_bucket_size)
+    eb = _buckets(
+        eval_df, eval_vec_col,
+        hyperplane_signatures(F.col(eval_vec_col), dim, n_planes, seeds),
+        F.col(eval_id_col).alias("_eid"))
     cands = (cb.join(eb, on=["table_id", "bucket"])
              .select("_cid", "_eid").distinct())
-    cv = corpus.select(F.col(id_col).alias("_cid"),
-                       F.col(vec_col).alias("_cv"),
-                       _norm(F.col(vec_col)).alias("_cn"))
-    ev = eval_df.select(F.col(eval_id_col).alias("_eid"),
-                        F.col(eval_vec_col).alias("_ev"),
-                        _norm(F.col(eval_vec_col)).alias("_en"))
+    cv = _vectors(corpus, id_col, vec_col, "_cid", "_cv", "_cn")
+    ev = _vectors(eval_df, eval_id_col, eval_vec_col, "_eid", "_ev", "_en")
     cos = _pair_cos(F.col("_cv"), F.col("_ev"), F.col("_cn"), F.col("_en"),
                     round_to)
     hits = (cands.join(cv, "_cid").join(ev, "_eid")
@@ -636,9 +635,10 @@ def ivf_ann_topk(
     del dim  # the codebook fixes the dimensionality
     import math
 
-    cents = ivf_centroids(df, id_col, vec_col, n_centroids, sample_mod)
+    vdf = df.where(valid_vector(F.col(vec_col)))
+    cents = ivf_centroids(vdf, id_col, vec_col, n_centroids, sample_mod)
     if refine_iters:
-        cents = ivf_refine_centroids(df, vec_col, cents, refine_iters,
+        cents = ivf_refine_centroids(vdf, vec_col, cents, refine_iters,
                                      round_to)
     # centroid norms are DRIVER constants (left-assoc sum + sqrt — the
     # same op order Spark's fold would use, so the rounded cosines stay
@@ -686,32 +686,17 @@ def ivf_ann_topk(
             1, n_probe,
         ),
     )
-    base = df.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("_nv"),
-        _norm(F.col(vec_col)).alias("_nn"),
-        cell.alias("cell"),
-    )
-    p = probes.select(
-        F.col(id_col).alias("probe_id"),
-        F.col(vec_col).alias("_pv"),
-        _norm(F.col(vec_col)).alias("_pn"),
-        F.explode(F.transform(probe_cells, lambda x: x["c"])).alias("cell"),
-    )
+    base = _vectors(df, id_col, vec_col, "neighbor_id", "_nv", "_nn",
+                    cell.alias("cell"))
+    p = _vectors(
+        probes, id_col, vec_col, "probe_id", "_pv", "_pn",
+        F.explode(F.transform(probe_cells, lambda x: x["c"])).alias("cell"))
     cos = _pair_cos(F.col("_pv"), F.col("_nv"), F.col("_pn"), F.col("_nn"),
                     round_to)
-    scored = (
+    return _top_k(
         p.join(base, "cell")
         .where(F.col("probe_id") != F.col("neighbor_id"))
-        .select("probe_id", "neighbor_id", cos.alias("cos"))
-    )
-    w = Window.partitionBy("probe_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
+        .select("probe_id", "neighbor_id", cos.alias("cos")), k)
 
 
 def lsh_ann_topk(
@@ -750,21 +735,13 @@ def lsh_ann_topk(
     sigs = hyperplane_signatures(
         F.col(vec_col), dim, n_planes, [f"t{t}" for t in range(n_tables)]
     )
-    base = df.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.posexplode(sigs).alias("table_id", "bucket"),
-    )
     # hot-bucket guard on the TABLE side only (the probe side is small by
     # construction); capping trades a sliver of recall in degenerate
     # buckets for a bounded per-task pair count
-    from schisma_spark.functions.dedup import cap_bucket_size
-
-    base = cap_bucket_size(base, ["table_id", "bucket"], "neighbor_id",
-                           max_bucket_size)
-    p = probes.select(
-        F.col(id_col).alias("probe_id"),
-        F.posexplode(sigs).alias("table_id", "bucket"),
-    )
+    base = cap_bucket_size(
+        _buckets(df, vec_col, sigs, F.col(id_col).alias("neighbor_id")),
+        ["table_id", "bucket"], "neighbor_id", max_bucket_size)
+    p = _buckets(probes, vec_col, sigs, F.col(id_col).alias("probe_id"))
     # no explicit broadcast hints here: the probe side is small and AQE
     # will pick broadcast on its own when memory allows; a forced hint can
     # fail hard ("not enough memory to build and broadcast") in a
@@ -775,23 +752,11 @@ def lsh_ann_topk(
         .select("probe_id", "neighbor_id")
         .distinct()
     )
-    pv = probes.select(F.col(id_col).alias("probe_id"),
-                       F.col(vec_col).alias("_pv"),
-                       _norm(F.col(vec_col)).alias("_pn"))
-    nv = df.select(F.col(id_col).alias("neighbor_id"),
-                   F.col(vec_col).alias("_nv"),
-                   _norm(F.col(vec_col)).alias("_nn"))
+    pv = _vectors(probes, id_col, vec_col, "probe_id", "_pv", "_pn")
+    nv = _vectors(df, id_col, vec_col, "neighbor_id", "_nv", "_nn")
     cos = _pair_cos(F.col("_pv"), F.col("_nv"), F.col("_pn"), F.col("_nn"),
                     round_to)
-    scored = (
+    return _top_k(
         cands.join(pv, "probe_id")
         .join(nv, "neighbor_id")
-        .select("probe_id", "neighbor_id", cos.alias("cos"))
-    )
-    w = Window.partitionBy("probe_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
+        .select("probe_id", "neighbor_id", cos.alias("cos")), k)

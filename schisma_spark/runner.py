@@ -42,7 +42,6 @@ class RunConfig:
     part_col: str = "part"
     keys: tuple[str, ...] = ("image_id",)
     unique_on: tuple[tuple[str, ...], ...] = (("image_id",), ("phash",))
-    decode: bool = False         # run the Arrow decode/PSNR pass
     sample_k: int | None = None  # cap violations per (partition, code)
 
 

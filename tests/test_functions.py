@@ -240,6 +240,50 @@ def test_cosine_near_dups_hot_bucket_cap(spark):
     assert 0 < out.count() <= 4 * 10
 
 
+def test_vector_operators_skip_invalid_vectors(spark):
+    """NaN, zero, NULL-element and NULL vectors take no part in any
+    cosine operator: no raise (a zero norm divides by zero under ANSI),
+    no row involving them (a NaN cosine passes ``>= threshold`` and ranks
+    first), and the same rows as the call without them. The bad ids are
+    multiples of ``sample_mod`` below every good id, so an ungated IVF
+    bootstrap would take them as centroids."""
+    import random
+
+    from schisma_spark.functions.similarity import (
+        cosine_near_dups, ivf_ann_topk,
+    )
+
+    rng = random.Random(7)
+    good = [[rng.uniform(-1, 1) for _ in range(8)] for _ in range(60)]
+    good += [[x * 1.01 for x in v] for v in good[:5]]  # planted near-dups
+    bad = [[float("nan")] * 8, [0.0] * 8, [None] + [1.0] * 7, None]
+    schema = "vec_id long, embedding array<float>"
+    clean = spark.createDataFrame(list(enumerate(good, start=1)), schema)
+    dirty = clean.unionByName(spark.createDataFrame(
+        [(-13 * j, v) for j, v in enumerate(bad, start=1)], schema))
+
+    def probes(df):
+        return df.where((F.col("vec_id") % 10 == 0) | (F.col("vec_id") < 0))
+
+    ops = {
+        "cosine_near_dups": lambda df: cosine_near_dups(
+            df, "vec_id", "embedding", dim=8, threshold=0.99, n_tables=4,
+            n_planes=3),
+        "lsh_ann_topk": lambda df: lsh_ann_topk(
+            df, probes(df), "vec_id", "embedding", dim=8, k=3, n_tables=4,
+            n_planes=2),
+        "brute_force_topk": lambda df: brute_force_topk(
+            df, probes(df), "vec_id", "embedding", k=3),
+        "ivf_ann_topk": lambda df: ivf_ann_topk(
+            df, probes(df), "vec_id", "embedding", dim=8, k=3,
+            n_centroids=4, n_probe=2),
+    }
+    for name, op in ops.items():
+        want = sorted(map(tuple, op(clean).collect()))
+        assert want, name
+        assert sorted(map(tuple, op(dirty).collect())) == want, name
+
+
 def test_ivf_ann_probe_all_equals_brute_force(spark):
     """IVF-flat sharp property: probing ALL cells searches every candidate,
     so the result must equal exact brute force (same rounding/tie-break) —

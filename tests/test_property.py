@@ -1,15 +1,18 @@
 """Property-based tests (hypothesis) — beyond the reference's
 example-based goldens (its closest is test/automated.mjs:19-77, the
 primitive-pair matrix). Driver-side properties run without Spark; the
-recursive-validation property runs all its examples through ONE Spark
-call and checks them against a pure-Python walk of the reference."""
+Spark properties (recursive validation, banded Hamming pairs) run all
+their examples through ONE call per configuration and check them
+against a pure-Python reference."""
 
 from __future__ import annotations
 
+import itertools
 import json
 import math
 from collections import Counter
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -240,3 +243,65 @@ def test_recursive_validate_matches_reference_walk(spark):
     assert rows == want
     assert sum(1 for r in want if r[1] == "invalid" and r[2]) > 20
 
+
+
+# -- banded Hamming pairs against brute-force all pairs ------------------------
+
+_sig64 = st.integers(-(2**63), 2**63 - 1)
+
+
+def _hamming_corpus(max_h: int):
+    """Base signatures, each with planted neighbours at 0 to ``max_h + 1``
+    flipped bits (one past the radius, so the cut is tested from both
+    sides)."""
+    flips = st.sets(st.integers(0, 63), max_size=max_h + 1)
+    return st.lists(st.tuples(_sig64, st.lists(flips, max_size=3)),
+                    min_size=1, max_size=8)
+
+
+def _flip(sig: int, bits) -> int:
+    u = (sig % 2**64) ^ sum(1 << b for b in bits)
+    return u - 2**64 if u >= 2**63 else u
+
+
+@pytest.mark.parametrize("n_bands,band_bits", [(4, 8), (4, 16), (6, 10)])
+def test_hamming_near_dups_equals_all_pairs(spark, n_bands, band_bits):
+    """The pigeonhole contract of ``hamming_near_dups`` (and of
+    ``simhash_near_dups``, its (4, 8) shape): with ``max_hamming <
+    n_bands`` the banded pairs are EXACTLY the all-pairs ``d <=
+    max_hamming`` set. Random 64-bit signatures with planted neighbours;
+    all corpora run as ONE frame (ids offset per corpus, cross-corpus
+    pairs dropped). ``max_bucket_size`` output is the same at 1, 3 and 7
+    input partitions."""
+    from schisma_spark.functions.dedup import hamming_near_dups
+
+    max_h = n_bands - 1
+    corpora = []
+
+    @given(_hamming_corpus(max_h))
+    @settings(max_examples=60, deadline=None, derandomize=True,
+              database=None)
+    def draw(c):
+        corpora.append([s for base, nbrs in c
+                        for s in [base] + [_flip(base, f) for f in nbrs]])
+
+    draw()
+    rows = [(n * 1000 + i, s) for n, sigs in enumerate(corpora)
+            for i, s in enumerate(sigs)]
+    want = {(a, b, d) for (a, sa), (b, sb) in itertools.combinations(rows, 2)
+            if a // 1000 == b // 1000
+            and (d := bin((sa ^ sb) % 2**64).count("1")) <= max_h}
+    df = spark.createDataFrame(rows, "id long, sig long")
+
+    def pairs(frame, cap=None):
+        out = hamming_near_dups(frame, "sig", "id", max_hamming=max_h,
+                                n_bands=n_bands, band_bits=band_bits,
+                                max_bucket_size=cap)
+        return {(r.id_a, r.id_b, r.hamming) for r in out.collect()
+                if r.id_a // 1000 == r.id_b // 1000}
+
+    assert pairs(df) == want
+    assert {d for _, _, d in want} == set(range(max_h + 1))
+    capped = [pairs(df.repartition(n), cap=2) for n in (1, 3, 7)]
+    assert capped[0] == capped[1] == capped[2]
+    assert capped[0] < want
