@@ -401,6 +401,37 @@ def q_validate_variant_events(spark, sf):
                                  F.col("where").alias("loc"))
 
 
+def q_validate_variant_json_nulls(spark, sf):
+    """Variant-path validation of JSON nulls and non-object documents
+    (variant_validate.py): a key holding JSON null is PRESENT — an
+    unexpected key, or a regex key whose value is validated (``null``
+    against ``$/^x_: [String]`` is a no match received 'null') — and a
+    non-object root (array, number, string, null, boolean) is one root
+    NO_MATCH with its JS typeof."""
+    from schisma_spark.variant_validate import validate_variant
+
+    eid = F.col("event_id")
+    roots = F.element_at(F.array(*[F.lit(d) for d in
+                                   ("[1]", "3", '"s"', "null", "true")]),
+                         (F.floor(eid / 5) % 5 + 1).cast("int"))
+    ev = _t(spark, sf, "events").select(
+        "event_id",
+        F.when(eid % 11 == 0, F.lit('{"k": null}'))
+        .when(eid % 7 == 0,
+              F.format_string('{"a": %s, "x_a": null, "zz": null}',
+                              (eid % 100).cast("string")))
+        .when(eid % 5 == 0, roots)
+        .otherwise(F.format_string('{"a": %s}', (eid % 100).cast("string")))
+        .alias("payload"),
+    )
+    ev = fan_out(ev)
+    sch = schema({"a": Field(type=float, default=0.0), "$/^x_": [str]})
+    res = validate_variant(ev, "payload", sch, keys=["event_id"])
+    return res.violations.select("event_id", "code",
+                                 F.col("where").alias("loc"), "expected",
+                                 "received")
+
+
 def q_quantiles_quantity(spark, sf):
     li = _t(spark, sf, "lineitem")
     p = F.percentile("l_quantity", F.array(F.lit(0.25), F.lit(0.5), F.lit(0.75)))
@@ -1487,6 +1518,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "conform_json_events": q_conform_json_events,
         "conform_variant_events": q_conform_variant_events,
         "validate_variant_events": q_validate_variant_events,
+        "validate_variant_json_nulls": q_validate_variant_json_nulls,
         "lsh_ann_topk": q_lsh_ann_topk,
         "ivf_ann_topk": q_ivf_ann_topk,
         "lsh_ann_recall": q_lsh_ann_recall,
@@ -2545,6 +2577,44 @@ def oracle_sql() -> dict[str, str]:
             SELECT event_id, 'no match', 'k' FROM ev
               WHERE json_type(p, '$.k')
                     NOT IN ('DOUBLE', 'BIGINT', 'UBIGINT', 'NULL')
+        """,
+        "validate_variant_json_nulls": """
+            WITH ev AS (
+              SELECT event_id,
+                CASE WHEN event_id % 11 = 0 THEN '{"k": null}'
+                     WHEN event_id % 7 = 0
+                       THEN '{"a": ' || CAST(event_id % 100 AS VARCHAR)
+                            || ', "x_a": null, "zz": null}'
+                     WHEN event_id % 5 = 0
+                       THEN CASE (event_id // 5) % 5 WHEN 0 THEN '[1]'
+                                 WHEN 1 THEN '3' WHEN 2 THEN '"s"'
+                                 WHEN 3 THEN 'null' ELSE 'true' END
+                     ELSE '{"a": ' || CAST(event_id % 100 AS VARCHAR) || '}'
+                END AS p
+              FROM events),
+            typed AS (SELECT event_id, p, json_type(p) AS t FROM ev),
+            objs AS (SELECT event_id, p FROM typed WHERE t = 'OBJECT')
+            -- a non-object root: one NO_MATCH with its JS typeof
+            SELECT event_id, 'no match' AS code, CAST(NULL AS VARCHAR) AS loc,
+                   'object' AS expected,
+                   CASE WHEN t = 'ARRAY' THEN 'array'
+                        WHEN t = 'VARCHAR' THEN 'string'
+                        WHEN t = 'NULL' THEN 'null'
+                        WHEN t = 'BOOLEAN' THEN 'boolean'
+                        ELSE 'number' END AS received
+              FROM typed WHERE t <> 'OBJECT'
+            UNION ALL
+            -- json_type(p, path) is NULL only for ABSENT keys; a JSON null
+            -- reports 'NULL', so a null-valued key stays present
+            SELECT event_id, 'missing key', 'a', NULL, NULL FROM objs
+              WHERE json_type(p, '$.a') IS NULL
+            UNION ALL
+            SELECT event_id, 'no match', 'x_a', 'string', 'null' FROM objs
+              WHERE json_type(p, '$.x_a') = 'NULL'
+            UNION ALL
+            SELECT event_id, 'unexpected key', k, NULL, NULL
+              FROM (SELECT event_id, unnest(json_keys(p)) AS k FROM objs)
+              WHERE k <> 'a' AND NOT regexp_matches(k, '^x_')
         """,
         "minhash_near_dups": near_dups_sql,
         "incremental_dedup": incremental_dedup_sql,

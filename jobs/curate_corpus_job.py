@@ -2,7 +2,8 @@
 
 The cluster invocation mode (BASELINE.json:14), curation flavor::
 
-    spark-submit --py-files /tmp/schisma_spark_pyfiles.zip \
+    ZIP=$(python -c "from schisma_spark.session import package_zip; print(package_zip())")
+    spark-submit --py-files "$ZIP" \
         jobs/curate_corpus_job.py \
         --input <parquet-or-iceberg-ref> \
         --decisions <sink> --manifest <dir> \

@@ -2,7 +2,8 @@
 
 The cluster invocation mode (BASELINE.json:14), decontamination flavor::
 
-    spark-submit --py-files /tmp/schisma_spark_pyfiles.zip \
+    ZIP=$(python -c "from schisma_spark.session import package_zip; print(package_zip())")
+    spark-submit --py-files "$ZIP" \
         jobs/decontaminate_job.py \
         --input <corpus parquet-or-iceberg-ref> \
         --eval <eval-set parquet-or-iceberg-ref> \

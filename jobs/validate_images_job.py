@@ -2,15 +2,16 @@
 
 The north-rule invocation mode (BASELINE.json:14):
 
-    spark-submit --py-files /tmp/schisma_spark_pyfiles.zip \
+    spark-submit --py-files "$ZIP" \
         jobs/validate_images_job.py \
         --input <parquet-or-iceberg-ref> \
         --violations <sink> --verdicts <sink> --manifest <dir> \
         [--decode] [--sample-k 100] [--part-col part]
 
-Build the zip with::
+where ``$ZIP`` is the package zip of this checkout (``package_zip`` keys
+its name on the package directory)::
 
-    python -c "from schisma_spark.session import package_zip; print(package_zip())"
+    ZIP=$(python -c "from schisma_spark.session import package_zip; print(package_zip())")
 
 Runs the ≤3-job pipeline (SURVEY §3.2): fused row checks + aggregate checks
 -> violations sink; per-partition verdict agg -> verdicts sink + manifest

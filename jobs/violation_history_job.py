@@ -11,7 +11,8 @@ and the join reuse the on-disk distribution — at 10^12 rows that removes
 the two dominant shuffles of the repeated-runs workflow. The job ASSERTS
 the exchange-free plan at runtime and reports it in its output JSON.
 
-    spark-submit --py-files /tmp/schisma_spark_pyfiles.zip \
+    ZIP=$(python -c "from schisma_spark.session import package_zip; print(package_zip())")
+    spark-submit --py-files "$ZIP" \
         jobs/violation_history_job.py \
         --input <parquet-or-iceberg-ref> --run-id r42 \
         --history-table viol_history --current-table viol_current \

@@ -19,6 +19,14 @@ alternatives (``_getBestResult``, schisma.mjs:359-363) — expressed as
 ``array_position(h_arr, array_max(h_arr))`` so the whole heuristic runs
 vectorized in the JVM for every row at once. No Python executes per row
 anywhere in this module.
+
+The result policy shared by every check compiler (this module,
+``variant_validate`` and ``conform``) is written once, below
+``CheckRes``: the union pick (``best_index``, ``pick``, ``pick_struct``),
+regex-key scoring (``regex_key_best``), the ``(v, p, h)`` struct and its
+fold (``vph``, ``part``, ``fold``) and the shared result shapes
+(``ok_result``, ``validity``, ``composite``, ``null_guard``,
+``guarded_composite``).
 """
 
 from __future__ import annotations
@@ -32,6 +40,7 @@ from pyspark.sql import types as T
 
 from schisma_spark import typeatoms as ta
 from schisma_spark.dsl import ArrayAlt, AtomAlt, Node, ObjectAlt
+from schisma_spark.functions.portable import bind
 from schisma_spark.result import (
     EXACT_MATCH,
     INVALID,
@@ -45,6 +54,12 @@ from schisma_spark.result import (
 )
 
 VIOL_ARR_T = T.ArrayType(VIOLATION_STRUCT)
+
+#: regex-key scoring (schisma.mjs:256-295): a problem result ranks below
+#: every non-problem one, and a pattern that does not match the key ranks
+#: below every result
+PROBLEM_PENALTY = -100000
+NOMATCH = -(10**9)
 
 
 @dataclass(frozen=True)
@@ -172,6 +187,198 @@ def is_problem(code: Column) -> Column:
 
 
 # ---------------------------------------------------------------------------
+# shared result policy: every check compiler goes through these
+
+
+def best_index(hs: Column, mx: Column | None = None) -> Column:
+    """1-based index of the FIRST maximum of the array ``hs`` (``mx``: its
+    ``array_max``, when the caller holds it already) — ``_getBestResult``
+    (schisma.mjs:359-363): a later alternative wins only with a strictly
+    greater value."""
+    return F.array_position(hs, F.array_max(hs) if mx is None else mx) \
+        .cast("int")
+
+
+def pick(results: list[CheckRes], scores: list[Column] | None = None,
+         count: bool = True) -> CheckRes:
+    """Union resolution over unbound results: the result at the first
+    argmax of ``h`` (of ``scores`` when given; its ``h`` is then the
+    chosen one's, not the maximum). ``count=False`` leaves ``n`` unset
+    for callers that never read it."""
+    if len(results) == 1:
+        return results[0]
+
+    def at(cols: list[Column]) -> Column:
+        return F.element_at(F.array(*cols), best)
+
+    if scores is None:
+        hs = F.array(*[r.h for r in results])
+        best = best_index(hs)
+        h = F.array_max(hs)
+    else:
+        best = best_index(F.array(*scores))
+        h = at([r.h for r in results])
+    n = at([r.n for r in results]) \
+        if count and all(r.n is not None for r in results) else None
+    return CheckRes(at([r.viols for r in results]),
+                    at([r.code for r in results]), h, n)
+
+
+def vph(v: Column, p: Column, h: Column) -> Column:
+    """``struct(v, p, h)``: a result part's violations, whether it is a
+    problem, and its heuristic — the shape let-bound parts travel in."""
+    return F.struct(v.alias("v"), p.alias("p"), h.alias("h"))
+
+
+def part(v: Column, p: bool, h: int) -> Column:
+    """A constant-flag ``vph`` (missing, unexpected or skipped key)."""
+    return vph(v, F.lit(p), F.lit(h).cast("int"))
+
+
+def pick_struct(structs: list[Column]) -> Column:
+    """Union resolution over ``vph`` structs: ONE let-bound array, each
+    alternative evaluated once, the first argmax of ``h`` chosen."""
+    if len(structs) == 1:
+        return structs[0]
+    return bind(F.array(*structs), lambda arr: F.element_at(
+        arr, best_index(F.transform(arr, lambda x: x["h"]))))
+
+
+def fold(parts: Column) -> tuple[Column, Column, Column]:
+    """An array of ``vph`` structs combined: all violations, any problem,
+    summed ``h``. Bind ``parts`` when it is not a plain array: it is
+    referenced three times."""
+    return (
+        F.flatten(F.transform(parts, lambda e: e["v"])),
+        F.exists(parts, lambda e: e["p"]),
+        F.aggregate(parts, F.lit(0).cast("int"), lambda a, e: a + e["h"]),
+    )
+
+
+def regex_key_best(key: Column, patterns: list, check,
+                   fallback: Column) -> Column:
+    """The ``vph`` of a run-time ``key`` over regex ``patterns``
+    (schisma.mjs:256-295): every pattern the key matches (``rlike``) is
+    tried, a non-problem result beats every problem one, then the higher
+    ``h``, then declaration order; ``fallback`` when no pattern matches.
+    ``check(alts) -> CheckRes`` checks the key's value against one
+    pattern's alternatives. The per-pattern results are materialized ONCE
+    into a bound array of structs that the argmax indexes (inlining the
+    check tree into the scores and three selections multiplied the work
+    and codegen size ~4x)."""
+    if not patterns:
+        return fallback
+    per = []
+    for pat, alts in patterns:
+        r = check(alts)
+        p = is_problem(r.code)
+        score = r.h.cast("long") + _penalty(p)
+        per.append(F.struct(
+            F.when(key.rlike(pat), score)
+            .otherwise(F.lit(NOMATCH).cast("long")).alias("s"),
+            r.viols.alias("v"), p.alias("p"), r.h.cast("int").alias("h"),
+        ))
+
+    def choose(arr: Column) -> Column:
+        scores = F.transform(arr, lambda x: x["s"])
+        mx = F.array_max(scores)
+        chosen = F.element_at(arr, best_index(scores, mx))
+        return F.when(mx > NOMATCH,
+                      vph(chosen["v"], chosen["p"], chosen["h"])) \
+            .otherwise(fallback)
+
+    return bind(F.array(*per), choose)
+
+
+def _penalty(p: Column) -> Column:
+    return F.when(p, F.lit(PROBLEM_PENALTY)).otherwise(F.lit(0))
+
+
+def validate_spec(spec) -> tuple[Column, dict]:
+    """``(ok, violation-field overrides)`` of one ``$validate`` return: a
+    bool Column, ``(ok, message)`` or ``(ok, dict of fields)`` — the
+    engine twin of the reference's merged error object
+    (schisma.mjs:153-157)."""
+    if not isinstance(spec, tuple):
+        return spec, {}
+    ok, second = spec
+    return ok, dict(second) if isinstance(second, dict) \
+        else {"message": second}
+
+
+def ok_result(ok: Column, fail: str, fields: dict,
+              count: bool = True) -> CheckRes:
+    """One pass/fail check: a ``fail`` violation built from ``fields``
+    where not ``ok``. A NO_MATCH check passes as EXACT_MATCH (h +2), an
+    INVALID one as VALID (h +1) (_getHeuristics, schisma.mjs:366-394).
+    ``count=False`` leaves ``n`` unset."""
+    good, h = (VALID, 1) if fail == INVALID else (EXACT_MATCH, 2)
+    return CheckRes(
+        varr(F.when(~ok, viol(fail, **fields))),
+        F.when(ok, F.lit(good)).otherwise(F.lit(fail)),
+        F.when(ok, F.lit(h)).otherwise(F.lit(-1)).cast("int"),
+        _bool_n(ok) if count else None,
+    )
+
+
+def validity(res: Column, fields: dict, count: bool = True) -> CheckRes:
+    """A ``$validate`` verdict (schisma.mjs:141-172): undefined or true is
+    VALID, false one INVALID violation."""
+    return ok_result(F.coalesce(res, F.lit(True)), INVALID, fields, count)
+
+
+def composite(p: Column, h: Column) -> tuple[Column, Column]:
+    """``(code, h)`` of an object or array from its parts' any-problem
+    ``p`` and summed ``h``: PARTIAL_MATCH at the sum, else EXACT_MATCH at
+    the sum + 2 (_getHeuristics, schisma.mjs:366-394)."""
+    return (F.when(p, F.lit(PARTIAL_MATCH)).otherwise(F.lit(EXACT_MATCH)),
+            _plus_bonus(p, h))
+
+
+def _plus_bonus(p: Column, h: Column) -> Column:
+    return h + F.when(p, 0).otherwise(2)
+
+
+def null_guard(bad: Column, nm: Column, res: CheckRes) -> CheckRes:
+    """``res``, except one NO_MATCH violation ``nm`` where ``bad`` (a null
+    value where an object or a non-null value is expected)."""
+    return CheckRes(
+        F.when(bad, F.array(nm)).otherwise(res.viols),
+        F.when(bad, F.lit(NO_MATCH)).otherwise(res.code),
+        F.when(bad, F.lit(-1)).otherwise(res.h).cast("int"),
+        None if res.n is None else
+        F.when(bad, F.lit(1)).otherwise(res.n).cast("int"),
+    )
+
+
+def guarded_composite(bad: Column, nm: Column, agg: Column) -> CheckRes:
+    """``composite`` of the ``vph`` struct ``agg`` behind a NO_MATCH guard,
+    as one CASE per field (the variant checks' shape; ``null_guard`` nests
+    a CASE around ``composite`` instead)."""
+    return CheckRes(
+        F.when(bad, F.array(nm)).otherwise(agg["v"]),
+        F.when(bad, F.lit(NO_MATCH)).when(agg["p"], F.lit(PARTIAL_MATCH))
+        .otherwise(F.lit(EXACT_MATCH)),
+        F.when(bad, F.lit(-1))
+        .otherwise(_plus_bonus(agg["p"], agg["h"])).cast("int"),
+    )
+
+
+def _no_match_fields(expected: str, c: Column, dtype: T.DataType,
+                     where: Column, idx) -> dict:
+    return dict(where=where, expected=expected,
+                received=ta.js_typeof(dtype), value=stringify(c, dtype),
+                type_index=idx)
+
+
+def _static_no_match(expected: str, c: Column, dtype: T.DataType,
+                     where: Column, idx) -> CheckRes:
+    """Every (non-null) value of a column of ``dtype`` is a NO_MATCH."""
+    nm = viol(NO_MATCH, **_no_match_fields(expected, c, dtype, where, idx))
+    return _const(F.array(nm), NO_MATCH, -1, _i(1))
+
+
+# ---------------------------------------------------------------------------
 # node check
 
 
@@ -195,21 +402,9 @@ def check_node(node: Node, c: Column, dtype: T.DataType, where: Column,
         if isinstance(res, list):
             return _check_validate_list(res, c, dtype, where, type_index,
                                         root=root)
-        extra: dict = {}
-        if isinstance(res, tuple):
-            res, second = res
-            extra = dict(second) if isinstance(second, dict) else {"message": second}
-        ok = F.coalesce(res, F.lit(True))  # undefined/true -> valid
-        fields = {
-            "where": where,
-            "value": stringify(c, dtype),
-            "type_index": type_index,
-            **extra,
-        }
-        viols = varr(F.when(~ok, viol(INVALID, **fields)))
-        code = F.when(ok, F.lit(VALID)).otherwise(F.lit(INVALID))
-        h = F.when(ok, F.lit(1)).otherwise(F.lit(-1)).cast("int")
-        return CheckRes(viols, code, h, _bool_n(ok))
+        ok, extra = validate_spec(res)
+        return validity(ok, {"where": where, "value": stringify(c, dtype),
+                             "type_index": type_index, **extra})
 
     results = [
         check_alt(alt, i if len(node.alts) > 1 else type_index, node, c,
@@ -218,18 +413,7 @@ def check_node(node: Node, c: Column, dtype: T.DataType, where: Column,
     ]
     if not results:
         return _const(empty_varr(), VALID, 1, _i(0))
-    if len(results) == 1:
-        return results[0]
-    # union resolution: first argmax of h (schisma.mjs:357-363)
-    h_arr = F.array(*[r.h for r in results])
-    best = F.array_position(h_arr, F.array_max(h_arr)).cast("int")
-    viols = F.element_at(F.array(*[r.viols for r in results]), best)
-    code = F.element_at(F.array(*[r.code for r in results]), best)
-    n = (
-        F.element_at(F.array(*[r.n for r in results]), best)
-        if all(r.n is not None for r in results) else None
-    )
-    return CheckRes(viols, code, F.array_max(h_arr), n)
+    return pick(results)
 
 
 def checked_value(node: Node, c: Column, dtype: T.DataType, where: Column,
@@ -243,13 +427,7 @@ def checked_value(node: Node, c: Column, dtype: T.DataType, where: Column,
         NO_MATCH, where=where, expected=describe_expected(node),
         received="null", value=None,
     )
-    return CheckRes(
-        F.when(c.isNull(), F.array(nm)).otherwise(base.viols),
-        F.when(c.isNull(), F.lit(NO_MATCH)).otherwise(base.code),
-        F.when(c.isNull(), F.lit(-1)).otherwise(base.h).cast("int"),
-        None if base.n is None else
-        F.when(c.isNull(), F.lit(1)).otherwise(base.n).cast("int"),
-    )
+    return null_guard(c.isNull(), nm, base)
 
 
 def _check_validate_list(specs: list, c: Column, dtype: T.DataType,
@@ -269,23 +447,16 @@ def _check_validate_list(specs: list, c: Column, dtype: T.DataType,
     reference's never-flattened ``results`` list — no rows here either.
     The reference's raw-value array fallback (schisma.mjs:148-149) crashes
     its own flatten under default conf, so it has no engine twin."""
-    subs, any_bad = [], F.lit(False)
+    subs, any_bad, n = [], F.lit(False), _i(0)
     for item in specs:
-        if isinstance(item, tuple):
-            ok_i, second = item
-            extra = dict(second) if isinstance(second, dict) else {"message": second}
-        else:
-            ok_i, extra = item, {}
+        ok_i, extra = validate_spec(item)
         sub_where = extra.pop("where", None)
         w_i = where if sub_where is None else F.concat_ws(".", where, _s(sub_where))
         code_i = extra.pop("code", INVALID)
         ok_i = F.coalesce(ok_i, F.lit(True))
         subs.append(F.when(~ok_i, viol(code_i, where=w_i, **extra)))
         any_bad = any_bad | ~ok_i
-    n = _i(0)
-    for item in specs:
-        ok_i = item[0] if isinstance(item, tuple) else item
-        n = n + _bool_n(F.coalesce(ok_i, F.lit(True)))
+        n = n + _bool_n(ok_i)
     if root:
         carriers = []
     else:
@@ -326,16 +497,8 @@ def _check_atom(atom: ta.TypeAtom, idx, node: Node, c: Column,
     """Primitive/Class typeof check (schisma.mjs:336-351), decided statically
     per column where possible (a Spark column has one type)."""
     if atom is ta.NULL:
-        ok = c.isNull()
-        nm = viol(NO_MATCH, where=where, expected="null",
-                  received=ta.js_typeof(dtype), value=stringify(c, dtype),
-                  type_index=idx)
-        return CheckRes(
-            varr(F.when(~ok, nm)),
-            F.when(ok, F.lit(EXACT_MATCH)).otherwise(F.lit(NO_MATCH)),
-            F.when(ok, F.lit(2)).otherwise(F.lit(-1)).cast("int"),
-            _bool_n(ok),
-        )
+        return ok_result(c.isNull(), NO_MATCH,
+                         _no_match_fields("null", c, dtype, where, idx))
 
     sm = ta.static_match(atom, dtype)
     if sm == "match":
@@ -347,33 +510,12 @@ def _check_atom(atom: ta.TypeAtom, idx, node: Node, c: Column,
         ta.NUMBER, ta.BIGINT, ta.BOOLEAN, ta.TIMESTAMP, ta.DATE,
     ):
         ok = c.try_cast(atom.spark_type).isNotNull() | c.isNull()
-        nm = viol(NO_MATCH, where=where, expected=atom.name,
-                  received=ta.js_typeof(dtype), value=stringify(c, dtype),
-                  type_index=idx)
-        return CheckRes(
-            varr(F.when(~ok, nm)),
-            F.when(ok, F.lit(EXACT_MATCH)).otherwise(F.lit(NO_MATCH)),
-            F.when(ok, F.lit(2)).otherwise(F.lit(-1)).cast("int"),
-            _bool_n(ok),
-        )
-
-    if sm == "integral":
+    elif sm == "integral":
         ok = c.isNull() | (c == F.floor(c))
-        nm = viol(NO_MATCH, where=where, expected=atom.name,
-                  received=ta.js_typeof(dtype), value=stringify(c, dtype),
-                  type_index=idx)
-        return CheckRes(
-            varr(F.when(~ok, nm)),
-            F.when(ok, F.lit(EXACT_MATCH)).otherwise(F.lit(NO_MATCH)),
-            F.when(ok, F.lit(2)).otherwise(F.lit(-1)).cast("int"),
-            _bool_n(ok),
-        )
-
-    # static mismatch: every (non-null) value is NO_MATCH
-    nm = viol(NO_MATCH, where=where, expected=atom.name,
-              received=ta.js_typeof(dtype), value=stringify(c, dtype),
-              type_index=idx)
-    return _const(F.array(nm), NO_MATCH, -1, _i(1))
+    else:
+        return _static_no_match(atom.name, c, dtype, where, idx)
+    return ok_result(ok, NO_MATCH,
+                     _no_match_fields(atom.name, c, dtype, where, idx))
 
 
 def _check_array(alt: ArrayAlt, idx, c: Column, dtype: T.DataType,
@@ -382,10 +524,7 @@ def _check_array(alt: ArrayAlt, idx, c: Column, dtype: T.DataType,
     schemas, long arrays -> UNEXPECTED_KEY per extra index, short arrays ->
     MISSING_KEY per missing index (both off by default)."""
     if not isinstance(dtype, T.ArrayType):
-        nm = viol(NO_MATCH, where=where, expected="array",
-                  received=ta.js_typeof(dtype), value=stringify(c, dtype),
-                  type_index=idx)
-        return _const(F.array(nm), NO_MATCH, -1, _i(1))
+        return _static_no_match("array", c, dtype, where, idx)
 
     ed = dtype.elementType
     m = len(alt.elems)
@@ -413,35 +552,16 @@ def _check_array(alt: ArrayAlt, idx, c: Column, dtype: T.DataType,
 
     def elem_res(x: Column, i: Column) -> Column:
         w = F.concat_ws(".", where, i.cast("string"))
-        if not opts.ignore_long_arrays:
-            uk = viol(UNEXPECTED_KEY, where=w)
-            long_struct = F.struct(
-                F.array(uk).alias("v"), F.lit(True).alias("p"),
-                F.lit(-1).cast("int").alias("h"),
-            )
         # best element schema (schisma.mjs:203-207)
-        rs = [checked_value(s, x, ed, w, opts) for s in alt.elems]
-        if len(rs) == 1:
-            r = rs[0]
-            v_, code_, h_ = r.viols, r.code, r.h
-        else:
-            h_arr = F.array(*[r.h for r in rs])
-            b = F.array_position(h_arr, F.array_max(h_arr)).cast("int")
-            v_ = F.element_at(F.array(*[r.viols for r in rs]), b)
-            code_ = F.element_at(F.array(*[r.code for r in rs]), b)
-            h_ = F.array_max(h_arr)
-        base = F.struct(
-            v_.alias("v"), is_problem(code_).alias("p"), h_.alias("h")
-        )
-        if not opts.ignore_long_arrays:
-            return F.when(i >= F.lit(m), long_struct).otherwise(base)
-        return base
+        r = pick([checked_value(s, x, ed, w, opts) for s in alt.elems],
+                 count=False)
+        base = vph(r.viols, is_problem(r.code), r.h)
+        if opts.ignore_long_arrays:
+            return base
+        long_part = part(F.array(viol(UNEXPECTED_KEY, where=w)), True, -1)
+        return F.when(i >= F.lit(m), long_part).otherwise(base)
 
-    elems = F.transform(c, elem_res)
-    all_viols = F.flatten(F.transform(elems, lambda e: e["v"]))
-    any_prob = F.exists(elems, lambda e: e["p"])
-    sum_h = F.aggregate(elems, F.lit(0).cast("int"),
-                        lambda a, e: a + e["h"])
+    all_viols, any_prob, sum_h = fold(F.transform(c, elem_res))
 
     n_short = F.lit(0)
     short_viols = empty_varr()
@@ -459,12 +579,9 @@ def _check_array(alt: ArrayAlt, idx, c: Column, dtype: T.DataType,
         n_short = F.greatest(F.lit(0), F.lit(m) - F.size(c))
         any_prob = any_prob | (F.size(c) < m)
 
-    viols = F.concat(all_viols, short_viols)
-    h = (sum_h - n_short + F.when(any_prob, F.lit(0)).otherwise(F.lit(2))).cast("int")
-    code = F.when(any_prob, F.lit(PARTIAL_MATCH)).otherwise(F.lit(EXACT_MATCH))
-    res = CheckRes(viols, code, h)
+    code, h = composite(any_prob, sum_h - n_short)
     # null array value guarded by checked_value/parent
-    return res
+    return CheckRes(F.concat(all_viols, short_viols), code, h.cast("int"))
 
 
 # ---------------------------------------------------------------------------
@@ -498,44 +615,17 @@ def _child_contrib(child: Node, cc: Column, cdt: T.DataType, w: Column,
 
 
 def _best_of_patterns(pattern_alts: list[list[Node]], v: Column,
-                      vdt: T.DataType, w: Column, opts: Opts):
-    """Best result for a key matched by >=1 regex patterns: each pattern's
-    alternatives reduce via the union heuristic; across patterns, non-problem
-    results are preferred then best-h first-wins (schisma.mjs:256-295)."""
-    per_pattern = []
-    for alts in pattern_alts:
-        rs = [checked_value(s, v, vdt, w, opts) for s in alts]
-        if len(rs) == 1:
-            per_pattern.append(rs[0])
-        else:
-            h_arr = F.array(*[r.h for r in rs])
-            b = F.array_position(h_arr, F.array_max(h_arr)).cast("int")
-            per_pattern.append(
-                CheckRes(
-                    F.element_at(F.array(*[r.viols for r in rs]), b),
-                    F.element_at(F.array(*[r.code for r in rs]), b),
-                    F.array_max(h_arr),
-                    F.element_at(F.array(*[r.n for r in rs]), b)
-                    if all(r.n is not None for r in rs) else None,
-                )
-            )
-    if len(per_pattern) == 1:
-        r = per_pattern[0]
-        return r.viols, is_problem(r.code), r.h, r.n
-    # composite score: non-problems rank above all problems, then h
-    scores = F.array(
-        *[
-            (r.h + F.when(is_problem(r.code), F.lit(-100000)).otherwise(F.lit(0))).cast("int")
-            for r in per_pattern
-        ]
-    )
-    b = F.array_position(scores, F.array_max(scores)).cast("int")
-    viols = F.element_at(F.array(*[r.viols for r in per_pattern]), b)
-    code = F.element_at(F.array(*[r.code for r in per_pattern]), b)
-    n = (F.element_at(F.array(*[r.n for r in per_pattern]), b)
-         if all(r.n is not None for r in per_pattern) else None)
-    return viols, is_problem(code), \
-        F.element_at(F.array(*[r.h for r in per_pattern]), b), n
+                      vdt: T.DataType, w: Column, opts: Opts) -> CheckRes:
+    """Best result for a STATIC key matched by >=1 regex patterns (the
+    compile-time twin of ``regex_key_best``): each pattern's alternatives
+    reduce via the union heuristic; across patterns, non-problem results
+    are preferred then best-h first-wins (schisma.mjs:256-295)."""
+    per = [pick([checked_value(s, v, vdt, w, opts) for s in alts])
+           for alts in pattern_alts]
+    if len(per) == 1:
+        return per[0]
+    return pick(per, scores=[(r.h + _penalty(is_problem(r.code))).cast("int")
+                             for r in per])
 
 
 def check_object_fields(alt: ObjectAlt, getter, present: list[str],
@@ -571,7 +661,8 @@ def check_object_fields(alt: ObjectAlt, getter, present: list[str],
         cc, cdt = getter(k)
         w = F.concat_ws(".", where, F.lit(k))
         if pats:
-            contribs.append(_best_of_patterns(pats, cc, cdt, w, opts))
+            r = _best_of_patterns(pats, cc, cdt, w, opts)
+            contribs.append((r.viols, is_problem(r.code), r.h, r.n))
         elif not opts.ignore_unexpected:
             uk = viol(UNEXPECTED_KEY, where=w, received=stringify(cc, cdt))
             contribs.append((F.array(uk), F.lit(True), F.lit(-1).cast("int"),
@@ -594,9 +685,8 @@ def check_object_fields(alt: ObjectAlt, getter, present: list[str],
         sum_n = sum_n.cast("int")
     else:
         sum_n = None
-    code = F.when(any_prob, F.lit(PARTIAL_MATCH)).otherwise(F.lit(EXACT_MATCH))
-    h = (sum_h + F.when(any_prob, F.lit(0)).otherwise(F.lit(2))).cast("int")
-    return CheckRes(viols, code, h, sum_n)
+    code, h = composite(any_prob, sum_h)
+    return CheckRes(viols, code, h.cast("int"), sum_n)
 
 
 def _check_object(alt: ObjectAlt, idx, c: Column, dtype: T.DataType,
@@ -611,21 +701,15 @@ def _check_object(alt: ObjectAlt, idx, c: Column, dtype: T.DataType,
 
         res = check_object_fields(alt, getter, list(fields), where, opts)
         # a null struct value = NO_MATCH 'object' vs 'null' (schisma.mjs:240-248)
-        nm = F.array(viol(NO_MATCH, where=where, expected="object",
-                          received="null", type_index=idx))
-        return CheckRes(
-            F.when(c.isNull(), nm).otherwise(res.viols),
-            F.when(c.isNull(), F.lit(NO_MATCH)).otherwise(res.code),
-            F.when(c.isNull(), F.lit(-1)).otherwise(res.h).cast("int"),
-            None if res.n is None else
-            F.when(c.isNull(), F.lit(1)).otherwise(res.n).cast("int"),
-        )
+        return null_guard(c.isNull(), _null_object(where, idx), res)
     if isinstance(dtype, T.MapType):
         return _check_map(alt, idx, c, dtype, where, opts)
-    nm = viol(NO_MATCH, where=where, expected="object",
-              received=ta.js_typeof(dtype), value=stringify(c, dtype),
-              type_index=idx)
-    return _const(F.array(nm), NO_MATCH, -1, _i(1))
+    return _static_no_match("object", c, dtype, where, idx)
+
+
+def _null_object(where: Column, idx) -> Column:
+    return viol(NO_MATCH, where=where, expected="object", received="null",
+                type_index=idx)
 
 
 def _check_map(alt: ObjectAlt, idx, c: Column, dtype: T.MapType,
@@ -635,8 +719,6 @@ def _check_map(alt: ObjectAlt, idx, c: Column, dtype: T.MapType,
     functions — fixed keys via element_at, per-entry regex dispatch via
     transform over map_entries. Keys are dynamic per row here, so this is
     the one place regex matching happens at run time (`rlike`)."""
-    from schisma_spark.functions.portable import bind as _bind
-
     vdt = dtype.valueType
     # per-field contributions as LET-BOUND (v, p, h) structs: the
     # element_at evaluates once per row regardless of how many times the
@@ -651,102 +733,38 @@ def _check_map(alt: ObjectAlt, idx, c: Column, dtype: T.MapType,
         def _mk(child, w):
             def body(cc: Column) -> Column:
                 v_, p_, h_, _n = _child_contrib(child, cc, vdt, w, opts)
-                return F.struct(v_.alias("v"), p_.alias("p"),
-                                h_.cast("int").alias("h"))
+                return vph(v_, p_, h_.cast("int"))
             return body
 
-        field_structs.append(_bind(F.element_at(c, F.lit(k)), _mk(child, w)))
+        field_structs.append(bind(F.element_at(c, F.lit(k)), _mk(child, w)))
 
     fixed_arr = F.array(*[F.lit(k) for k in alt.fields]) if alt.fields \
         else F.array().cast("array<string>")
 
     def entry_res(e: Column) -> Column:
-        from schisma_spark.functions.portable import bind
-
         k, v = e["key"], e["value"]
         w = F.concat_ws(".", where, k)
-        # every MATCHING pattern is tried and the best result kept —
-        # non-problems preferred over problems, then max h
-        # (schisma.mjs:256-295: results list consulted before errors).
-        # The per-pattern results are materialized ONCE into a bound array
-        # of structs; the argmax then just indexes it (inlining the check
-        # tree into scores + three selection arrays multiplied the work and
-        # codegen size ~4x).
-        NOMATCH = -(10**9)
-        uk_v = F.array(viol(UNEXPECTED_KEY, where=w,
-                            received=stringify(v, vdt)))
         if opts.ignore_unexpected:
-            unexpected = F.struct(empty_varr().alias("v"),
-                                  F.lit(False).alias("p"),
-                                  F.lit(0).cast("int").alias("h"))
+            unexpected = part(empty_varr(), False, 0)
         else:
-            unexpected = F.struct(uk_v.alias("v"), F.lit(True).alias("p"),
-                                  F.lit(-1).cast("int").alias("h"))
-        if not alt.regex:
-            expr = unexpected
-        else:
-            per_structs = []
-            for pat, alts in alt.regex:
-                v_, p_, h_, _n_ = _best_of_patterns([alts], v, vdt, w, opts)
-                score = (
-                    h_.cast("long")
-                    + F.when(p_, F.lit(-100000)).otherwise(F.lit(0))
-                )
-                per_structs.append(
-                    F.struct(
-                        F.when(k.rlike(pat), score)
-                        .otherwise(F.lit(NOMATCH).cast("long")).alias("s"),
-                        v_.alias("v"), p_.alias("p"),
-                        h_.cast("int").alias("h"),
-                    )
-                )
+            unexpected = part(F.array(viol(UNEXPECTED_KEY, where=w,
+                                           received=stringify(v, vdt))),
+                              True, -1)
+        # every MATCHING pattern is tried and the best result kept
+        expr = regex_key_best(
+            k, alt.regex,
+            lambda alts: pick([checked_value(s, v, vdt, w, opts)
+                               for s in alts], count=False),
+            unexpected)
+        return F.when(F.array_contains(fixed_arr, k),
+                      part(empty_varr(), False, 0)).otherwise(expr)
 
-            def pick(arr: Column) -> Column:
-                scores = F.transform(arr, lambda x: x["s"])
-                mx = F.array_max(scores)
-                best = F.array_position(scores, mx).cast("int")
-                chosen = F.element_at(arr, best)
-                return F.when(
-                    mx > NOMATCH,
-                    F.struct(chosen["v"].alias("v"), chosen["p"].alias("p"),
-                             chosen["h"].alias("h")),
-                ).otherwise(unexpected)
-
-            expr = bind(F.array(*per_structs), pick)
-        skip = F.struct(empty_varr().alias("v"), F.lit(False).alias("p"),
-                        F.lit(0).cast("int").alias("h"))
-        return F.when(F.array_contains(fixed_arr, k), skip).otherwise(expr)
-
-    # dynamic entries: the transform is bound once — flatten/exists/
-    # aggregate iterate the bound array instead of re-running the whole
-    # per-entry dispatch three times
-    def _dyn(es: Column) -> Column:
-        return F.struct(
-            F.flatten(F.transform(es, lambda e: e["v"])).alias("v"),
-            F.exists(es, lambda e: e["p"]).alias("p"),
-            F.aggregate(es, F.lit(0).cast("int"),
-                        lambda a, e: a + e["h"]).alias("h"),
-        )
-
-    field_structs.append(_bind(F.transform(F.map_entries(c), entry_res),
-                               _dyn))
-
-    def _combine(cs: Column) -> Column:
-        return F.struct(
-            F.flatten(F.transform(cs, lambda s: s["v"])).alias("v"),
-            F.exists(cs, lambda s: s["p"]).alias("p"),
-            F.aggregate(cs, F.lit(0).cast("int"),
-                        lambda a, s: a + s["h"]).alias("h"),
-        )
-
-    agg = _bind(F.array(*field_structs), _combine)
-    code = F.when(agg["p"], F.lit(PARTIAL_MATCH)).otherwise(
-        F.lit(EXACT_MATCH))
-    h = (agg["h"] + F.when(agg["p"], F.lit(0)).otherwise(F.lit(2)))
-    nm = F.array(viol(NO_MATCH, where=where, expected="object",
-                      received="null", type_index=idx))
-    return CheckRes(
-        F.when(c.isNull(), nm).otherwise(agg["v"]),
-        F.when(c.isNull(), F.lit(NO_MATCH)).otherwise(code),
-        F.when(c.isNull(), F.lit(-1)).otherwise(h).cast("int"),
-    )
+    # dynamic entries: the transform is bound once — the fold iterates the
+    # bound array instead of re-running the whole per-entry dispatch three
+    # times
+    field_structs.append(bind(F.transform(F.map_entries(c), entry_res),
+                              lambda es: vph(*fold(es))))
+    agg = bind(F.array(*field_structs), lambda cs: vph(*fold(cs)))
+    code, h = composite(agg["p"], agg["h"])
+    return null_guard(c.isNull(), _null_object(where, idx),
+                      CheckRes(agg["v"], code, h))

@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from schisma_spark import typeatoms as ta
-from schisma_spark.compiler import Opts, check_alt
+from schisma_spark.compiler import Opts, best_index, check_alt
 from schisma_spark.create import create_value
 from schisma_spark.dsl import (
     _UNSET,
@@ -182,8 +182,7 @@ class Conformer:
             check_alt(a, i, node, c, dtype, where, self._opts).h
             for i, a in cands
         ]
-        h_arr = F.array(*hs)
-        best = F.array_position(h_arr, F.array_max(h_arr)).cast("int")
+        best = best_index(F.array(*hs))
         if isinstance(dtype, T.StructType) and all(
             isinstance(a, ObjectAlt) for _, a in cands
         ):

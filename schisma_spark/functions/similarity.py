@@ -15,6 +15,8 @@ zero or non-finite norm) from its bucket, pair and scoring stages.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -189,8 +191,6 @@ def suggest_n_planes(n_rows: int, target_bucket_size: int = 1024) -> int:
     Real occupancy is skewed (correlated embeddings concentrate);
     verify with ``lsh_bucket_stats`` and cap outliers with
     ``max_bucket_size``."""
-    import math
-
     if n_rows <= target_bucket_size:
         return 1
     return max(1, math.ceil(math.log2(n_rows / target_bucket_size)))
@@ -345,6 +345,43 @@ def valid_vector(v: Column) -> Column:
     )
 
 
+def _centroid_cos(vec: Column, nv: Column, cents: list,
+                  round_to: int) -> Column:
+    """Rounded cosines of ``vec`` (norm ``nv``, let-bound by the caller:
+    one norm per row, not one per centroid) to every centroid. The
+    codebook ships as ONE matrix literal (the hyperplane_signatures
+    lesson, r4: per-centroid Column trees cost ~2 s of driver py4j
+    construction per invocation; a transform over literal DATA is
+    constant-size) and the centroid norms are driver constants
+    (left-assoc sum + sqrt). Each dot is a left-assoc zip_with+aggregate
+    fold, then ``round(dot / (nv * cn))`` — the op order of the oracle's
+    list_cosine_similarity, so the rounded cosines stay bit-identical."""
+    cnorms = [math.sqrt(sum(x * x for x in c)) or 1.0 for c in cents]
+    dots = F.transform(
+        lit_doubles(cents),
+        lambda c: F.aggregate(
+            F.zip_with(vec, c,
+                       lambda x, y: x.cast("double") * y.cast("double")),
+            F.lit(0.0),
+            lambda acc, x: acc + x,
+        ),
+    )
+    return F.zip_with(dots, lit_doubles(cnorms),
+                      lambda d, cn: F.round(d / (nv * cn), round_to))
+
+
+def _nearest_cell(vec: Column, cents: list, round_to: int) -> Column:
+    """1-based index of ``vec``'s nearest centroid: the argmax rounded
+    cosine, ties to the lowest index."""
+    return bind(
+        _norm(vec),
+        lambda nv: bind(
+            _centroid_cos(vec, nv, cents, round_to),
+            lambda ca: F.array_position(ca, F.array_max(ca)).cast("int"),
+        ),
+    )
+
+
 def kmeans_topics(
     df: DataFrame,
     id_col: str,
@@ -372,35 +409,17 @@ def kmeans_topics(
     Scale shape: assignment is ONE projection against the literal
     codebook — no join, no shuffle; 10^12 rows assign in a single
     map-only stage."""
-    import math
-
     valid = valid_vector(F.col(vec_col))
     vdf = df.where(valid)
     cents = ivf_centroids(vdf, id_col, vec_col, n_topics, sample_mod)
     if refine_iters:
         cents = ivf_refine_centroids(vdf, vec_col, cents, refine_iters,
                                      round_to)
-    cnorms = [math.sqrt(sum(x * x for x in c)) or 1.0 for c in cents]
-
-    def cos_arr(nv: Column) -> Column:
-        # same left-assoc fold + round(dot/(nv*cn)) op order as
-        # ivf_ann_topk, so oracle cosines stay bit-identical
-        dots = F.transform(
-            lit_doubles(cents),
-            lambda c: F.aggregate(
-                F.zip_with(F.col(vec_col), c,
-                           lambda x, y: x.cast("double") * y.cast("double")),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ),
-        )
-        return F.zip_with(dots, lit_doubles(cnorms),
-                          lambda d, cn: F.round(d / (nv * cn), round_to))
-
+    vec = F.col(vec_col)
     assigned = bind(
-        _norm(F.col(vec_col)),
+        _norm(vec),
         lambda nv: bind(
-            cos_arr(nv),
+            _centroid_cos(vec, nv, cents, round_to),
             lambda ca: bind(
                 F.array_max(ca),
                 lambda mx: F.struct(
@@ -541,8 +560,6 @@ def ivf_refine_centroids(
     up to float-addition order (reduce-side merge order is not
     guaranteed) — bit-exact reproducibility is not promised, which is
     why the oracle operator defaults to ``refine_iters=0``."""
-    import math
-
     # unit vectors once per iteration pass; zero vectors contribute zeros
     unit = bind(
         _norm(F.col(vec_col)),
@@ -552,29 +569,7 @@ def ivf_refine_centroids(
         ),
     )
     for _ in range(n_iters):
-        cnorms = [math.sqrt(sum(x * x for x in c)) or 1.0 for c in cents]
-
-        def cos_arr(nv, cents=cents, cnorms=cnorms):
-            dots = F.transform(
-                lit_doubles(cents),
-                lambda c: F.aggregate(
-                    F.zip_with(F.col(vec_col), c,
-                               lambda x, y: x.cast("double")
-                               * y.cast("double")),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                ),
-            )
-            return F.zip_with(dots, lit_doubles(cnorms),
-                              lambda d, cn: F.round(d / (nv * cn), round_to))
-
-        cell = bind(
-            _norm(F.col(vec_col)),
-            lambda nv: bind(
-                cos_arr(nv),
-                lambda ca: F.array_position(ca, F.array_max(ca)).cast("int"),
-            ),
-        )
+        cell = _nearest_cell(F.col(vec_col), cents, round_to)
         sums = (
             df.select(cell.alias("_cell"), unit.alias("_u"))
             .select("_cell", F.posexplode("_u").alias("_pos", "_x"))
@@ -633,53 +628,21 @@ def ivf_ann_topk(
     scan each; the default 0 keeps the deterministic bootstrap the
     oracle queries pin."""
     del dim  # the codebook fixes the dimensionality
-    import math
-
     vdf = df.where(valid_vector(F.col(vec_col)))
     cents = ivf_centroids(vdf, id_col, vec_col, n_centroids, sample_mod)
     if refine_iters:
         cents = ivf_refine_centroids(vdf, vec_col, cents, refine_iters,
                                      round_to)
-    # centroid norms are DRIVER constants (left-assoc sum + sqrt — the
-    # same op order Spark's fold would use, so the rounded cosines stay
-    # bit-identical to the oracle's list_cosine_similarity); the row
-    # vector's norm is let-bound: ONE norm per row, one dot per centroid,
-    # instead of recomputing the norm n_centroids times. The codebook
-    # ships as ONE matrix literal (the hyperplane_signatures lesson, r4):
-    # per-centroid Column trees cost ~2 s of driver py4j construction per
-    # invocation; a transform over literal DATA is constant-size.
-    cnorms = [math.sqrt(sum(x * x for x in c)) or 1.0 for c in cents]
-
-    def cos_arr(nv):
-        # same left-assoc zip_with+aggregate fold and the same
-        # round(dot/(nv*cn)) op order as the unrolled form — bit-identical
-        dots = F.transform(
-            lit_doubles(cents),
-            lambda c: F.aggregate(
-                F.zip_with(F.col(vec_col), c,
-                           lambda x, y: x.cast("double") * y.cast("double")),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ),
-        )
-        return F.zip_with(dots, lit_doubles(cnorms),
-                          lambda d, cn: F.round(d / (nv * cn), round_to))
-
-    cell = bind(
-        _norm(F.col(vec_col)),
-        lambda nv: bind(
-            cos_arr(nv),
-            lambda ca: F.array_position(ca, F.array_max(ca)).cast("int"),
-        ),
-    )
+    vec = F.col(vec_col)
+    cell = _nearest_cell(vec, cents, round_to)
     # probe side: n_probe nearest cells via lexicographic struct sort
     # (-cos asc == cos desc, then centroid index asc — same tie-break as
     # the assignment argmax)
     probe_cells = bind(
-        _norm(F.col(vec_col)),
+        _norm(vec),
         lambda nv: F.slice(
             F.array_sort(F.zip_with(
-                cos_arr(nv),
+                _centroid_cos(vec, nv, cents, round_to),
                 F.lit(list(range(1, len(cents) + 1))),
                 lambda cos, j: F.struct((-cos).alias("nc"), j.alias("c")),
             )),

@@ -28,7 +28,7 @@ from pyspark.sql import types as T
 
 from schisma_spark.compiler import Opts, _check_map, empty_varr, viol
 from schisma_spark.dsl import AtomAlt, Node, ObjectAlt, Schema
-from schisma_spark.result import INVALID, VIOLATION_FIELDS
+from schisma_spark.result import INVALID
 from schisma_spark.validate import ValidationResult
 
 

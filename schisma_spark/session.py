@@ -8,6 +8,7 @@ fat binary rows (SURVEY §4.3.5), and shuffle partitions scaled to cores.
 
 from __future__ import annotations
 
+import hashlib
 import os
 import tempfile
 import zipfile
@@ -35,9 +36,14 @@ def package_zip() -> str:
     is newer than the cached zip — an existence-only cache shipped a
     stale zip that predated newer modules (r5: a spark-submit run of the
     curation job failed importing functions.curate from a zip built
-    before that module existed)."""
+    before that module existed). The zip name is keyed on the package
+    directory, so each checkout on a host ships its own sources: with one
+    shared name, a checkout whose files were older than another
+    checkout's zip shipped that zip."""
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    out = os.path.join(tempfile.gettempdir(), "schisma_spark_pyfiles.zip")
+    key = hashlib.sha1(pkg_dir.encode()).hexdigest()[:12]
+    out = os.path.join(tempfile.gettempdir(),
+                       f"schisma_spark_pyfiles_{key}.zip")
 
     def _stale() -> bool:
         if not os.path.exists(out):

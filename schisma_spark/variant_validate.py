@@ -29,26 +29,32 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from schisma_spark.compiler import (
     CheckRes,
     Opts,
     _const,
     empty_varr,
+    fold,
+    guarded_composite,
     is_problem,
-    varr,
+    ok_result,
+    part,
+    pick,
+    pick_struct,
+    regex_key_best,
+    validate_spec,
+    validity,
     viol,
+    vph,
 )
 from schisma_spark import typeatoms as ta
 from schisma_spark.dsl import ArrayAlt, AtomAlt, Node, ObjectAlt, Schema
 from schisma_spark.functions.portable import bind
 from schisma_spark.result import (
-    EXACT_MATCH,
     INVALID,
     MISSING_KEY,
     NO_MATCH,
-    PARTIAL_MATCH,
     UNEXPECTED_KEY,
     VALID,
 )
@@ -105,35 +111,25 @@ def check_variant_node(node: Node, kv: Column, where: Column,
         atom = next(
             (a.atom for a in node.alts if isinstance(a, AtomAlt)), None
         )
-        res = node.validate(_extract(kv, atom) if atom else kv)
-        extra: dict = {}
-        if isinstance(res, tuple):
-            res, second = res
-            extra = dict(second) if isinstance(second, dict) else {"message": second}
-        ok = F.coalesce(res, F.lit(True))
-        fields = {"where": where, "value": _stringify_variant(kv), **extra}
-        return CheckRes(
-            varr(F.when(~ok, viol(INVALID, **fields))),
-            F.when(ok, F.lit(VALID)).otherwise(F.lit(INVALID)),
-            F.when(ok, F.lit(1)).otherwise(F.lit(-1)).cast("int"),
-        )
+        ok, extra = validate_spec(
+            node.validate(_extract(kv, atom) if atom else kv))
+        return validity(ok, {"where": where,
+                             "value": _stringify_variant(kv), **extra},
+                        count=False)
 
-    results = [
+    results = _alt_results(node, kv, where, opts)
+    if not results:
+        return _const(empty_varr(), VALID, 1)
+    return pick(results)
+
+
+def _alt_results(node: Node, kv: Column, where: Column,
+                 opts: Opts) -> list[CheckRes]:
+    return [
         _check_variant_alt(a, i if len(node.alts) > 1 else None, kv, where,
                            opts)
         for i, a in enumerate(node.alts)
     ]
-    if not results:
-        return _const(empty_varr(), VALID, 1)
-    if len(results) == 1:
-        return results[0]
-    h_arr = F.array(*[r.h for r in results])
-    best = F.array_position(h_arr, F.array_max(h_arr)).cast("int")
-    return CheckRes(
-        F.element_at(F.array(*[r.viols for r in results]), best),
-        F.element_at(F.array(*[r.code for r in results]), best),
-        F.array_max(h_arr),
-    )
 
 
 def _check_variant_alt(alt, idx, kv: Column, where: Column,
@@ -151,14 +147,9 @@ def _check_variant_alt(alt, idx, kv: Column, where: Column,
             if alt.atom is ta.BIGINT:
                 d = F.try_variant_get(kv, "$", "double")
                 ok = ok & d.isNotNull() & (d == F.floor(d))
-        nm = viol(NO_MATCH, where=where, expected=expected,
-                  received=js_typeof_variant(kv),
-                  value=_stringify_variant(kv), type_index=idx)
-        return CheckRes(
-            varr(F.when(~ok, nm)),
-            F.when(ok, F.lit(EXACT_MATCH)).otherwise(F.lit(NO_MATCH)),
-            F.when(ok, F.lit(2)).otherwise(F.lit(-1)).cast("int"),
-        )
+        return ok_result(ok, NO_MATCH,
+                         _no_match_fields(kv, where, expected, idx),
+                         count=False)
     if isinstance(alt, ArrayAlt):
         return _check_variant_array(alt, idx, kv, where, opts)
     if isinstance(alt, ObjectAlt):
@@ -167,8 +158,7 @@ def _check_variant_alt(alt, idx, kv: Column, where: Column,
 
 
 def _child_struct(r: CheckRes) -> Column:
-    return F.struct(r.viols.alias("v"), is_problem(r.code).alias("p"),
-                    r.h.cast("int").alias("h"))
+    return vph(r.viols, is_problem(r.code), r.h.cast("int"))
 
 
 def _node_struct(node: Node, kv: Column, where: Column,
@@ -183,29 +173,16 @@ def _node_struct(node: Node, kv: Column, where: Column,
     stages do no CSE, so a two-atom union field cost ~8
     ``schema_of_variant`` evaluations per row. Building one let-bound
     array of per-alternative (v, p, h) structs and picking the best
-    entry evaluates each alternative exactly once; the chosen struct's
-    ``h`` IS ``array_max`` (array_position takes the first maximum), so
-    the values are identical to the CheckRes composition."""
+    entry (``pick_struct``) evaluates each alternative exactly once; the
+    chosen struct's ``h`` IS ``array_max`` (``best_index`` takes the
+    first maximum), so the values are identical to the CheckRes
+    composition."""
     if node.validate is not None:
         return _child_struct(check_variant_node(node, kv, where, opts))
-    results = [
-        _check_variant_alt(a, i if len(node.alts) > 1 else None, kv, where,
-                           opts)
-        for i, a in enumerate(node.alts)
-    ]
+    results = _alt_results(node, kv, where, opts)
     if not results:
-        return F.struct(empty_varr().alias("v"), F.lit(False).alias("p"),
-                        F.lit(1).cast("int").alias("h"))
-    if len(results) == 1:
-        return _child_struct(results[0])
-    per = [_child_struct(r) for r in results]
-
-    def pick(arr: Column) -> Column:
-        hs = F.transform(arr, lambda x: x["h"])
-        best = F.array_position(hs, F.array_max(hs)).cast("int")
-        return F.element_at(arr, best)
-
-    return bind(F.array(*per), pick)
+        return part(empty_varr(), False, 1)
+    return pick_struct([_child_struct(r) for r in results])
 
 
 def _check_variant_array(alt: ArrayAlt, idx, kv: Column, where: Column,
@@ -215,48 +192,29 @@ def _check_variant_array(alt: ArrayAlt, idx, kv: Column, where: Column,
 
     def body(a: Column) -> Column:
         if m == 0:
-            return F.struct(
-                empty_varr().alias("v"), F.lit(False).alias("p"),
-                F.lit(2).cast("int").alias("h"),
-            )
+            return part(empty_varr(), False, 2)
 
         def elem_res(x: Column, i: Column) -> Column:
             w = F.concat_ws(".", where, i.cast("string"))
-            if len(alt.elems) == 1:
-                return _node_struct(alt.elems[0], x, w, opts)
             # multi-schema elements: one bound array of (v, p, h)
             # structs, each element schema evaluated once (r7 — the
             # separate v/p/h picks re-evaluated every schema per field)
-            per = [_node_struct(s, x, w, opts) for s in alt.elems]
+            return pick_struct([_node_struct(s, x, w, opts)
+                                for s in alt.elems])
 
-            def pick(arr: Column) -> Column:
-                hs = F.transform(arr, lambda e: e["h"])
-                b = F.array_position(hs, F.array_max(hs)).cast("int")
-                return F.element_at(arr, b)
-
-            return bind(F.array(*per), pick)
-
-        return bind(
-            F.transform(a, elem_res),
-            lambda es: F.struct(
-                F.flatten(F.transform(es, lambda e: e["v"])).alias("v"),
-                F.exists(es, lambda e: e["p"]).alias("p"),
-                F.aggregate(es, F.lit(0).cast("int"),
-                            lambda acc, e: acc + e["h"]).alias("h"),
-            ),
-        )
+        return bind(F.transform(a, elem_res), lambda es: vph(*fold(es)))
 
     agg = bind(arr, body)
-    nm = viol(NO_MATCH, where=where, expected="array",
-              received=js_typeof_variant(kv),
-              value=_stringify_variant(kv), type_index=idx)
-    return CheckRes(
-        F.when(arr.isNull(), F.array(nm)).otherwise(agg["v"]),
-        F.when(arr.isNull(), F.lit(NO_MATCH))
-        .when(agg["p"], F.lit(PARTIAL_MATCH)).otherwise(F.lit(EXACT_MATCH)),
-        F.when(arr.isNull(), F.lit(-1))
-        .otherwise(agg["h"] + F.when(agg["p"], 0).otherwise(2)).cast("int"),
-    )
+    return guarded_composite(
+        arr.isNull(),
+        viol(NO_MATCH, **_no_match_fields(kv, where, "array", idx)), agg)
+
+
+def _no_match_fields(kv: Column, where: Column, expected: str,
+                     idx) -> dict:
+    return dict(where=where, expected=expected,
+                received=js_typeof_variant(kv),
+                value=_stringify_variant(kv), type_index=idx)
 
 
 def _check_variant_object(alt: ObjectAlt, idx, kv: Column, where: Column,
@@ -268,15 +226,9 @@ def _check_variant_object(alt: ObjectAlt, idx, kv: Column, where: Column,
         # (schisma.mjs:306-310); JSON null arrives as VOID, handled by the
         # Null atom (schisma.mjs:599-600)
         if child.required and not opts.ignore_required:
-            missing = F.struct(
-                F.array(viol(MISSING_KEY, where=w)).alias("v"),
-                F.lit(True).alias("p"), F.lit(-1).cast("int").alias("h"),
-            )
+            missing = part(F.array(viol(MISSING_KEY, where=w)), True, -1)
         else:
-            missing = F.struct(
-                empty_varr().alias("v"), F.lit(False).alias("p"),
-                F.lit(0).cast("int").alias("h"),
-            )
+            missing = part(empty_varr(), False, 0)
 
         def _mk_field_contrib(child, w, missing):
             # one-arg lambda for bind() (default-arg captures would change
@@ -317,7 +269,6 @@ def _check_variant_object(alt: ObjectAlt, idx, kv: Column, where: Column,
     # best result kept (non-problems first, then max h — the same scoring
     # as compiler._check_map / schisma.mjs:256-295).
     if alt.regex:
-        NOMATCH = -(10 ** 9)
         # map view straight off the variant (r7): ~3.5x cheaper than the
         # from_json(to_json(kv)) round trip; the _rx_entry coalesce
         # already normalizes a null-valued entry to a VOID variant under
@@ -329,91 +280,41 @@ def _check_variant_object(alt: ObjectAlt, idx, kv: Column, where: Column,
             # a JSON null entry must stay a VOID variant, not SQL NULL
             val = F.coalesce(e["value"], F.parse_json(F.lit("null")))
             w = F.concat_ws(".", where, k)
-            per_structs = []
-            for pat, alts_ in alt.regex:
-                rs = [check_variant_node(s, val, w, opts) for s in alts_]
-                if len(rs) == 1:
-                    v_, c_, h_ = rs[0].viols, rs[0].code, rs[0].h
-                else:
-                    h_arr = F.array(*[r.h for r in rs])
-                    b = F.array_position(h_arr, F.array_max(h_arr)).cast("int")
-                    v_ = F.element_at(F.array(*[r.viols for r in rs]), b)
-                    c_ = F.element_at(F.array(*[r.code for r in rs]), b)
-                    h_ = F.array_max(h_arr)
-                p_ = is_problem(c_)
-                score = (h_.cast("long")
-                         + F.when(p_, F.lit(-100000)).otherwise(F.lit(0)))
-                per_structs.append(F.struct(
-                    F.when(k.rlike(pat), score)
-                    .otherwise(F.lit(NOMATCH).cast("long")).alias("s"),
-                    v_.alias("v"), p_.alias("p"),
-                    h_.cast("int").alias("h"),
-                ))
-            skip = F.struct(empty_varr().alias("v"), F.lit(False).alias("p"),
-                            F.lit(0).cast("int").alias("h"))
-
-            def pick(arr: Column) -> Column:
-                scores = F.transform(arr, lambda x: x["s"])
-                mx = F.array_max(scores)
-                best = F.array_position(scores, mx).cast("int")
-                ch = F.element_at(arr, best)
-                return F.when(
-                    mx > NOMATCH,
-                    F.struct(ch["v"].alias("v"), ch["p"].alias("p"),
-                             ch["h"].alias("h")),
-                ).otherwise(skip)
-
+            skip = part(empty_varr(), False, 0)
+            best = regex_key_best(
+                k, alt.regex,
+                lambda alts: pick([check_variant_node(s, val, w, opts)
+                                   for s in alts]),
+                skip)
             matched = functools_reduce_or(
                 [k.rlike(p) for p, _ in alt.regex])
             return F.when(
                 F.array_contains(fixed, k) | ~matched, skip
-            ).otherwise(bind(F.array(*per_structs), pick))
+            ).otherwise(best)
 
-        rx_entries = F.transform(F.map_entries(mv), _rx_entry)
-        contribs.append(F.struct(
-            F.flatten(F.transform(rx_entries, lambda e: e["v"])).alias("v"),
-            F.exists(rx_entries, lambda e: e["p"]).alias("p"),
-            F.aggregate(rx_entries, F.lit(0).cast("int"),
-                        lambda acc, e: acc + e["h"]).alias("h"),
-        ))
+        contribs.append(
+            vph(*fold(F.transform(F.map_entries(mv), _rx_entry))))
     if not opts.ignore_unexpected:
         def _unexpected_contrib(u: Column) -> Column:
             # let-bound: three references below, one keys-enumeration pass
-            return F.struct(
+            return vph(
                 F.transform(
                     u,
                     lambda k: viol(UNEXPECTED_KEY,
                                    where=F.concat_ws(".", where, k)),
-                ).alias("v"),
-                (F.size(u) > 0).alias("p"),
-                (-F.size(u)).cast("int").alias("h"),
+                ),
+                F.size(u) > 0,
+                (-F.size(u)).cast("int"),
             )
 
         contribs.append(bind(unk, _unexpected_contrib))
 
-    def combine(cs: Column) -> Column:
-        return F.struct(
-            F.flatten(F.transform(cs, lambda c: c["v"])).alias("v"),
-            F.exists(cs, lambda c: c["p"]).alias("p"),
-            F.aggregate(cs, F.lit(0).cast("int"),
-                        lambda acc, c: acc + c["h"]).alias("h"),
-        )
-
-    agg = bind(F.array(*contribs), combine) if contribs else F.struct(
-        empty_varr().alias("v"), F.lit(False).alias("p"),
-        F.lit(0).cast("int").alias("h"),
-    )
+    agg = bind(F.array(*contribs), lambda cs: vph(*fold(cs))) if contribs \
+        else part(empty_varr(), False, 0)
     is_obj = js_typeof_variant(kv) == "object"
-    nm = viol(NO_MATCH, where=where, expected="object",
-              received=js_typeof_variant(kv),
-              value=_stringify_variant(kv), type_index=idx)
-    return CheckRes(
-        F.when(~is_obj, F.array(nm)).otherwise(agg["v"]),
-        F.when(~is_obj, F.lit(NO_MATCH))
-        .when(agg["p"], F.lit(PARTIAL_MATCH)).otherwise(F.lit(EXACT_MATCH)),
-        F.when(~is_obj, F.lit(-1))
-        .otherwise(agg["h"] + F.when(agg["p"], 0).otherwise(2)).cast("int"),
-    )
+    return guarded_composite(
+        ~is_obj, viol(NO_MATCH, **_no_match_fields(kv, where, "object", idx)),
+        agg)
 
 
 def functools_reduce_or(conds: list[Column]) -> Column:

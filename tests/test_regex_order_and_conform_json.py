@@ -5,6 +5,8 @@ from __future__ import annotations
 
 import json
 
+import pytest
+
 from pyspark.sql import Row
 from pyspark.sql import types as T
 
@@ -30,6 +32,58 @@ def test_overlapping_regex_patterns_prefer_match(spark):
     sch2 = schema({"m": {"$/^x_": [str], "$/num$": [bool]}})
     got = sch2.validate(df, keys=["id"]).violations.collect()
     assert len(got) == 1 and got[0]["code"] == "no match"
+
+
+def _x_num_frame(spark, path):
+    """One row holding the key ``x_num = 3.0`` through each check path:
+    a root column, a struct field, a map column and a JSON document."""
+    if path == "variant":
+        return spark.createDataFrame([Row(id=1, p='{"x_num": 3.0}')])
+    if path == "root":
+        dt = T.DoubleType()
+    elif path == "struct":
+        dt = T.StructType([T.StructField("x_num", T.DoubleType())])
+    else:
+        dt = T.MapType(T.StringType(), T.DoubleType())
+    val = 3.0 if path == "root" else (
+        Row(x_num=3.0) if path == "struct" else {"x_num": 3.0})
+    name = "x_num" if path == "root" else "c"
+    return spark.createDataFrame(
+        [(1, val)],
+        T.StructType([T.StructField("id", T.LongType()),
+                      T.StructField(name, dt)]),
+    )
+
+
+@pytest.mark.parametrize("path", ["root", "struct", "map", "variant"])
+@pytest.mark.parametrize("patterns, expected", [
+    ([("$/^x_", str), ("$/num$", float)], None),
+    ([("$/^x_", str), ("$/num$", bool)], "string"),
+    ([("$/num$", bool), ("$/^x_", str)], "boolean"),
+])
+def test_overlapping_regex_patterns_agree_across_paths(spark, path,
+                                                       patterns, expected):
+    """A key matched by two patterns keeps the best result across them
+    (schisma.mjs:256-295): a non-problem result wins whatever the order;
+    when every pattern fails, the first declared one reports. The static
+    key set (root, struct), the runtime map and the variant view score it
+    the same way."""
+    from schisma_spark.variant_validate import validate_variant
+
+    obj = {pat: [t] for pat, t in patterns}
+    df = _x_num_frame(spark, path)
+    if path == "variant":
+        res = validate_variant(df, "p", schema(obj), keys=["id"])
+    elif path == "root":
+        res = schema(obj).validate(df, keys=["id"])
+    else:
+        res = schema({"c": obj}).validate(df, keys=["id"])
+    got = res.violations.collect()
+    if expected is None:
+        assert got == []
+    else:
+        assert [(g["code"], g["expected"]) for g in got] == [
+            ("no match", expected)]
 
 
 def test_fixed_keys_win_over_regex(spark):

@@ -162,3 +162,47 @@ def test_package_zip_rebuilds_on_newer_source():
     time.sleep(0.01)
     package_zip()
     assert os.path.getmtime(out) == t
+
+
+def test_package_zip_is_per_checkout(tmp_path):
+    """Two checkouts on one host each ship their OWN package: a copy whose
+    files are all older than this checkout's zip used to get that zip
+    back (one shared name, rebuilt only on a newer source)."""
+    import os
+    import shutil
+    import subprocess
+    import sys
+    import tempfile
+    import zipfile
+
+    import schisma_spark
+    from schisma_spark.session import package_zip
+
+    mine = package_zip()
+    pkg = os.path.dirname(os.path.abspath(schisma_spark.__file__))
+    copy = tmp_path / "checkout" / "schisma_spark"
+    shutil.copytree(pkg, copy, ignore=shutil.ignore_patterns("__pycache__"))
+    (copy / "_copy_marker.py").write_text("MARKER = 1\n")
+    old = os.path.getmtime(mine) - 3600
+    for root, _dirs, files in os.walk(copy):
+        for f in files:
+            os.utime(os.path.join(root, f), (old, old))
+
+    env = dict(os.environ, TMPDIR=tempfile.gettempdir())
+    out = subprocess.run(
+        [sys.executable, "-c",
+         "import sys; sys.path.insert(0, sys.argv[1]); "
+         "from schisma_spark.session import package_zip; "
+         "print(package_zip())", str(copy.parent)],
+        env=env, capture_output=True, text=True, check=True,
+    ).stdout.strip().splitlines()[-1]
+    try:
+        assert out != mine
+        with zipfile.ZipFile(out) as z:
+            assert "schisma_spark/_copy_marker.py" in z.namelist()
+            assert z.read("schisma_spark/session.py") == \
+                (copy / "session.py").read_bytes()
+        with zipfile.ZipFile(mine) as z:
+            assert "schisma_spark/_copy_marker.py" not in z.namelist()
+    finally:
+        os.remove(out)
