@@ -22,6 +22,8 @@ from typing import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from schisma_spark.session import worker_init
+
 
 def bucket_expr(col, lo: float, hi: float, nbins: int):
     """Bin index in [0, nbins-1] (clamped); NULL for NULL input. Same
@@ -122,6 +124,7 @@ def grouped_histogram_pandas(
     )
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
+        worker_init()
         vals = pdf[value_col].dropna().to_numpy(dtype="float64")
         idx = np.floor((vals - lo) / (hi - lo) * nbins)
         idx = np.clip(idx, 0, nbins - 1).astype("int64")

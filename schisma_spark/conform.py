@@ -41,8 +41,10 @@ from schisma_spark.dsl import (
     Node,
     ObjectAlt,
     Schema,
+    fingerprint,
     spark_type_of,
 )
+from schisma_spark.session import cached_column
 
 
 def py_lit(v: Any, dtype: T.DataType) -> Column:
@@ -494,23 +496,30 @@ def conform(
     if not isinstance(alt, ObjectAlt):
         raise TypeError("root schema must be an object (dict literal)")
     keys = list(keys or [])
-    conf = Conformer(remove_unexpected, insert_missing, grow_arrays,
-                     shrink_arrays, populate_arrays)
-    dtypes = {f.name: f.dataType for f in df.schema.fields}
-    cols: list[Column] = [F.col(k) for k in keys]
-    for k, child in alt.fields.items():
-        if k in keys:  # key columns pass through untouched (like validate's
-            continue   # exempt set); emitting both would duplicate the name
-        if k in dtypes:
-            out, _ = conf.conform_node(child, F.col(k), dtypes[k])
-            cols.append(out.alias(k))
-        elif conf.insert_missing and child.required:
-            cols.append(default_literal(child, populate_arrays).alias(k))
-    fixed = set(alt.fields) | set(keys)
-    for k in dtypes:
-        if k in fixed:
-            continue
-        matched = any(_re.search(p, k) for p, _ in alt.regex)
-        if matched or not conf.remove_unexpected:
-            cols.append(F.col(k))
-    return df.select(*cols)
+
+    def build() -> tuple:
+        conf = Conformer(remove_unexpected, insert_missing, grow_arrays,
+                         shrink_arrays, populate_arrays)
+        dtypes = {f.name: f.dataType for f in df.schema.fields}
+        cols: list[Column] = [F.col(k) for k in keys]
+        for k, child in alt.fields.items():
+            if k in keys:  # key columns pass through untouched (like
+                continue   # validate's exempt set); both would duplicate
+            if k in dtypes:
+                out, _ = conf.conform_node(child, F.col(k), dtypes[k])
+                cols.append(out.alias(k))
+            elif conf.insert_missing and child.required:
+                cols.append(default_literal(child, populate_arrays).alias(k))
+        fixed = set(alt.fields) | set(keys)
+        for k in dtypes:
+            if k in fixed:
+                continue
+            matched = any(_re.search(p, k) for p, _ in alt.regex)
+            if matched or not conf.remove_unexpected:
+                cols.append(F.col(k))
+        return tuple(cols)
+
+    return df.select(*cached_column(
+        ("conform", fingerprint(sch.root), tuple(keys), remove_unexpected,
+         insert_missing, grow_arrays, shrink_arrays, populate_arrays,
+         df.schema.json()), build))

@@ -163,6 +163,10 @@ def parse(o: Any) -> Node:
             if str(k).startswith("$/"):
                 if not isinstance(v, list):
                     raise TypeError(f"regex key {k!r} value must be a list of types")
+                if not v:
+                    # no alternative to pick from: every check compiler's
+                    # union pick would fail Spark analysis (NULL_TYPE)
+                    raise ValueError(f"regex key {k!r} needs at least one type")
                 regex.append((str(k)[2:], [parse(t) for t in v]))
             else:
                 fields[str(k)] = parse(v)
@@ -230,6 +234,54 @@ def _parse_field(f: Field) -> Node:
         castable=f.castable,
     )
     return node
+
+
+# ---------------------------------------------------------------------------
+# Structural fingerprint (the compiled-Column memo's schema key)
+
+_ATOMS = {a.name: a for a in (ta.NUMBER, ta.BIGINT, ta.STRING, ta.BOOLEAN,
+                              ta.NULL, ta.BINARY, ta.TIMESTAMP, ta.DATE)}
+
+
+def fingerprint(node: Node) -> tuple:
+    """Hashable structural key of a node tree, recomputed on every call so
+    a schema mutated in place gets a new key. Built-in atoms go in by name,
+    regex keys as ``(pattern, alternatives)`` in declaration order, and
+    defaults by canonical repr. Callables (``$validate``, ``$unmarshal``
+    functions, default thunks) and any other atom go in by identity: the
+    objects themselves sit in the key, so an id is never reused while the
+    key lives."""
+    u = node.unmarshal
+    return ("N", node.kind, tuple(_alt_key(a) for a in node.alts),
+            _canon(node.default), node.required, node.validate,
+            None if u is None else
+            (u.fn, u.returns.json(), getattr(u, "py", None)),
+            node.castable)
+
+
+def _alt_key(alt) -> tuple:
+    if isinstance(alt, Node):
+        return fingerprint(alt)
+    if isinstance(alt, AtomAlt):
+        a = alt.atom
+        return ("A", a.name) if _ATOMS.get(a.name) is a else ("A", id(a), a)
+    if isinstance(alt, ArrayAlt):
+        return ("R", tuple(fingerprint(e) for e in alt.elems))
+    return ("O", tuple((k, fingerprint(v)) for k, v in alt.fields.items()),
+            tuple((p, tuple(fingerprint(n) for n in alts))
+                  for p, alts in alt.regex))
+
+
+def _canon(v) -> Any:
+    if v is _UNSET:
+        return "$unset"
+    if callable(v):
+        return v
+    if isinstance(v, dict):
+        return ("dict", tuple((_canon(k), _canon(x)) for k, x in v.items()))
+    if isinstance(v, (list, tuple)):
+        return (type(v).__name__, tuple(_canon(x) for x in v))
+    return (type(v).__name__, repr(v))
 
 
 # ---------------------------------------------------------------------------

@@ -26,6 +26,7 @@ from schisma_spark.functions.portable import (
     bind, hash32, hash32_native, lit_longs,
 )
 from schisma_spark.functions.text import TOKEN_RE  # noqa: F401  (re-export)
+from schisma_spark.session import cached_column
 from schisma_spark.sources import Checkpoints, local_frame, materialize
 
 MINHASH_P = 4294967311  # smallest prime > 2^32 (universal-hash modulus;
@@ -310,12 +311,17 @@ def banded_pairs(banded: DataFrame, keys: list[str], id_col: str,
     banded = cap_bucket_size(banded, keys, id_col, max_bucket_size)
     rest = [c for c in banded.columns if c != id_col and c not in keys]
 
-    def side(s: str) -> DataFrame:
-        return banded.select(*keys, F.col(id_col).alias(f"id_{s}"),
-                             *[F.col(c).alias(f"{c}_{s}") for c in rest])
+    def build() -> tuple:
+        def side(s: str) -> tuple:
+            return (*map(F.col, keys), F.col(id_col).alias(f"id_{s}"),
+                    *[F.col(c).alias(f"{c}_{s}") for c in rest])
 
-    return (side("a").join(side("b"), on=keys)
-            .where(F.col("id_a") < F.col("id_b")))
+        return side("a"), side("b"), F.col("id_a") < F.col("id_b")
+
+    a, b, ordered = cached_column(
+        ("banded_pairs", tuple(keys), id_col, tuple(rest)), build)
+    return (banded.select(*a).join(banded.select(*b), on=keys)
+            .where(ordered))
 
 
 def exact_dup_groups(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -1237,9 +1243,12 @@ def simhash64_near_dups(
     Production path is ``hasher='native'`` (full 64 bits, fully
     code-generated xxhash64).
     """
-    sig = simhash64(F.col(text_col), hasher=hasher)
-    s = df.select(F.col(id_col).alias("_id"), sig.alias("sig"))
-    return hamming_near_dups(s, "sig", "_id", max_hamming=max_hamming,
+    cols = cached_column(
+        ("simhash64", text_col, hasher, id_col),
+        lambda: (F.col(id_col).alias("_id"),
+                 simhash64(F.col(text_col), hasher=hasher).alias("sig")))
+    return hamming_near_dups(df.select(*cols), "sig", "_id",
+                             max_hamming=max_hamming,
                              max_bucket_size=max_bucket_size)
 
 
@@ -1269,23 +1278,31 @@ def hamming_near_dups(
             "banded pair set would be silently incomplete. Raise n_bands "
             "(shrinking band_bits) for a looser radius."
         )
-    mask = (1 << band_bits) - 1
-    s = df.select(F.col(id_col).alias("_id"), F.col(sig_col).alias("sig"))
-    bands = F.array(*[
-        F.shiftright("sig", band_bits * b).bitwiseAND(F.lit(mask))
-        .cast("int")
-        for b in range(n_bands)
-    ])
-    banded = s.select(
-        "_id", "sig", F.posexplode(bands).alias("band_idx", "band_val")
-    )
+    def build() -> tuple:
+        mask = (1 << band_bits) - 1
+        bands = F.array(*[
+            F.shiftright("sig", band_bits * b).bitwiseAND(F.lit(mask))
+            .cast("int")
+            for b in range(n_bands)
+        ])
+        return (
+            (F.col(id_col).alias("_id"), F.col(sig_col).alias("sig")),
+            (F.col("_id"), F.col("sig"),
+             F.posexplode(bands).alias("band_idx", "band_val")),
+            (F.col("id_a"), F.col("id_b"),
+             F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
+             .alias("hamming")),
+            F.col("hamming") <= max_hamming,
+        )
+
+    sig, banded, out, keep = cached_column(
+        ("hamming_near_dups", id_col, sig_col, n_bands, band_bits,
+         max_hamming), build)
     return (
-        banded_pairs(banded, ["band_idx", "band_val"], "_id",
-                     max_bucket_size)
-        .select("id_a", "id_b",
-                F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
-                .alias("hamming"))
-        .where(F.col("hamming") <= max_hamming)
+        banded_pairs(df.select(*sig).select(*banded),
+                     ["band_idx", "band_val"], "_id", max_bucket_size)
+        .select(*out)
+        .where(keep)
         .distinct()
     )
 
@@ -1317,10 +1334,12 @@ def simhash_near_dups(
     (16-bit bands, 65,536 values per band); this 32-bit variant stays as
     the byte-band oracle twin.
     """
-    sig = simhash(F.col(text_col), hasher=hasher)
-    s = df.select(F.col(id_col).alias("_id"), sig.alias("sig"))
-    return hamming_near_dups(s, "sig", "_id", max_hamming=max_hamming,
-                             n_bands=4, band_bits=8,
+    cols = cached_column(
+        ("simhash", text_col, SIMHASH_BITS, hasher, id_col),
+        lambda: (F.col(id_col).alias("_id"),
+                 simhash(F.col(text_col), hasher=hasher).alias("sig")))
+    return hamming_near_dups(df.select(*cols), "sig", "_id",
+                             max_hamming=max_hamming, n_bands=4, band_bits=8,
                              max_bucket_size=max_bucket_size)
 
 

@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 
 from schisma_spark.functions.portable import hash32
 from schisma_spark.functions.text import token_count_ws
+from schisma_spark.session import worker_init
 
 PACK_SCHEMA = ("{id} {id_type}, tokens long, shard long, seq_id long, "
                "offset long, end_seq long")
@@ -114,6 +115,7 @@ def pack_sequences(
         _id = id_col
 
         def _pack(pdf: "pd.DataFrame") -> "pd.DataFrame":
+            worker_init()
             pdf = pdf.sort_values(_id)
             seqs, offs = [], []
             seq, fill = 0, 0

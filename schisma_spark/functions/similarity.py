@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from schisma_spark.functions.dedup import banded_pairs, cap_bucket_size
 from schisma_spark.functions.portable import bind, lit_doubles
+from schisma_spark.session import cached_column
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -48,17 +49,38 @@ def cosine_sim(a: Column, b: Column) -> Column:
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 
-def _pair_cos(a: Column, b: Column, na: Column, nb: Column,
+def _pair_cos(a: str, b: str, na: str, nb: str,
               round_to: int | None) -> Column:
-    """``cosine_sim`` with the two norms PRECOMPUTED per vector row (r7,
-    guide §2.3): the verify stage of every candidate-pair operator used
-    to run three interpreted 64-element folds per PAIR (dot + both
-    norms); carrying ``_norm`` on the id-side projections makes it one
-    fold per pair and one per vector. Same values bit-exactly — the norm
-    columns are the identical fold expression evaluated on the same row,
-    and the ``dot / (na * nb)`` op order matches ``cosine_sim``."""
-    c = _dot(a, b) / (na * nb)
-    return F.round(c, round_to) if round_to is not None else c
+    """``cosine_sim`` of the vector columns ``a`` and ``b`` with their two
+    norms PRECOMPUTED per vector row in ``na``/``nb`` (r7, guide §2.3):
+    the verify stage of every candidate-pair operator used to run three
+    interpreted 64-element folds per PAIR (dot + both norms); carrying
+    ``_norm`` on the id-side projections makes it one fold per pair and
+    one per vector. Same values bit-exactly — the norm columns are the
+    identical fold expression evaluated on the same row, and the
+    ``dot / (na * nb)`` op order matches ``cosine_sim``. Built once per
+    JVM (``cached_column``)."""
+    def build() -> Column:
+        c = _dot(F.col(a), F.col(b)) / (F.col(na) * F.col(nb))
+        return F.round(c, round_to) if round_to is not None else c
+
+    return cached_column(("pair_cos", a, b, na, nb, round_to), build)
+
+
+def _gate(vec_col: str) -> Column:
+    """``valid_vector`` of the column ``vec_col``, built once per JVM."""
+    return cached_column(("valid_vector", vec_col),
+                         lambda: valid_vector(F.col(vec_col)))
+
+
+def _signatures(vec_col: str, dim: int, n_planes: int,
+                n_tables: int) -> Column:
+    """The operators' ``hyperplane_signatures`` of the column ``vec_col``
+    (tables seeded ``t0``, ``t1``, ...), built once per JVM."""
+    return cached_column(
+        ("hyperplane_signatures", vec_col, dim, n_planes, n_tables),
+        lambda: hyperplane_signatures(F.col(vec_col), dim, n_planes,
+                                      [f"t{t}" for t in range(n_tables)]))
 
 
 def _vectors(df: DataFrame, id_col: str, vec_col: str, out_id: str,
@@ -66,18 +88,28 @@ def _vectors(df: DataFrame, id_col: str, vec_col: str, out_id: str,
     """``out_id, vec, norm`` (id, vector, its ``_norm``) plus ``extra``
     for every ``valid_vector`` row of ``df`` — the scoring side of every
     pair operator."""
-    return df.where(valid_vector(F.col(vec_col))).select(
-        F.col(id_col).alias(out_id), F.col(vec_col).alias(vec),
-        _norm(F.col(vec_col)).alias(norm), *extra)
+    cols = cached_column(
+        ("vectors", id_col, vec_col, out_id, vec, norm),
+        lambda: (F.col(id_col).alias(out_id), F.col(vec_col).alias(vec),
+                 cached_column(("norm", vec_col),
+                               lambda: _norm(F.col(vec_col))).alias(norm)))
+    return df.where(_gate(vec_col)).select(*cols, *extra)
 
 
-def _buckets(df: DataFrame, vec_col: str, sigs: Column,
-             *cols: Column) -> DataFrame:
-    """``cols, table_id, bucket`` for every ``valid_vector`` row of
-    ``df``: one row per hyperplane table of ``sigs``
-    (``hyperplane_signatures`` over ``vec_col``)."""
-    return df.where(valid_vector(F.col(vec_col))).select(
-        *cols, F.posexplode(sigs).alias("table_id", "bucket"))
+def _buckets(df: DataFrame, vec_col: str, dim: int, n_planes: int,
+             n_tables: int, id_col: str | None = None,
+             out_id: str | None = None) -> DataFrame:
+    """``out_id, table_id, bucket`` (no id column when ``id_col`` is None)
+    for every ``valid_vector`` row of ``df``: one row per hyperplane table
+    of ``vec_col``'s signatures (``_signatures``)."""
+    def build() -> tuple:
+        ids = () if id_col is None else (F.col(id_col).alias(out_id),)
+        sigs = _signatures(vec_col, dim, n_planes, n_tables)
+        return ids + (F.posexplode(sigs).alias("table_id", "bucket"),)
+
+    cols = cached_column(
+        ("buckets", vec_col, dim, n_planes, n_tables, id_col, out_id), build)
+    return df.where(_gate(vec_col)).select(*cols)
 
 
 def _top_k(scored: DataFrame, k: int) -> DataFrame:
@@ -107,8 +139,7 @@ def brute_force_topk(
     p = F.broadcast(_vectors(probes, id_col, vec_col, "probe_id", "_pv",
                              "_pn"))
     base = _vectors(df, id_col, vec_col, "neighbor_id", "_nv", "_nn")
-    cos = _pair_cos(F.col("_pv"), F.col("_nv"), F.col("_pn"), F.col("_nn"),
-                    round_to)
+    cos = _pair_cos("_pv", "_nv", "_pn", "_nn", round_to)
     return _top_k(
         p.crossJoin(base)
         .where(F.col("probe_id") != F.col("neighbor_id"))
@@ -242,11 +273,8 @@ def lsh_bucket_stats(
     ``_resolve_n_planes``). Like the operators, it counts only
     ``valid_vector`` rows."""
     n_planes = _resolve_n_planes(df, n_planes, target_bucket_size, n_rows)
-    sigs = hyperplane_signatures(
-        F.col(vec_col), dim, n_planes, [f"t{t}" for t in range(n_tables)]
-    )
     buckets = (
-        _buckets(df, vec_col, sigs)
+        _buckets(df, vec_col, dim, n_planes, n_tables)
         .groupBy("table_id", "bucket")
         .agg(F.count(F.lit(1)).alias("b_rows"))
     )
@@ -300,23 +328,24 @@ def cosine_near_dups(
     ``lsh_bucket_stats`` and bound the degenerate tail with
     ``max_bucket_size``."""
     n_planes = _resolve_n_planes(df, n_planes, target_bucket_size, n_rows)
-    sigs = hyperplane_signatures(
-        F.col(vec_col), dim, n_planes, [f"t{t}" for t in range(n_tables)]
-    )
+    pair, cos, keep = cached_column(
+        ("cosine_near_dups", round_to, threshold),
+        lambda: ((F.col("id_a"), F.col("id_b")),
+                 _pair_cos("_va", "_vb", "_na", "_nb", round_to).alias("cos"),
+                 F.col("cos") >= threshold))
     cands = (
-        banded_pairs(_buckets(df, vec_col, sigs, F.col(id_col).alias("_id")),
+        banded_pairs(_buckets(df, vec_col, dim, n_planes, n_tables, id_col,
+                              "_id"),
                      ["table_id", "bucket"], "_id", max_bucket_size)
-        .select("id_a", "id_b")
+        .select(*pair)
         .distinct()
     )
     va = _vectors(df, id_col, vec_col, "id_a", "_va", "_na")
     vb = _vectors(df, id_col, vec_col, "id_b", "_vb", "_nb")
-    cos = _pair_cos(F.col("_va"), F.col("_vb"), F.col("_na"), F.col("_nb"),
-                    round_to)
     return (
         cands.join(va, "id_a").join(vb, "id_b")
-        .select("id_a", "id_b", cos.alias("cos"))
-        .where(F.col("cos") >= threshold)
+        .select(*pair, cos)
+        .where(keep)
     )
 
 
@@ -409,7 +438,7 @@ def kmeans_topics(
     Scale shape: assignment is ONE projection against the literal
     codebook — no join, no shuffle; 10^12 rows assign in a single
     map-only stage."""
-    valid = valid_vector(F.col(vec_col))
+    valid = _gate(vec_col)
     vdf = df.where(valid)
     cents = ivf_centroids(vdf, id_col, vec_col, n_topics, sample_mod)
     if refine_iters:
@@ -480,22 +509,16 @@ def embedding_decontaminate(
     eval_vec_col = eval_vec_col or vec_col
     n_planes = _resolve_n_planes(corpus, n_planes, target_bucket_size,
                                  n_rows)
-    seeds = [f"t{t}" for t in range(n_tables)]
     cb = cap_bucket_size(
-        _buckets(corpus, vec_col,
-                 hyperplane_signatures(F.col(vec_col), dim, n_planes, seeds),
-                 F.col(id_col).alias("_cid")),
+        _buckets(corpus, vec_col, dim, n_planes, n_tables, id_col, "_cid"),
         ["table_id", "bucket"], "_cid", max_bucket_size)
-    eb = _buckets(
-        eval_df, eval_vec_col,
-        hyperplane_signatures(F.col(eval_vec_col), dim, n_planes, seeds),
-        F.col(eval_id_col).alias("_eid"))
+    eb = _buckets(eval_df, eval_vec_col, dim, n_planes, n_tables,
+                  eval_id_col, "_eid")
     cands = (cb.join(eb, on=["table_id", "bucket"])
              .select("_cid", "_eid").distinct())
     cv = _vectors(corpus, id_col, vec_col, "_cid", "_cv", "_cn")
     ev = _vectors(eval_df, eval_id_col, eval_vec_col, "_eid", "_ev", "_en")
-    cos = _pair_cos(F.col("_cv"), F.col("_ev"), F.col("_cn"), F.col("_en"),
-                    round_to)
+    cos = _pair_cos("_cv", "_ev", "_cn", "_en", round_to)
     hits = (cands.join(cv, "_cid").join(ev, "_eid")
             .select("_cid", cos.alias("_cos"))
             .where(F.col("_cos") >= threshold)
@@ -628,7 +651,7 @@ def ivf_ann_topk(
     scan each; the default 0 keeps the deterministic bootstrap the
     oracle queries pin."""
     del dim  # the codebook fixes the dimensionality
-    vdf = df.where(valid_vector(F.col(vec_col)))
+    vdf = df.where(_gate(vec_col))
     cents = ivf_centroids(vdf, id_col, vec_col, n_centroids, sample_mod)
     if refine_iters:
         cents = ivf_refine_centroids(vdf, vec_col, cents, refine_iters,
@@ -654,8 +677,7 @@ def ivf_ann_topk(
     p = _vectors(
         probes, id_col, vec_col, "probe_id", "_pv", "_pn",
         F.explode(F.transform(probe_cells, lambda x: x["c"])).alias("cell"))
-    cos = _pair_cos(F.col("_pv"), F.col("_nv"), F.col("_pn"), F.col("_nn"),
-                    round_to)
+    cos = _pair_cos("_pv", "_nv", "_pn", "_nn", round_to)
     return _top_k(
         p.join(base, "cell")
         .where(F.col("probe_id") != F.col("neighbor_id"))
@@ -695,16 +717,15 @@ def lsh_ann_topk(
     oracle queries do); verify skew with ``lsh_bucket_stats``;
     ``max_bucket_size`` bounds the degenerate tail."""
     n_planes = _resolve_n_planes(df, n_planes, target_bucket_size, n_rows)
-    sigs = hyperplane_signatures(
-        F.col(vec_col), dim, n_planes, [f"t{t}" for t in range(n_tables)]
-    )
     # hot-bucket guard on the TABLE side only (the probe side is small by
     # construction); capping trades a sliver of recall in degenerate
     # buckets for a bounded per-task pair count
     base = cap_bucket_size(
-        _buckets(df, vec_col, sigs, F.col(id_col).alias("neighbor_id")),
+        _buckets(df, vec_col, dim, n_planes, n_tables, id_col,
+                 "neighbor_id"),
         ["table_id", "bucket"], "neighbor_id", max_bucket_size)
-    p = _buckets(probes, vec_col, sigs, F.col(id_col).alias("probe_id"))
+    p = _buckets(probes, vec_col, dim, n_planes, n_tables, id_col,
+                 "probe_id")
     # no explicit broadcast hints here: the probe side is small and AQE
     # will pick broadcast on its own when memory allows; a forced hint can
     # fail hard ("not enough memory to build and broadcast") in a
@@ -717,8 +738,7 @@ def lsh_ann_topk(
     )
     pv = _vectors(probes, id_col, vec_col, "probe_id", "_pv", "_pn")
     nv = _vectors(df, id_col, vec_col, "neighbor_id", "_nv", "_nn")
-    cos = _pair_cos(F.col("_pv"), F.col("_nv"), F.col("_pn"), F.col("_nn"),
-                    round_to)
+    cos = _pair_cos("_pv", "_nv", "_pn", "_nn", round_to)
     return _top_k(
         cands.join(pv, "probe_id")
         .join(nv, "neighbor_id")

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from schisma_spark.image.synth import decode_image, gen_pixels, psnr
+from schisma_spark.session import worker_init
 
 DECODE_RESULT_FIELDS = [
     T.StructField("decode_ok", T.BooleanType()),
@@ -78,6 +79,7 @@ def decode_validate(df: DataFrame, keep_cols: list[str] | None = None) -> DataFr
     )
 
     def mapper(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        worker_init()
         for b in batches:
             res = [
                 _check_one(r.image_id, r.bytes, r.fmt, r.w, r.h)

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from schisma_spark.image.synth import encode_image, gen_pixels
+from schisma_spark.session import worker_init
 from schisma_spark.sources import local_frame
 
 IMAGES_SCHEMA = T.StructType(
@@ -129,6 +130,7 @@ def violated_row(i: int, seed: int = 42, with_bytes: bool = True) -> dict:
 
 def _gen_mapper(clean: bool, seed: int, with_bytes: bool):
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        worker_init()
         make = clean_row if clean else violated_row
         for b in batches:
             rows = [make(int(i), seed, with_bytes) for i in b["id"]]
@@ -158,20 +160,35 @@ def dim_fmt(spark: SparkSession) -> DataFrame:
     )
 
 
+def _image_id_ok(c):
+    return c.rlike("^img-")
+
+
+def _side_ok(c):
+    return (c > 0) & (c <= 4096)
+
+
+def _fmt_ok(c):
+    return c.isin(*FMTS)
+
+
 def images_schema_dsl():
     """The engine schema for the images table's STATS path (row-level
     checks). ``bytes`` is deliberately absent: even a null-check Column on
     it would force the scan to read the payload, defeating column pruning
     (SURVEY §7 hard-part (e)); payload integrity belongs to the decode pass
-    (image/decode.py). Validate with ignore_unexpected=True."""
+    (image/decode.py). Validate with ignore_unexpected=True. The
+    ``$validate`` functions are module-level, so every call's schema has
+    the same fingerprint and shares one memoized compile
+    (``session.cached_column`` keys callables by identity)."""
     from schisma_spark import Field, schema
 
     return schema(
         {
-            "image_id": Field(type=str, validate=lambda c: c.rlike("^img-")),
-            "w": Field(type=int, validate=lambda c: (c > 0) & (c <= 4096)),
-            "h": Field(type=int, validate=lambda c: (c > 0) & (c <= 4096)),
-            "fmt": Field(type=str, validate=lambda c: c.isin(*FMTS)),
+            "image_id": Field(type=str, validate=_image_id_ok),
+            "w": Field(type=int, validate=_side_ok),
+            "h": Field(type=int, validate=_side_ok),
+            "fmt": Field(type=str, validate=_fmt_ok),
             "caption": Field(type=str, required=True),
             "phash": int,
             "part": int,

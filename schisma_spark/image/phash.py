@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from schisma_spark.image.synth import decode_image
+from schisma_spark.session import worker_init
 
 PHASH_SIZE = 32   # resize target
 PHASH_LOW = 8     # low-frequency block -> 64 bits
@@ -108,6 +109,7 @@ def compute_phash(df: DataFrame,
     )
 
     def mapper(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        worker_init()
         for b in batches:
             vals = []
             for r in b.itertuples(index=False):

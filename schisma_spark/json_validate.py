@@ -27,8 +27,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from schisma_spark.compiler import Opts, _check_map, empty_varr, viol
-from schisma_spark.dsl import AtomAlt, Node, ObjectAlt, Schema
+from schisma_spark.dsl import AtomAlt, Node, ObjectAlt, Schema, fingerprint
 from schisma_spark.result import INVALID
+from schisma_spark.session import cached_column
 from schisma_spark.validate import ValidationResult
 
 
@@ -87,9 +88,10 @@ def validate_json(
 ) -> ValidationResult:
     opts = Opts(ignore_unexpected=ignore_unexpected,
                 ignore_required=ignore_required)
-    keys = list(keys or [])
-    viols = json_checks(F.col(json_col), sch, opts)
-    return ValidationResult(df=df, keys=keys, viols_col=viols)
+    viols = cached_column(
+        ("validate_json", fingerprint(sch.root), opts, json_col),
+        lambda: json_checks(F.col(json_col), sch, opts))
+    return ValidationResult(df=df, keys=list(keys or []), viols_col=viols)
 
 
 def _json_scalar(c: Column) -> Column:
@@ -128,16 +130,30 @@ def conform_json(
     position; malformed JSON is replaced by the schema's create() JSON.
     One projection, JVM-side — recursion depth is the SCHEMA's (static),
     never the data's."""
+    alt = sch.root.alts[0]
+    if not isinstance(alt, ObjectAlt):
+        raise TypeError("json schema root must be an object")
+    out = cached_column(
+        ("conform_json", fingerprint(sch.root), json_col, remove_unexpected,
+         insert_missing),
+        lambda: _conform_json_column(json_col, alt, remove_unexpected,
+                                     insert_missing))
+    return df.select(
+        *[out if c == json_col else F.col(c) for c in df.columns]
+    )
+
+
+def _conform_json_column(json_col: str, alt: ObjectAlt,
+                         remove_unexpected: bool,
+                         insert_missing: bool) -> Column:
+    """The repaired ``json_col`` of :func:`conform_json`, aliased to its
+    name."""
     import json as _json
 
     from schisma_spark import typeatoms as ta
     from schisma_spark.create import create_value
     from schisma_spark.dsl import ArrayAlt, AtomAlt, _UNSET
     from schisma_spark.functions.portable import bind
-
-    alt = sch.root.alts[0]
-    if not isinstance(alt, ObjectAlt):
-        raise TypeError("json schema root must be an object")
 
     def _dumps(v) -> str:
         return _json.dumps(v, separators=(",", ":"))
@@ -374,7 +390,7 @@ def conform_json(
     # bind — outside it, from_json ran twice per row, r4/ADVICE): the
     # variant map carries type-preserved values; nested levels re-view
     # their subtree as map<string,variant>
-    out = (
+    return (
         F.when(col.isNull(), F.lit(None).cast("string"))
         .otherwise(bind(
             F.from_json(col, "map<string,variant>"),
@@ -382,7 +398,4 @@ def conform_json(
             .otherwise(F.concat(F.lit("{"), _obj_body(m, alt),
                                 F.lit("}")))))
         .alias(json_col)
-    )
-    return df.select(
-        *[out if c == json_col else F.col(c) for c in df.columns]
     )

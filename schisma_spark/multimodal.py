@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from schisma_spark.image.synth import decode_image
+from schisma_spark.session import worker_init
 
 # ---------------------------------------------------------------------------
 # codec registry: real library if importable, deterministic fake otherwise
@@ -147,6 +148,7 @@ def image_features(df: DataFrame, out_w: int = 8, out_h: int = 8,
         }
 
     def mapper(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        worker_init()
         for b in batches:
             feats = pd.DataFrame(
                 [one(r.bytes, r.fmt, r.w, r.h) for r in b.itertuples(index=False)]
@@ -181,6 +183,7 @@ def audio_features(df: DataFrame, id_col: str = "clip_id",
     )
 
     def mapper(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        worker_init()
         for b in batches:
             rows = []
             for r in b.itertuples(index=False):
@@ -220,6 +223,7 @@ def video_frame_sample(df: DataFrame, n_frames: int = 3,
     out_schema = T.StructType([df.schema[id_col]] + VIDEO_FRAMES_FIELDS)
 
     def mapper(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        worker_init()
         for b in batches:
             rows = []
             for r in b.itertuples(index=False):

@@ -19,7 +19,9 @@ Driver cost is constant per level, not per expression:
 - ONE compile: the level check is built once over the columns ``_v``
   (node variant) and ``_where`` (its path) and reused by every level;
   level 0 feeds it from a projection that parses each document once and
-  wraps it in the NULL-input and malformed-JSON branches.
+  wraps it in the NULL-input and malformed-JSON branches. These Columns
+  are name-bound, so they are memoized per JVM (``session.cached_column``)
+  and a repeated call with the same schema builds none of them.
 - ONE Spark job per level: each level is lazily ``localCheckpoint``'d and
   a single ``sources.materialize`` action both fills the checkpoint and
   returns the level's row, has-violations and has-children counts, which
@@ -58,9 +60,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from schisma_spark.compiler import Opts, empty_varr, viol
-from schisma_spark.dsl import Field, schema as make_schema
+from schisma_spark.dsl import Field, Node, fingerprint, schema as make_schema
 from schisma_spark.functions.portable import bind
 from schisma_spark.result import INVALID, VIOLATION_FIELDS
+from schisma_spark.session import cached_column
 from schisma_spark.sources import Checkpoints, materialize
 from schisma_spark.variant_validate import check_variant_node
 
@@ -126,37 +129,20 @@ def validate_json_recursive(
     level = make_schema(
         {**fields, recurse_field: Field(typeof=[[]], required=False)}
     ).root
-    # variant path key for the recursive field (bracket-quoted when the
-    # dot form would not parse)
-    key = (f".{recurse_field}" if "[" not in recurse_field
-           else f"['{recurse_field}']")
-
-    col = F.col(json_col)
-    node = check_variant_node(level, F.col("_v"), F.col("_where"), opts)
-    children = F.try_variant_get(F.col("_v"), f"${key}", "array<variant>")
+    c = cached_column(
+        ("validate_json_recursive", fingerprint(level), recurse_field, opts,
+         json_col),
+        lambda: _level_columns(level, json_col, recurse_field, opts))
 
     def check(frontier: DataFrame, viols: Column) -> DataFrame:
-        return frontier.select(*keys, "_where", viols.alias("_viols"),
-                               children.alias("_ch"))
+        return frontier.select(*keys, "_where", viols, c["children"])
 
     # level 0: NULL input -> no violations; malformed -> the reference's
     # single INVALID row; else the level check. The parse sits in the
     # lower projection, so it runs once per row however many references
     # the check hangs off ``_v`` (CollapseProject keeps a non-cheap
     # expression with several consumers below them).
-    roots = df.select(
-        *keys, F.lit(None).cast("string").alias("_where"),
-        col.isNull().alias("_null"), F.substring(col, 1, 64).alias("_head"),
-        F.try_parse_json(col).alias("_v"),
-    )
-    malformed = viol(INVALID, where=None, expected="json",
-                     received=F.col("_head"), message="malformed json")
-    combined_lazy = check(
-        roots,
-        F.when(F.col("_null"), empty_varr())
-        .when(F.col("_v").isNull(), F.array(malformed))
-        .otherwise(node.viols),
-    )
+    combined_lazy = check(df.select(*keys, *c["roots"]), c["root_viols"])
 
     ckpts = Checkpoints(df.sparkSession)
     level_viols: list[DataFrame] = []
@@ -165,12 +151,7 @@ def validate_json_recursive(
     try:
         while True:
             combined, cur = ckpts.take(combined_lazy, eager=False)
-            stats = materialize(
-                combined,
-                F.count(F.lit(1)).alias("n"),
-                F.sum((F.size("_viols") > 0).cast("long")).alias("nv"),
-                F.sum(F.col("_ch").isNotNull().cast("long")).alias("nc"),
-            )
+            stats = materialize(combined, *c["stats"])
             ckpts.free(prev)  # level L-1's blocks die here
             prev = cur
             if stats["n"] == 0:
@@ -185,23 +166,17 @@ def validate_json_recursive(
                 )
             if stats["nv"]:
                 level_viols.append(ckpts.take(
-                    combined.where(F.size("_viols") > 0)
-                    .select(*keys, F.explode("_viols").alias("_x"))
-                    .select(*keys, *[F.col(f"_x.{f}").alias(f)
-                                     for f in VIOLATION_FIELDS])
+                    combined.where(c["has_viols"])
+                    .select(*keys, c["explode"])
+                    .select(*keys, *c["fields"])
                 )[0])
             if not stats["nc"]:
                 break
             combined_lazy = check(
-                combined.where(F.col("_ch").isNotNull())
-                .select(*keys, "_where",
-                        F.posexplode("_ch").alias("_i", "_v"))
-                .select(*keys,
-                        F.concat_ws(".", "_where", F.lit(recurse_field),
-                                    F.col("_i").cast("string"))
-                        .alias("_where"),
-                        "_v"),
-                node.viols,
+                combined.where(c["has_children"])
+                .select(*keys, "_where", c["posexplode"])
+                .select(*keys, c["child_where"], "_v"),
+                c["node_viols"],
             )
             depth += 1
         ckpts.free(prev)
@@ -213,8 +188,7 @@ def validate_json_recursive(
         # zero violations anywhere: a limit(0) projection in the exact
         # output schema — OptimizeLimitZero folds it to an empty
         # relation, so the final collect never touches the corpus
-        return (df.limit(0)
-                .select(*keys, viol(INVALID, where=None).alias("_x"))
+        return (df.limit(0).select(*keys, c["no_viol"])
                 .select(*keys, "_x.*"))
     viols = level_viols[0]
     for v in level_viols[1:]:
@@ -225,22 +199,72 @@ def validate_json_recursive(
     # documents by path. A path with no node (a duplicate key's other
     # document) reads SQL NULL and is dropped, as the old descent's join
     # dropped it.
-    rf = re.escape(recurse_field)
     paths = (
-        viols.select(*keys, F.explode(_boundary_prefixes(
-            F.col("where"), recurse_field)).alias("_path"))
-        .where(F.col("_path").rlike(rf"^{rf}\.[0-9]+(\.{rf}\.[0-9]+)*$"))
-        .distinct()
+        viols.select(*keys, c["prefixes"]).where(c["chain_path"]).distinct()
     )
-    subtree = F.try_variant_get(F.try_parse_json(col),
-                                _chain_path(F.col("_path"), recurse_field,
-                                            key), "variant")
     carriers = (
         paths.join(df.select(*keys, json_col), on=keys)
-        .select(*keys, "_path", subtree.alias("_s"))
-        .where(F.col("_s").isNotNull())
-        .select(*keys, viol(INVALID, where=F.col("_path"),
-                            value=F.to_json("_s")).alias("_x"))
+        .select(*keys, "_path", c["subtree"])
+        .where(c["has_subtree"])
+        .select(*keys, c["carrier"])
         .select(*keys, "_x.*")
     )
     return viols.unionByName(carriers)
+
+
+def _level_columns(level: Node, json_col: str, recurse_field: str,
+                   opts: Opts) -> dict:
+    """Every Column :func:`validate_json_recursive` builds, by role: the
+    level check over ``_v``/``_where`` (compiled ONCE, reused by every
+    level), the level-0 projection and the loop's fixed selections. All
+    are name-bound, so one set serves every call with these arguments."""
+    # variant path key for the recursive field (bracket-quoted when the
+    # dot form would not parse)
+    key = (f".{recurse_field}" if "[" not in recurse_field
+           else f"['{recurse_field}']")
+    col = F.col(json_col)
+    node = check_variant_node(level, F.col("_v"), F.col("_where"), opts)
+    malformed = viol(INVALID, where=None, expected="json",
+                     received=F.col("_head"), message="malformed json")
+    rf = re.escape(recurse_field)
+    return {
+        "node_viols": node.viols.alias("_viols"),
+        "children": F.try_variant_get(F.col("_v"), f"${key}",
+                                      "array<variant>").alias("_ch"),
+        "roots": (
+            F.lit(None).cast("string").alias("_where"),
+            col.isNull().alias("_null"),
+            F.substring(col, 1, 64).alias("_head"),
+            F.try_parse_json(col).alias("_v"),
+        ),
+        "root_viols": (
+            F.when(F.col("_null"), empty_varr())
+            .when(F.col("_v").isNull(), F.array(malformed))
+            .otherwise(node.viols).alias("_viols")
+        ),
+        "stats": (
+            F.count(F.lit(1)).alias("n"),
+            F.sum((F.size("_viols") > 0).cast("long")).alias("nv"),
+            F.sum(F.col("_ch").isNotNull().cast("long")).alias("nc"),
+        ),
+        "has_viols": F.size("_viols") > 0,
+        "explode": F.explode("_viols").alias("_x"),
+        "fields": tuple(F.col(f"_x.{f}").alias(f) for f in VIOLATION_FIELDS),
+        "has_children": F.col("_ch").isNotNull(),
+        "posexplode": F.posexplode("_ch").alias("_i", "_v"),
+        "child_where": F.concat_ws(".", "_where", F.lit(recurse_field),
+                                   F.col("_i").cast("string"))
+        .alias("_where"),
+        "no_viol": viol(INVALID, where=None).alias("_x"),
+        "prefixes": F.explode(_boundary_prefixes(
+            F.col("where"), recurse_field)).alias("_path"),
+        "chain_path": F.col("_path").rlike(
+            rf"^{rf}\.[0-9]+(\.{rf}\.[0-9]+)*$"),
+        "subtree": F.try_variant_get(
+            F.try_parse_json(col),
+            _chain_path(F.col("_path"), recurse_field, key),
+            "variant").alias("_s"),
+        "has_subtree": F.col("_s").isNotNull(),
+        "carrier": viol(INVALID, where=F.col("_path"),
+                        value=F.to_json("_s")).alias("_x"),
+    }

@@ -10,10 +10,13 @@ from __future__ import annotations
 
 import hashlib
 import os
+import sys
 import tempfile
+import threading
 import zipfile
+from collections import OrderedDict
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 #: Driver-side conf every session of this engine starts with, ``build_session``
 #: and the ``jobs/`` spark-submit entry points alike. PySpark 4 wraps every
@@ -27,6 +30,101 @@ from pyspark.sql import SparkSession
 #: Error messages then lose the Python call site; get it back with
 #: ``build_session(extra={KEY: "true"})`` or ``spark-submit --conf KEY=true``.
 DRIVER_CONF = {"spark.python.sql.dataFrameDebugging.enabled": "false"}
+
+
+#: Entries the compiled-Column memo keeps (least recently used dropped first).
+COLUMN_MEMO_SIZE = 256
+
+_memo_lock = threading.Lock()
+_memo: OrderedDict = OrderedDict()
+_memo_gateway = None  # the py4j gateway (JVM) the entries were built on
+
+
+def cached_column(key, build):
+    """``build()`` — a Column or a tuple/dict of Columns, never a
+    DataFrame — built once per JVM for the hashable ``key`` and returned
+    from a bounded, thread-safe LRU memo afterwards.
+
+    Compiled Columns are name-bound (``F.col(k)``, lambda variables), so
+    one serves every frame with those names, and building one costs a py4j
+    round trip per Column call: a warm ``validate_variant`` rebuilt ~1,300
+    of them per call. ``key`` must hold everything the build reads: the
+    schema's :func:`~schisma_spark.dsl.fingerprint`, options, column names
+    and, for relational compiles, the input's types. The store belongs to
+    the py4j gateway it was filled on, so a new JVM starts empty; without
+    a gateway (no classic SparkContext yet) or with an unhashable key
+    nothing is cached."""
+    global _memo_gateway
+    from pyspark import SparkContext
+
+    gateway = SparkContext._gateway
+    try:
+        hash(key)
+    except TypeError:  # e.g. a $validate callable object without __hash__
+        gateway = None
+    if gateway is not None:
+        with _memo_lock:
+            if _memo_gateway is not gateway:
+                _memo.clear()
+                _memo_gateway = gateway
+            if key in _memo:
+                _memo.move_to_end(key)
+                return _memo[key]
+    out = build()
+    if isinstance(out, DataFrame):
+        raise TypeError("cached_column holds Columns, never DataFrames")
+    if gateway is not None:
+        with _memo_lock:
+            if _memo_gateway is gateway:
+                out = _memo.setdefault(key, out)
+                _memo.move_to_end(key)
+                while len(_memo) > COLUMN_MEMO_SIZE:
+                    _memo.popitem(last=False)
+    return out
+
+
+_zip_guard = False
+
+
+def worker_init() -> None:
+    """Call first in every Python mapper or UDF body: once per worker
+    process, on CPython < 3.13, makes ``zipimporter.invalidate_caches``
+    re-read an archive's central directory only when its
+    ``(st_mtime_ns, st_size)`` changed.
+
+    PySpark's worker runs ``importlib.invalidate_caches()`` at the start of
+    EVERY task, and 3.11/3.12 zip importers re-read their whole directory
+    there (3.13 made it lazy): a reused worker with ``pyspark.zip``, the
+    py4j zip, a jar and the package zip on ``sys.path`` parsed ~25,000
+    entries per task, 0.2-0.3 s of CPU whatever the task computed. A zip
+    shipped again with ``addPyFile`` still changes its stamp and is
+    re-read, so new modules stay importable."""
+    global _zip_guard
+    if _zip_guard:
+        return
+    _zip_guard = True
+    if sys.version_info >= (3, 13):
+        return
+    import zipimport
+
+    reread = zipimport.zipimporter.invalidate_caches
+    stamps: dict = {}
+
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+            stamp = (st.st_mtime_ns, st.st_size)
+        except OSError:
+            stamp = None
+        files = zipimport._zip_directory_cache.get(self.archive)
+        if stamp is not None and stamps.get(self.archive) == stamp \
+                and files is not None:
+            self._files = files  # as last read by any of its importers
+            return
+        reread(self)
+        stamps[self.archive] = stamp
+
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
 
 
 def package_zip() -> str:

@@ -29,6 +29,7 @@ from pyspark.sql import types as T
 
 from schisma_spark.dsl import Schema
 from schisma_spark.manifest import Manifest
+from schisma_spark.session import worker_init
 from schisma_spark.validate import validate
 
 
@@ -174,6 +175,7 @@ def stateful_exact_dedup_stream(
     ])
 
     def update(key, pdfs, state: GroupState):
+        worker_init()
         n_batch = 0
         batch_min = None
         for pdf in pdfs:

@@ -27,8 +27,9 @@ from schisma_spark.compiler import (
     is_problem,
     viol,
 )
-from schisma_spark.dsl import ObjectAlt, Schema
+from schisma_spark.dsl import ObjectAlt, Schema, fingerprint
 from schisma_spark.result import VIOLATION_FIELDS
+from schisma_spark.session import cached_column
 
 PASS, FAIL = "pass", "fail"
 
@@ -147,16 +148,23 @@ def validate(
     if not isinstance(alt, ObjectAlt):
         raise TypeError("root schema must be an object (dict literal)")
 
-    dtypes = dict(zip(df.schema.fieldNames(), [f.dataType for f in df.schema.fields]))
+    def build():
+        dtypes = {f.name: f.dataType for f in df.schema.fields}
 
-    def getter(k):
-        return F.col(k), dtypes[k]
+        def getter(k):
+            return F.col(k), dtypes[k]
 
-    root_where = F.lit(None).cast("string")  # dot='' at root (schisma.mjs:109)
-    res = check_object_fields(
-        alt, getter, list(dtypes), root_where, opts, exempt=set(keys)
-    )
-    return _assemble(df, keys, res, filter_non_errors, root_where)
+        root_where = F.lit(None).cast("string")  # dot='' at root
+                                                  # (schisma.mjs:109)
+        res = check_object_fields(
+            alt, getter, list(dtypes), root_where, opts, exempt=set(keys)
+        )
+        return _assemble(res, filter_non_errors, root_where)
+
+    viols, n = cached_column(
+        ("validate", fingerprint(sch.root), opts, tuple(keys),
+         df.schema.json()), build)
+    return ValidationResult(df=df, keys=keys, viols_col=viols, nviols_col=n)
 
 
 def validate_column(
@@ -174,14 +182,22 @@ def validate_column(
 
     opts = Opts(**kw)
     keys = list(keys or [])
-    dtype = dict(zip(df.schema.fieldNames(),
-                     [f.dataType for f in df.schema.fields]))[column]
-    res = checked_value(sch.root, F.col(column), dtype,
-                        F.lit(column), opts, root=True)
-    return _assemble(df, keys, res, opts.filter_non_errors, F.lit(column))
+    dtype = df.schema[column].dataType
+
+    def build():
+        res = checked_value(sch.root, F.col(column), dtype,
+                            F.lit(column), opts, root=True)
+        return _assemble(res, opts.filter_non_errors, F.lit(column))
+
+    viols, n = cached_column(
+        ("validate_column", fingerprint(sch.root), opts, column, dtype.json()),
+        build)
+    return ValidationResult(df=df, keys=keys, viols_col=viols, nviols_col=n)
 
 
-def _assemble(df, keys, res, filter_non_errors, root_where):
+def _assemble(res, filter_non_errors, root_where):
+    """``(viols, n)`` of a row's object result, with the non-error row
+    when ``filter_non_errors`` is off."""
     viols = res.viols
     n = res.n
     if not filter_non_errors:
@@ -196,8 +212,7 @@ def _assemble(df, keys, res, filter_non_errors, root_where):
         if n is not None:
             n = (n + F.when(~is_problem(res.code), F.lit(1))
                  .otherwise(F.lit(0))).cast("int")
-    return ValidationResult(df=df, keys=list(keys), viols_col=viols,
-                            nviols_col=n)
+    return viols, n
 
 
 def incremental_validate(

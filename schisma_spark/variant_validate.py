@@ -49,7 +49,14 @@ from schisma_spark.compiler import (
     vph,
 )
 from schisma_spark import typeatoms as ta
-from schisma_spark.dsl import ArrayAlt, AtomAlt, Node, ObjectAlt, Schema
+from schisma_spark.dsl import (
+    ArrayAlt,
+    AtomAlt,
+    Node,
+    ObjectAlt,
+    Schema,
+    fingerprint,
+)
 from schisma_spark.functions.portable import bind
 from schisma_spark.result import (
     INVALID,
@@ -58,6 +65,7 @@ from schisma_spark.result import (
     UNEXPECTED_KEY,
     VALID,
 )
+from schisma_spark.session import cached_column
 from schisma_spark.validate import ValidationResult
 
 _NUMERIC_PREFIXES = ("BIGINT", "DOUBLE", "FLOAT", "DECIMAL", "INT", "SMALLINT",
@@ -292,8 +300,11 @@ def _check_variant_object(alt: ObjectAlt, idx, kv: Column, where: Column,
                 F.array_contains(fixed, k) | ~matched, skip
             ).otherwise(best)
 
-        contribs.append(
-            vph(*fold(F.transform(F.map_entries(mv), _rx_entry))))
+        # bound once, as in compiler._check_map: the fold reads the
+        # entries three times, and unbound each read re-ran the whole
+        # per-entry regex dispatch per row
+        contribs.append(bind(F.transform(F.map_entries(mv), _rx_entry),
+                             lambda es: vph(*fold(es))))
     if not opts.ignore_unexpected:
         def _unexpected_contrib(u: Column) -> Column:
             # let-bound: three references below, one keys-enumeration pass
@@ -336,11 +347,17 @@ def validate_variant(
     (undefined != null, heterogeneous arrays, per-row union typeof)."""
     opts = Opts(ignore_unexpected=ignore_unexpected,
                 ignore_required=ignore_required)
-    keys = list(keys or [])
-    col = F.col(json_col)
     alt = sch.root.alts[0]
     if not isinstance(alt, ObjectAlt):
         raise TypeError("variant schema root must be an object")
+    viols = cached_column(
+        ("validate_variant", fingerprint(sch.root), opts, json_col),
+        lambda: _variant_checks(F.col(json_col), alt, opts))
+    return ValidationResult(df=df, keys=list(keys or []), viols_col=viols)
+
+
+def _variant_checks(col: Column, alt: ObjectAlt, opts: Opts) -> Column:
+    """array<violation> of one JSON string column."""
     malformed = F.array(
         viol(INVALID, where=None, expected="json object",
              received=F.substring(col, 1, 64), message="malformed json")
@@ -357,5 +374,4 @@ def validate_variant(
             .otherwise(res.viols)
         )
 
-    viols = bind(F.try_parse_json(col), _root)
-    return ValidationResult(df=df, keys=keys, viols_col=viols)
+    return bind(F.try_parse_json(col), _root)

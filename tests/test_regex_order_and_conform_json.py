@@ -86,6 +86,18 @@ def test_overlapping_regex_patterns_agree_across_paths(spark, path,
             ("no match", expected)]
 
 
+@pytest.mark.parametrize("definition", [
+    {"$/^x": []},
+    {"id": int, "nested": {"k": str, "$/^x": []}},
+    {"m": Field(typeof=[{"$/^y": [float], "$/^x": []}])},
+])
+def test_regex_key_without_types_fails_at_schema_time(definition):
+    # no alternative to pick from: both the relational and the variant
+    # union pick failed Spark analysis (NULL_TYPE) at the first action
+    with pytest.raises(ValueError, match=r"'\$/\^x'"):
+        schema(definition)
+
+
 def test_fixed_keys_win_over_regex(spark):
     # fixed keys take priority over matchers (README.md:89-106)
     df = spark.createDataFrame(
