@@ -330,7 +330,7 @@ def main():
         "validate_variant_events", "recursive_validate",
         "simhash_near_dups", "simhash64_near_dups",
         "conform_variant_events", "dedup_clusters",
-        "dedup_clusters_shortcut", "curation_keep_list",
+        "curation_keep_list",
         "embedding_curation", "signature_curation", "stratified_sample",
         "decontaminate", "strip_boilerplate",
         "pii_redaction", "repetition_stats",

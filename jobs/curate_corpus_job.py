@@ -9,7 +9,7 @@ The cluster invocation mode (BASELINE.json:14), curation flavor::
         --decisions <sink> --manifest <dir> \
         [--id-col doc_id] [--text-col text] \
         [--min-quality 0.5] [--min-tokens 5] [--threshold 0.7] \
-        [--hasher native] [--cc-shortcut] [--max-bucket-size N] \
+        [--hasher native] [--max-bucket-size N] \
         [--eval <benchmark-table-ref>] \
         [--strata lang --n-per-stratum 100000 --sample <sink>] \
         [--pack-budget 2048 --packed <sink>]
@@ -60,9 +60,6 @@ def main(argv=None):
                          "(oracle-parity)")
     ap.add_argument("--max-bucket-size", type=int, default=None,
                     help="LSH hot-bucket cap (degenerate-content guard)")
-    ap.add_argument("--cc-shortcut", action="store_true",
-                    help="pointer-jump cluster rounds (O(log diameter)); "
-                         "use when the corpus can chain transitively")
     ap.add_argument("--eval", default=None, dest="eval_ref",
                     help="benchmark table for the decontamination gate")
     ap.add_argument("--decontam-min-overlap", type=int, default=1)
@@ -119,7 +116,6 @@ def main(argv=None):
     decisions = curation_keep_list(
         df, args.id_col, args.text_col,
         min_quality=args.min_quality, min_tokens=args.min_tokens,
-        cc_shortcut=args.cc_shortcut,
         eval_df=eval_df,
         decontam_min_overlap=args.decontam_min_overlap,
         threshold=args.threshold, n_hashes=args.n_hashes,

@@ -70,7 +70,6 @@ def embedding_keep_list(
     dim: int,
     threshold: float = 0.99,
     pairs: DataFrame | None = None,
-    cc_shortcut: bool = False,
     **near_dup_kw,
 ) -> DataFrame:
     """``id_col, keep, reason`` for every row of an EMBEDDING table — the
@@ -107,7 +106,7 @@ def embedding_keep_list(
     if pairs is None:
         pairs = cosine_near_dups(df.where(valid), id_col, vec_col, dim,
                                  threshold, **near_dup_kw)
-    cc = (connected_components(pairs, shortcut=cc_shortcut)
+    cc = (connected_components(pairs)
           .withColumnRenamed("node", id_col)
           .withColumnRenamed("component", "_cluster"))
     reason = (
@@ -130,7 +129,6 @@ def signature_keep_list(
     sig_col: str,
     max_hamming: int = 3,
     pairs: DataFrame | None = None,
-    cc_shortcut: bool = False,
     **banding_kw,
 ) -> DataFrame:
     """``id_col, keep, reason`` over ANY int64-signature column — one
@@ -157,7 +155,7 @@ def signature_keep_list(
     if pairs is None:
         pairs = hamming_near_dups(df.where(valid), sig_col, id_col,
                                   max_hamming=max_hamming, **banding_kw)
-    cc = (connected_components(pairs, shortcut=cc_shortcut)
+    cc = (connected_components(pairs)
           .withColumnRenamed("node", id_col)
           .withColumnRenamed("component", "_cluster"))
     reason = (
@@ -181,7 +179,6 @@ def curation_keep_list(
     min_quality: float = 0.5,
     min_tokens: int = 5,
     pairs: DataFrame | None = None,
-    cc_shortcut: bool = False,
     eval_df: DataFrame | None = None,
     decontam_min_overlap: int = 1,
     **near_dup_kw,
@@ -223,10 +220,9 @@ def curation_keep_list(
     min_ids = base.groupBy("_fp").agg(F.min(id_col).alias("_fp_min"))
     if pairs is None:
         pairs = minhash_near_dups(df, text_col, id_col, **near_dup_kw)
-    # cc_shortcut: pointer-jump rounds (O(log diameter)) for corpora whose
-    # near-dup graph can form long transitive chains — see
-    # connected_components (r4 VERDICT #6); identical fixpoint either way
-    cc = (connected_components(pairs, shortcut=cc_shortcut)
+    # clusters converge in O(log diameter) rounds (hook + pointer jump),
+    # so long transitive near-dup chains stay within max_iterations
+    cc = (connected_components(pairs)
           .withColumnRenamed("node", id_col)
           .withColumnRenamed("component", "_cluster"))
     wc = base.join(min_ids, "_fp").join(cc, id_col, "left")

@@ -34,18 +34,6 @@ MINHASH_P = 4294967311  # smallest prime > 2^32 (universal-hash modulus;
 H32_SENTINEL = 4294967296  # 2^32: > any hash32 value (empty-shingle min,
 #                            native path)
 
-# connected_components: when the measured edge count right-sizes the
-# iterative phase to this many shuffle partitions or fewer, the loop is
-# scheduler-latency-bound, not data-bound — AQE's per-exchange
-# materialization jobs are pure overhead there (r7, guide §1.2/§2.2) and
-# are turned off for the loop only. At 50k edges/partition this threshold
-# is ~400k edges; override via SPARK_GRAFT_CC_TINY_PARTITIONS.
-import os as _os
-
-_CC_TINY_PARTITIONS = int(
-    _os.environ.get("SPARK_GRAFT_CC_TINY_PARTITIONS", "8"))
-
-
 def _minhash_coefs(n_hashes: int) -> tuple[list[int], list[int]]:
     """Deterministic (a_j, b_j) for the universal-hash minhash family
     h_j(x) = (a_j * x + b_j) mod MINHASH_P. a_j < 2^31 keeps the product
@@ -858,7 +846,6 @@ def connected_components(
     a_col: str = "id_a",
     b_col: str = "id_b",
     max_iterations: int = 50,
-    shortcut: bool = False,
     stats_out: dict | None = None,
 ) -> DataFrame:
     """Connected components over a near-dup pair graph — the CLUSTERING
@@ -866,58 +853,35 @@ def connected_components(
     per cluster): ``node, component`` where ``component`` is the smallest
     node id reachable from ``node`` (the canonical id).
 
-    Algorithm: min-label propagation to a fixpoint. Each round joins the
-    current labels across the symmetric edge list and takes
-    ``min(own, neighbors')``; converged when no label changes. Rounds =
-    O(cluster diameter) — near-dup clusters are shallow (most are
-    pairs/triangles; a transitive chain of length d needs d rounds), so
-    this beats the O(log n)-round star algorithms' per-round cost in
-    practice while staying fully distributed: each round is one shuffle
-    on the node id, nothing ever collects.
+    Algorithm: min-label propagation with hooking and pointer jumping.
+    Labels seed at ``min(node, neighbours)``. Each round is one join plus
+    one aggregate over the symmetric edge list with a self-loop per node:
+    the new label is the min over (self ∪ neighbours), and the self-loop
+    row carries the node's current label, so the same aggregate counts
+    the nodes whose label dropped. A round that changed labels is
+    followed by one hook-and-jump pass: every node whose label dropped
+    offers its new label to the node its old label named (the root its
+    tree hangs from), then ``label(v) <- label(label(v))`` (every label
+    is itself a node id). Reach then grows geometrically whatever the id
+    order along a path: a 200-node chain converges in <= ceil(log2(200))
+    + 1 = 9 rounds, in id order and in each of 1,000 simulated shuffles
+    of it, where jumping without the hook took 75 rounds in the median
+    shuffle and up to 164. A round that changes nothing proves the
+    fixpoint: labels are then equal across every edge, hence constant
+    per component, and no label ever exceeds its node, so each component
+    carries its minimum id. A graph that converges on its first probe
+    never hooks or jumps; an empty edge set returns at once.
 
-    ``shortcut=True`` (r4 VERDICT #6 — the adversarial-diameter guard):
-    after each propagation step the labels pointer-jump once,
-    ``label(v) <- label(label(v))`` — reach grows geometrically instead
-    of one hop per round, so a boilerplate mega-cluster forming a long
-    transitive CHAIN converges in O(log diameter) rounds instead of
-    hitting the ``max_iterations`` raise. Every label value is itself a
-    node id (labels start as the identity and only ever take reachable
-    node ids), so the jump is a self-join of the label frame — one extra
-    shuffle per round, worth it exactly when diameters are deep. The
-    fixpoint is identical: at convergence labels are constant per
-    component, so the jump is a no-op and the same zero-change probe
-    terminates both modes.
-
-    Scale discipline (the recursive_validate.py lessons, CLAUDE.md): each
-    round's labels are ``localCheckpoint``'d — an iterative persist chain
-    nests every prior round's plan and OOMs the driver via the plan
-    STRING alone — and the previous round's blocks are freed after the
-    convergence check so at most two label frames are ever held. The
-    convergence probe is an observed sum on the action that fills the
-    round's checkpoint (``sources.materialize``: one scalar to the driver
-    per round, never rows, and no extra aggregate job). ``stats_out``,
-    when passed, receives ``{"rounds": n}`` (property-tested: a 200-node
-    chain with shortcut converges in <= ceil(log2(200)) + 1 rounds).
-
-    r7 round-trip discipline (guide §1.2/§2): the iterative phase is
-    LATENCY-bound, not data-bound, once the graph is small relative to
-    the cluster — every eager checkpoint under AQE materializes each
-    exchange as its own scheduler round trip, so a 2-round CC on a
-    thousand-edge graph was 25 Spark jobs of pure overhead (measured
-    1.35 s at local[32] on a precomputed pair set). Three changes, all
-    fixpoint-identical:
-
-    - labels seed at ``min(node, min(neighbor))`` — exactly what round 1
-      computed from the identity seed, so one full propagation round
-      (checkpoint + probe + optional jump) disappears;
-    - an empty edge set returns immediately (no loop, no probe);
-    - the loop's shuffle partitioning derives from the measured edge
-      count (``target``), and when that says the graph is tiny
-      (``target <= _CC_TINY_PARTITIONS``) AQE is disabled for the
-      iterative phase only — one job per round instead of one per
-      exchange. At scale ``target`` is large, AQE (and its skew
-      splitting) stays on, and the seed/empty changes are the only
-      difference. Conf is restored in a ``finally``."""
+    Scale discipline: the graph frames are right-sized once from the
+    measured edge count; each round's labels are ``localCheckpoint``'d
+    (an iterative persist chain nests every prior round's plan and OOMs
+    the driver via the plan STRING alone) and the previous round's blocks
+    are freed, so at most two label frames are held. The convergence
+    probe is an observed sum on the action that fills the round's
+    checkpoint (``sources.materialize``: one scalar to the driver per
+    round, never rows). The session's conf is never touched.
+    ``stats_out``, when passed, receives ``{"rounds": n}``; a graph that
+    needs more than ``max_iterations`` rounds raises ``RuntimeError``."""
     if max_iterations < 2:
         # round 1 is the seed; fewer than two rounds never probes, so
         # convergence could never be shown
@@ -927,13 +891,9 @@ def connected_components(
     spark = pairs.sparkSession
     ckpts = Checkpoints(spark)
 
-    # symmetric edges PLUS a self-loop per node (r7): the self-loops ride
-    # the same distinct for free and make one propagation round a single
-    # join+groupBy — min over (self ∪ neighbors) — instead of a join,
-    # groupBy and a second join back to the labels. One reference to the
-    # labels frame per step is also what keeps the batched rounds below
-    # LINEAR in plan size (a two-reference step doubles the lazy plan per
-    # chained step — 2^k analysis blowup, measured 26 s at batch 8).
+    # symmetric edges PLUS a self-loop per node: the self-loops ride the
+    # same distinct and make a round a single join + groupBy — min over
+    # (self ∪ neighbours), with the node's own label on its self-loop row
     edges, eids = ckpts.take(
         pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
         .unionByName(
@@ -948,14 +908,12 @@ def connected_components(
         .distinct(),
         eager=False,  # the count below materializes it in the same job
     )
-    # right-size the graph frames ONCE (r5): the pair graph is sparse
-    # relative to the corpus (most docs never pair), and localCheckpoint
-    # FREEZES partitioning — AQE re-coalesces shuffles inside a round but
-    # never the checkpointed frames themselves, so a mega-corpus whose
-    # graph collapsed to thousands of edges would carry thousands of
-    # near-empty tasks into EVERY round at production partition counts.
-    # The count is one cheap job over already-materialized checkpoint
-    # blocks.
+    # right-size the graph frames ONCE: the pair graph is sparse relative
+    # to the corpus (most docs never pair), and localCheckpoint FREEZES
+    # partitioning, so a mega-corpus whose graph collapsed to thousands
+    # of edges would carry thousands of near-empty tasks into EVERY round
+    # at production partition counts. The count is one cheap job over
+    # already-materialized checkpoint blocks.
     n_edges = edges.count()
     if n_edges == 0:
         ckpts.free(eids)
@@ -967,14 +925,7 @@ def connected_components(
         ]))
     target = max(1, min(edges.rdd.getNumPartitions(),
                         (n_edges // 50_000) + 1))
-    conf = spark.conf
-    prev_aqe = conf.get("spark.sql.adaptive.enabled")
-    prev_parts = conf.get("spark.sql.shuffle.partitions")
-    tiny = target <= _CC_TINY_PARTITIONS
     try:
-        if tiny:
-            conf.set("spark.sql.adaptive.enabled", "false")
-            conf.set("spark.sql.shuffle.partitions", str(target))
         pending_free = frozenset()
         if target < edges.rdd.getNumPartitions():
             # lazy resize: materialized by the first probe job; the old
@@ -985,124 +936,79 @@ def connected_components(
                                        eager=False)
             pending_free = eids
             edges, eids = resized, rids
-        # seed = propagation round 1 from the identity labeling: min over
-        # (self ∪ 1-hop neighborhood) — the self-loops make this the
-        # plain groupBy min. The node set is identical to the old
-        # select(src).distinct(); one whole round's checkpoint + probe +
-        # (in shortcut mode) jump never happens. LAZY checkpoint: the
-        # first probe job materializes seed and round-1 labels together.
+        # seed: min over (self ∪ neighbours) of the identity labeling.
+        # LAZY checkpoint: the first probe job materializes it too.
         labels, lids = ckpts.take(
             edges.groupBy(F.col("src").alias("node"))
             .agg(F.min("dst").alias("component")),
             eager=False,
         )
-
-        def _propagate(cur: DataFrame) -> DataFrame:
-            # ONE reference to ``cur``: min over (self ∪ neighbors) via
-            # the self-loop edges — lazy chains of this step grow
-            # linearly, so batching k rounds into one job is safe
-            return (
-                edges.join(cur, edges["dst"] == cur["node"])
-                .groupBy(F.col("src").alias("node"))
-                .agg(F.min("component").alias("component"))
-            )
-
-        def _propagate_chg(cur: DataFrame) -> DataFrame:
-            # final step of a batch: also flag per-node label changes —
-            # works for ANY orderable id type (numeric-sum probes do
-            # not: node ids can be strings). References ``cur`` twice,
-            # which is bounded: only the last step of a batch doubles
-            # the linear chain.
-            neigh_min = (
-                edges.join(cur, edges["dst"] == cur["node"])
-                .groupBy(F.col("src").alias("node2"))
-                .agg(F.min("component").alias("neigh_component"))
-            )
-            return cur.join(neigh_min, cur["node"] == neigh_min["node2"],
-                            "left").select(
-                "node",
-                F.least(
-                    F.col("component"),
-                    F.coalesce(F.col("neigh_component"),
-                               F.col("component")),
-                ).alias("component"),
-                (F.coalesce(F.col("neigh_component"), F.col("component"))
-                 < F.col("component")).cast("int").alias("_chg"),
-            )
-
         converged = False
         rounds = 1
-        batch = 1
         while rounds < max_iterations:
-            # batched propagation (tiny/latency-bound regime, plain mode
-            # only): run ``steps`` propagation rounds in ONE job and
-            # probe once. Correctness of the batch-level probe:
-            # propagation is deterministic, so an unchanged sum across
-            # the batch means the FINAL step was a no-op on a fixpoint —
-            # detection is exact, it just fires on the step where it
-            # happened. The geometric ramp (1, 2, 4, 8) bounds overshoot
-            # past the fixpoint at <= 2x while collapsing a d-round
-            # chain to O(log d) probes; the common 2-round near-dup
-            # graph runs exactly as before.
-            steps = (1 if (shortcut or not tiny)
-                     else min(batch, max_iterations - rounds, 8))
-            cur = labels
-            for _s in range(steps - 1):
-                cur = _propagate(cur)
-            cur = _propagate_chg(cur)
-            new_labels, new_ids = ckpts.take(cur, eager=False)
-            rounds += steps
-            # ONE action: materializes the lazy checkpoint AND reads the
-            # change count (a no-op FINAL step proves the fixpoint, so
-            # batch-level detection is exact)
-            changed = materialize(
-                new_labels, F.sum("_chg").alias("chg"))["chg"] or 0
+            step, step_ids = ckpts.take(
+                edges.join(labels, edges["dst"] == labels["node"])
+                .groupBy(F.col("src").alias("node"))
+                .agg(F.min("component").alias("component"),
+                     F.min(F.when(F.col("src") == F.col("dst"),
+                                  F.col("component"))).alias("_own")),
+                eager=False,
+            )
+            rounds += 1
+            # ONE action fills the checkpoint and reads the change count
+            # (any orderable id type: ids can be strings)
+            changed = materialize(step, F.sum(
+                (F.col("component") < F.col("_own")).cast("int"))
+                .alias("chg"))["chg"] or 0
             if pending_free:
                 ckpts.free(pending_free)  # resize input; now materialized past
                 pending_free = frozenset()
-            if shortcut and changed > 0:
-                # pointer jump on the materialized step labels (a
-                # self-join of a LAZY frame would recompute the whole
-                # step twice); the left join is total — label values are
-                # node ids — coalesce is belt-and-braces
-                lk = new_labels.select(F.col("node").alias("_ln"),
-                                       F.col("component").alias("_lc"))
-                jumped, jumped_ids = ckpts.take(
-                    new_labels.join(lk, new_labels["component"] == lk["_ln"],
-                                    "left")
-                    .select(
-                        "node",
-                        F.coalesce(F.col("_lc"), F.col("component"))
-                        .alias("component"),
-                    )
-                )
-                ckpts.free(new_ids)
-                new_labels, new_ids = jumped, jumped_ids
-            else:
-                new_labels = new_labels.drop("_chg")
             ckpts.free(lids)
-            labels, lids = new_labels, new_ids
+            labels, lids = step.drop("_own"), step_ids
             if changed == 0:
                 converged = True
                 break
-            if rounds >= 2:
-                batch = min(batch * 2, 8)
+            # hook, then jump, on the materialized step (reading a LAZY
+            # frame twice would recompute the whole step). Hook: each
+            # node whose label dropped offers the new label to the node
+            # its OLD label named, so the whole tree hanging from that
+            # node moves with it. Jump: label(v) <- label(label(v)), the
+            # label's own row found in a window over the label key (total:
+            # label values are node ids; coalesce is belt-and-braces).
+            # Both are aggregates over unions, never self-joins: a
+            # checkpoint keeps its plan's size estimate, which a join
+            # MULTIPLIES, so a self-join per round squares it and the
+            # driver's BigInt stats arithmetic grows as 2^rounds digits.
+            hooked = (
+                step.select("node", "component").unionByName(
+                    step.where(F.col("component") < F.col("_own"))
+                    .select(F.col("_own").alias("node"), "component"))
+                .groupBy("node").agg(F.min("component").alias("component")))
+            by_label = Window.partitionBy("_k")
+            jumped, jumped_ids = ckpts.take(
+                hooked.select(F.col("component").alias("_k"), "node",
+                              F.lit(None).alias("_p"))
+                .unionByName(hooked.select(
+                    F.col("node").alias("_k"), F.lit(None).alias("node"),
+                    F.col("component").alias("_p")))
+                .select("node", F.coalesce(F.max("_p").over(by_label),
+                                           F.col("_k")).alias("component"))
+                .where(F.col("node").isNotNull()))
+            ckpts.free(lids)
+            labels, lids = jumped, jumped_ids
     except BaseException:
         # a failed call leaves no blocks behind — including the
         # pre-resize edges, which only the first probe would free
         ckpts.free_all()
         raise
-    finally:
-        conf.set("spark.sql.adaptive.enabled", prev_aqe)
-        conf.set("spark.sql.shuffle.partitions", prev_parts)
     ckpts.free(eids)
     if stats_out is not None:
         stats_out["rounds"] = rounds
     if not converged:
         # returning the partial labels would silently keep several
-        # "canonical" docs per giant cluster (r4 review) — fail loudly;
-        # a chain needing >max_iterations rounds means the corpus has a
-        # transitive near-dup path that long
+        # "canonical" docs per giant cluster — fail loudly; a chain
+        # needing >max_iterations rounds means the corpus has a very
+        # long transitive near-dup path
         ckpts.free(lids)
         raise RuntimeError(
             f"connected_components did not converge in {max_iterations} "

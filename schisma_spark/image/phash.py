@@ -157,7 +157,7 @@ def image_keep_list(
     ``invalid_signature`` (compute_phash yields NULL for failed decodes),
     near-dup clusters keep exactly the min-id member. The image twin of
     the text and embedding keep-lists; ``keep_kw`` forwards banding /
-    ``max_bucket_size`` / ``cc_shortcut``."""
+    ``max_bucket_size``."""
     from schisma_spark.functions.curate import signature_keep_list
 
     hashed = compute_phash(df, keep_cols=[id_col])

@@ -99,9 +99,9 @@ def plan_remaining(
     batch_partitions: int | None = None,
     max_partitions: int = MAX_PARTITIONS,
 ) -> tuple[DataFrame | None, list]:
-    """The resume planner shared by manifest- and runner-level APIs:
-    returns (sub_df over not-yet-done partitions, their values), or
-    (None, []) when everything is done.
+    """The resume planner of ``ValidationRun.run_resumable``: returns
+    (sub_df over not-yet-done partitions, their values), or (None, [])
+    when everything is done.
 
     The isin filter uses the column's NATIVE values so the In-filter pushes
     down to the file source (a cast-to-string blocked pushdown). A NULL
@@ -147,25 +147,3 @@ def verdict_records(verd_rows, part_col: str,
         for r in verd_rows
     ]
 
-
-def run_resumable(
-    df: DataFrame,
-    part_col: str,
-    validate_fn,
-    manifest: Manifest,
-    lineage: dict | None = None,
-    batch_partitions: int | None = None,
-) -> list[dict]:
-    """Run ``validate_fn(sub_df) -> verdicts DataFrame`` (must output
-    ``part_col, n_rows, n_violations, n_bad_rows, verdict``) over only the
-    partitions the manifest has not yet marked done; append one manifest
-    record per finished partition. Returns the records written this run.
-
-    ``batch_partitions`` limits how many partitions this invocation
-    processes (used by the kill/resume test to simulate interruption)."""
-    sub, remaining = plan_remaining(df, part_col, manifest, batch_partitions)
-    if sub is None:
-        return []
-    recs = verdict_records(validate_fn(sub).collect(), part_col, lineage)
-    manifest.append(recs)
-    return recs

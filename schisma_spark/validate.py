@@ -70,10 +70,15 @@ class ValidationResult:
         """Flat violation rows: ``keys... code where expected received value
         message type_index`` — the engine twin of the reference's flattened
         error list (schisma.mjs:117-133)."""
-        ann = self.df.select(*self.keys, self.viols_col.alias("_viols"))
-        return ann.select(
-            *self.keys, F.explode("_viols").alias("_v")
-        ).select(*self.keys, *[F.col(f"_v.{f}").alias(f) for f in VIOLATION_FIELDS])
+        keys = tuple(self.keys)
+        key_cols, explode, fields = cached_column(
+            ("violations", keys),
+            lambda: (tuple(F.col(k) for k in keys),
+                     F.explode("_viols").alias("_v"),
+                     tuple(F.col(f"_v.{f}").alias(f)
+                           for f in VIOLATION_FIELDS)))
+        ann = self.df.select(*key_cols, self.viols_col.alias("_viols"))
+        return ann.select(*key_cols, explode).select(*key_cols, *fields)
 
     @property
     def row_verdicts(self) -> DataFrame:
@@ -101,18 +106,9 @@ class ValidationResult:
         )
 
     def overall(self) -> DataFrame:
-        n = self._count
-        return (
-            self.df.agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.coalesce(F.sum(n), F.lit(0)).alias("n_violations"),
-                F.coalesce(F.sum((n > 0).cast("long")), F.lit(0)).alias("n_bad_rows"),
-            )
-            .withColumn(
-                "verdict",
-                F.when(F.col("n_violations") == 0, F.lit(PASS)).otherwise(F.lit(FAIL)),
-            )
-        )
+        """The whole-frame verdict: :meth:`verdicts` over no partition
+        columns (``DataFrame.agg`` is ``groupBy().agg``)."""
+        return self.verdicts([])
 
 
 def validate(

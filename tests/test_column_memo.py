@@ -316,6 +316,39 @@ def test_second_identical_call_costs_a_quarter_of_the_round_trips(
         del client.send_command
 
 
+def test_warm_violations_access_reuses_its_projection(spark, events):
+    """``ValidationResult.violations`` takes its explode and per-field
+    Columns from the memo, keyed on the key names: a warm access sends
+    only its selects, at least two commands (``col`` + ``alias``) per
+    violation field fewer than an access that builds the projection."""
+    from schisma_spark.result import VIOLATION_FIELDS
+
+    res = validate_variant(events, "payload",
+                           schema({"k": Field(typeof=[float, Null])}),
+                           keys=["event_id"])
+    client = spark.sparkContext._gateway._gateway_client
+    real = client.send_command
+    sent = [0]
+
+    def counting(cmd, *a, **kw):
+        if not cmd.startswith("m\n"):  # py4j's GC deletes vary by run
+            sent[0] += 1
+        return real(cmd, *a, **kw)
+
+    def access() -> int:
+        sent[0] = 0
+        res.violations
+        return sent[0]
+
+    client.send_command = counting
+    try:
+        session._memo.pop(("violations", ("event_id",)), None)
+        cold, warm = access(), access()
+    finally:
+        del client.send_command
+    assert warm <= cold - 2 * len(VIOLATION_FIELDS), (cold, warm)
+
+
 # -- zip guard -------------------------------------------------------------
 
 

@@ -460,41 +460,82 @@ def test_banding_rejects_voided_pigeonhole(spark):
                              n_bands=4).count() >= 0
 
 
-def test_connected_components_shortcut_log_rounds(spark):
-    """r4 VERDICT #6: shortcut=True pointer-jumps labels each round, so a
-    planted 200-node transitive CHAIN (the adversarial diameter that
-    plain propagation needs 199 rounds for) converges in
-    <= ceil(log2(200)) + 1 rounds with the identical labeling."""
+def test_connected_components_log_rounds(spark):
+    """Hook and pointer jump after every round that changed labels: a
+    planted 200-node transitive CHAIN (plain propagation needs 199
+    rounds) converges in <= ceil(log2(200)) + 1 rounds, in id order and
+    with its ids shuffled along the chain (where a jump without the hook
+    needs dozens of rounds), and a budget too small for it raises
+    instead of returning partial labels."""
     import math
+    import random
 
     from schisma_spark.functions.dedup import connected_components
 
     n = 200
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(n - 1)], "id_a long, id_b long"
-    )
-    stats: dict = {}
-    got = {r["node"]: r["component"]
-           for r in connected_components(chain, shortcut=True,
-                                         stats_out=stats).collect()}
-    assert got == {i: 0 for i in range(n)}
-    assert stats["rounds"] <= math.ceil(math.log2(n)) + 1
+    shuffled = list(range(n))
+    random.Random(3).shuffle(shuffled)
+    for order in (list(range(n)), shuffled):
+        chain = spark.createDataFrame(list(zip(order, order[1:])),
+                                      "id_a long, id_b long")
+        stats: dict = {}
+        got = {r["node"]: r["component"] for r in
+               connected_components(chain, stats_out=stats).collect()}
+        assert got == {i: 0 for i in range(n)}
+        assert stats["rounds"] <= math.ceil(math.log2(n)) + 1, order[:3]
 
-    # plain propagation on the same chain hits the loud non-convergence
-    # guard at the default budget — the failure mode shortcut removes
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(chain, max_iterations=20)
+        connected_components(chain, max_iterations=2)
 
-    # same fixpoint on a mixed graph, both modes
-    pairs = spark.createDataFrame(
-        [(0, 1), (1, 2), (2, 3), (10, 11), (20, 21), (21, 22)],
-        "id_a long, id_b long",
+
+def test_connected_components_leaves_session_conf_alone(spark, monkeypatch):
+    """The rounds run on the session's own AQE and shuffle-partition
+    settings: concurrent queries on the session never see them change,
+    not even while a call is in flight (read at every round's probe)."""
+    from schisma_spark.functions import dedup
+    from schisma_spark.functions.dedup import connected_components
+
+    keys = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    before = {k: spark.conf.get(k) for k in keys}
+    seen = []
+    real = dedup.materialize
+
+    def recording(df, *metrics):
+        seen.append({k: spark.conf.get(k) for k in keys})
+        return real(df, *metrics)
+
+    monkeypatch.setattr(dedup, "materialize", recording)
+    pairs = spark.createDataFrame([(i, i + 1) for i in range(6)],
+                                  "id_a long, id_b long")
+    assert {r["component"] for r in
+            connected_components(pairs).collect()} == {0}
+    assert len(seen) >= 2 and all(s == before for s in seen), seen
+    assert {k: spark.conf.get(k) for k in keys} == before
+
+
+def test_cc_shortcut_options_are_gone(spark):
+    """The pointer-jumping path is the only one, so its old switch is
+    rejected everywhere it used to be accepted (the job's flag:
+    test_job_entrypoint.py)."""
+    from schisma_spark.functions.curate import (
+        curation_keep_list, embedding_keep_list, signature_keep_list,
     )
-    plain = {(r["node"], r["component"])
-             for r in connected_components(pairs).collect()}
-    fast = {(r["node"], r["component"])
-            for r in connected_components(pairs, shortcut=True).collect()}
-    assert plain == fast
+    from schisma_spark.functions.dedup import connected_components
+
+    pairs = spark.createDataFrame([(0, 1)], "id_a long, id_b long")
+    with pytest.raises(TypeError, match="shortcut"):
+        connected_components(pairs, shortcut=True)
+    docs = spark.createDataFrame([(1, "a b c d e f")],
+                                 "doc_id long, text string")
+    with pytest.raises(TypeError, match="cc_shortcut"):
+        curation_keep_list(docs, cc_shortcut=True)
+    sigs = spark.createDataFrame([(1, 7)], "id long, sig long")
+    with pytest.raises(TypeError, match="cc_shortcut"):
+        signature_keep_list(sigs, "id", "sig", cc_shortcut=True)
+    vecs = spark.createDataFrame([(1, [1.0, 0.0])],
+                                 "id long, v array<double>")
+    with pytest.raises(TypeError, match="cc_shortcut"):
+        embedding_keep_list(vecs, "id", "v", 2, cc_shortcut=True)
 
 
 def test_connected_components_rejects_max_iterations_below_two(spark):

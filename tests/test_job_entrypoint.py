@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import json
 import sys
+from pathlib import Path
 
 import pytest
 
@@ -119,6 +120,18 @@ def test_curate_corpus_job_end_to_end(spark, tmp_path, capsys):
     res3 = json.loads(out3.out.strip().splitlines()[-1])
     assert res3["rows_decided"] == 60
     assert spark.read.parquet(str(tmp_path / "dec")).count() == 120
+
+
+def test_curate_corpus_job_rejects_cc_shortcut(capsys):
+    """Clusters always pointer-jump, so the old ``--cc-shortcut`` flag is
+    an argparse error, raised before any session is attached."""
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "jobs"))
+    import curate_corpus_job
+
+    with pytest.raises(SystemExit):
+        curate_corpus_job.main(["--input", "x", "--decisions", "y",
+                                "--manifest", "z", "--cc-shortcut"])
+    assert "--cc-shortcut" in capsys.readouterr().err
 
 
 def test_job_baseline_compare_errors_propagate(spark, tmp_path, capsys):

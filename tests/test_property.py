@@ -305,3 +305,75 @@ def test_hamming_near_dups_equals_all_pairs(spark, n_bands, band_bits):
     capped = [pairs(df.repartition(n), cap=2) for n in (1, 3, 7)]
     assert capped[0] == capped[1] == capped[2]
     assert capped[0] < want
+
+
+# -- connected components against a union-find ---------------------------------
+
+_shape = st.one_of(
+    st.integers(2, 200).flatmap(
+        lambda n: st.tuples(st.just("chain"), st.permutations(range(n)))),
+    st.integers(2, 30).map(lambda n: ("star", list(range(n)))),
+    st.integers(3, 6).map(lambda n: ("clique", list(range(n)))),
+    st.just(("pair", [0, 1])),
+)
+
+
+def _shape_edges(kind: str, ids: list) -> list:
+    if kind == "chain":  # ``ids`` is a permutation: chain order != id order
+        return list(zip(ids, ids[1:]))
+    if kind == "star":
+        return [(ids[len(ids) // 2], i) for i in ids if i != ids[len(ids) // 2]]
+    if kind == "clique":
+        return list(itertools.combinations(ids, 2))
+    return [tuple(ids)]
+
+
+def _union_find(edges) -> dict:
+    parent: dict = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
+@pytest.mark.parametrize("ids", ["long", "string"])
+def test_connected_components_equals_union_find(spark, ids):
+    """CC's fixpoint contract: every node's label is the least id of its
+    component, i.e. exactly a union-find's root under ``min``. Random
+    chains (up to 200 nodes, in shuffled id order, plus one 200-chain
+    always), stars, cliques and isolated pairs; string ids compare
+    lexicographically (``"n10" < "n9"``). All shapes run as ONE graph
+    (disjoint id ranges) with the input spread over 1 and 7 partitions."""
+    from schisma_spark.functions.dedup import connected_components
+
+    shapes = [("chain", list(range(199, -1, -1)))]
+
+    @given(st.lists(_shape, min_size=1, max_size=4))
+    @settings(max_examples=25, deadline=None, derandomize=True,
+              database=None)
+    def draw(s):
+        shapes.extend(s)
+
+    draw()
+    edges, base = [], 0
+    for kind, local in shapes:
+        edges += [(base + a, base + b) for a, b in _shape_edges(kind, local)]
+        base += len(local)
+    if ids == "string":
+        edges = [(f"n{a}", f"n{b}") for a, b in edges]
+    want = _union_find(edges)
+    assert max(Counter(want.values()).values()) == 200
+    df = spark.createDataFrame(edges, f"id_a {ids}, id_b {ids}")
+    for n in (1, 7):
+        got = {r["node"]: r["component"] for r in
+               connected_components(df.repartition(n)).collect()}
+        assert got == want, n

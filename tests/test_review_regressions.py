@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from schisma_spark import Field, schema
-from schisma_spark.manifest import Manifest, run_resumable
+from schisma_spark.manifest import Manifest
 from schisma_spark.runner import RunConfig, ValidationRun
 from schisma_spark.image.fixtures import images_schema_dsl, images_table
 
@@ -43,23 +43,18 @@ def test_resume_with_null_partition(spark, tmp_path):
         T.StructType([T.StructField("part", T.IntegerType()),
                       T.StructField("v", T.DoubleType())]),
     )
-    sch = schema({"v": float})
-    m = Manifest(str(tmp_path / "m"))
-    recs = run_resumable(
-        df, "part",
-        lambda s: sch.validate(s, keys=["part"],
-                               ignore_unexpected=True).verdicts(["part"]),
-        m,
-    )
-    assert {r["partition"] for r in recs} == {"None", "1", "2"}
+    run = ValidationRun(schema({"v": float}),
+                        RunConfig(part_col="part", keys=(), unique_on=()))
+    mpath = str(tmp_path / "m")
+    # a batch of 2 then the rest: the NULL partition goes through the
+    # resume planner's explicit isNull branch, whichever batch holds it
+    first = run.run_resumable(df, mpath, batch_partitions=2)
+    rest = run.run_resumable(df, mpath)
+    recs = first.manifest_records + rest.manifest_records
+    assert sorted(r["partition"] for r in recs) == ["1", "2", "None"]
     assert sum(r["n_rows"] for r in recs) == 3
-    # second run: nothing remains (NULL partition included)
-    assert run_resumable(
-        df, "part",
-        lambda s: sch.validate(s, keys=["part"],
-                               ignore_unexpected=True).verdicts(["part"]),
-        m,
-    ) == []
+    # third run: nothing remains (NULL partition included)
+    assert run.run_resumable(df, mpath).manifest_records == []
 
 
 def test_sinks_written_before_manifest_commit(spark, tmp_path):
