@@ -11,7 +11,7 @@ min-id member failed a quality/exact gate (r4 review finding).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from schisma_spark.functions.dedup import connected_components, minhash_near_dups
@@ -63,6 +63,30 @@ def stratified_sample(
     )
 
 
+def _cluster_keep_list(df: DataFrame, id_col: str, valid: Column,
+                       pairs: DataFrame, invalid_reason: str) -> DataFrame:
+    """``id_col, keep, reason`` from a validity gate and the near-dup pairs
+    of the valid rows: ``invalid_reason`` -> ``near_dup`` (in a cluster and
+    not its label, which :func:`connected_components` makes the min
+    member) -> ``ok``. The shared body of the payload keep lists."""
+    base = df.select(F.col(id_col), valid.alias("_valid"))
+    cc = (connected_components(pairs)
+          .withColumnRenamed("node", id_col)
+          .withColumnRenamed("component", "_cluster"))
+    reason = (
+        F.when(~F.col("_valid"), invalid_reason)
+        .when(F.col("_cluster").isNotNull()
+              & (F.col(id_col) != F.col("_cluster")), "near_dup")
+        .otherwise("ok")
+    )
+    return (
+        base.join(cc, id_col, "left")
+        .select(F.col(id_col), reason.alias("reason"))
+        .select(F.col(id_col), (F.col("reason") == "ok").alias("keep"),
+                "reason")
+    )
+
+
 def embedding_keep_list(
     df: DataFrame,
     id_col: str,
@@ -102,25 +126,10 @@ def embedding_keep_list(
     # operator (this local copy predated similarity.valid_vector and
     # could drift — review finding)
     valid = valid_vector(F.col(vec_col))
-    base = df.select(F.col(id_col), valid.alias("_valid"))
     if pairs is None:
         pairs = cosine_near_dups(df.where(valid), id_col, vec_col, dim,
                                  threshold, **near_dup_kw)
-    cc = (connected_components(pairs)
-          .withColumnRenamed("node", id_col)
-          .withColumnRenamed("component", "_cluster"))
-    reason = (
-        F.when(~F.col("_valid"), "invalid_vector")
-        .when(F.col("_cluster").isNotNull()
-              & (F.col(id_col) != F.col("_cluster")), "near_dup")
-        .otherwise("ok")
-    )
-    return (
-        base.join(cc, id_col, "left")
-        .select(F.col(id_col), reason.alias("reason"))
-        .select(F.col(id_col), (F.col("reason") == "ok").alias("keep"),
-                "reason")
-    )
+    return _cluster_keep_list(df, id_col, valid, pairs, "invalid_vector")
 
 
 def signature_keep_list(
@@ -151,25 +160,10 @@ def signature_keep_list(
     from schisma_spark.functions.dedup import hamming_near_dups
 
     valid = F.col(sig_col).isNotNull()
-    base = df.select(F.col(id_col), valid.alias("_valid"))
     if pairs is None:
         pairs = hamming_near_dups(df.where(valid), sig_col, id_col,
                                   max_hamming=max_hamming, **banding_kw)
-    cc = (connected_components(pairs)
-          .withColumnRenamed("node", id_col)
-          .withColumnRenamed("component", "_cluster"))
-    reason = (
-        F.when(~F.col("_valid"), "invalid_signature")
-        .when(F.col("_cluster").isNotNull()
-              & (F.col(id_col) != F.col("_cluster")), "near_dup")
-        .otherwise("ok")
-    )
-    return (
-        base.join(cc, id_col, "left")
-        .select(F.col(id_col), reason.alias("reason"))
-        .select(F.col(id_col), (F.col("reason") == "ok").alias("keep"),
-                "reason")
-    )
+    return _cluster_keep_list(df, id_col, valid, pairs, "invalid_signature")
 
 
 def curation_keep_list(

@@ -521,6 +521,44 @@ def minhash_candidate_pairs(
     )
 
 
+def _shingle_sets(df: DataFrame, text_col: str, id_col: str,
+                  shingle_k: int, h32) -> DataFrame:
+    """``_id, hs``: each document's distinct 32-bit word-shingle hashes."""
+    return df.select(
+        F.col(id_col).alias("_id"),
+        F.array_distinct(
+            F.transform(word_shingles(F.col(text_col), shingle_k),
+                        lambda s: h32(s))
+        ).alias("hs"),
+    )
+
+
+def _with_shingle_sets(cands: DataFrame, df: DataFrame, text_col: str,
+                       id_col: str, shingle_k: int, h32) -> DataFrame:
+    """``cands`` (``id_a, id_b``) with both sides' shingle sets as
+    ``hs_a, hs_b`` — the verify input of the near-dup operators.
+
+    Hashes ONLY the docs that appear in a candidate pair: a semi-join
+    against the (small) candidate id set before the per-shingle hashing —
+    at near-dup-sparse corpora this hashes O(candidates) docs, not all of
+    them (measured: the all-docs version cost +3 s at sf0.1)."""
+    cand_ids = (
+        cands.select(F.col("id_a").alias(id_col))
+        .unionByName(cands.select(F.col("id_b").alias(id_col)))
+        # no distinct (r7): a left-semi probe tolerates duplicate build
+        # rows, so the dedup was one extra exchange+stage for nothing
+    )
+    sets = _shingle_sets(df.join(cand_ids, id_col, "leftsemi"), text_col,
+                         id_col, shingle_k, h32)
+    return (
+        cands
+        .join(sets.select(F.col("_id").alias("id_a"),
+                          F.col("hs").alias("hs_a")), "id_a")
+        .join(sets.select(F.col("_id").alias("id_b"),
+                          F.col("hs").alias("hs_b")), "id_b")
+    )
+
+
 def minhash_near_dups(
     df: DataFrame,
     text_col: str,
@@ -552,27 +590,9 @@ def minhash_near_dups(
                                     max_bucket_size=max_bucket_size,
                                     skip_empty=threshold > 0)
     h32 = hash32_native if hasher == "native" else hash32
-    # hash ONLY the docs that appear in a candidate pair: a semi-join
-    # against the (small) candidate id set before the per-shingle hashing —
-    # at near-dup-sparse corpora this hashes O(candidates) docs, not all
-    # of them (measured: the all-docs version cost +3 s at sf0.1)
-    cand_ids = (
-        cands.select(F.col("id_a").alias(id_col))
-        .unionByName(cands.select(F.col("id_b").alias(id_col)))
-        # no distinct (r7): a left-semi probe tolerates duplicate build
-        # rows, so the dedup was one extra exchange+stage for nothing
-    )
-    sh = df.join(cand_ids, id_col, "leftsemi").select(
-        F.col(id_col).alias("_id"),
-        F.array_distinct(
-            F.transform(word_shingles(F.col(text_col), shingle_k),
-                        lambda s: h32(s))
-        ).alias("sh"),
-    )
     return (
-        cands.join(sh.withColumnRenamed("_id", "id_a").withColumnRenamed("sh", "sh_a"), "id_a")
-        .join(sh.withColumnRenamed("_id", "id_b").withColumnRenamed("sh", "sh_b"), "id_b")
-        .select("id_a", "id_b", jaccard(F.col("sh_a"), F.col("sh_b")).alias("jac"))
+        _with_shingle_sets(cands, df, text_col, id_col, shingle_k, h32)
+        .select("id_a", "id_b", jaccard(F.col("hs_a"), F.col("hs_b")).alias("jac"))
         .where(F.col("jac") >= threshold)
     )
 
@@ -616,17 +636,8 @@ def containment_near_dups(
     ``minhash_near_dups``'s verify stage)."""
     h32 = hash32_native if hasher == "native" else hash32
     base = df.where(F.size(words(F.col(text_col))) >= shingle_k)
-
-    def hashed(src: DataFrame) -> DataFrame:
-        return src.select(
-            F.col(id_col).alias("_id"),
-            F.array_distinct(
-                F.transform(word_shingles(F.col(text_col), shingle_k),
-                            lambda s: h32(s))
-            ).alias("hs"),
-        )
-
-    inv = hashed(base).select("_id", F.explode("hs").alias("h"))
+    inv = (_shingle_sets(base, text_col, id_col, shingle_k, h32)
+           .select("_id", F.explode("hs").alias("h")))
     if max_doc_freq is not None:
         hot = (inv.groupBy("h").agg(F.count(F.lit(1)).alias("_df"))
                .where(F.col("_df") > max_doc_freq).select("h"))
@@ -638,17 +649,6 @@ def containment_near_dups(
         .where(F.col("_shared") >= min_shared)
         .select("id_a", "id_b")
     )
-    cand_ids = (
-        cands.select(F.col("id_a").alias("_cid"))
-        .unionByName(cands.select(F.col("id_b").alias("_cid")))
-        # no distinct (r7): left-semi build side, duplicates harmless
-    )
-    # semi-join BEFORE hashing (the minhash_near_dups lesson): the
-    # verify side re-hashes only documents that appear in a candidate
-    # pair, not the whole corpus
-    full = hashed(
-        base.join(cand_ids,
-                  F.col(id_col) == F.col("_cid"), "leftsemi"))
     inter = F.size(F.array_intersect(F.col("hs_a"), F.col("hs_b")))
 
     def body(i: Column) -> Column:
@@ -660,11 +660,7 @@ def containment_near_dups(
         )
 
     return (
-        cands
-        .join(full.select(F.col("_id").alias("id_a"),
-                          F.col("hs").alias("hs_a")), "id_a")
-        .join(full.select(F.col("_id").alias("id_b"),
-                          F.col("hs").alias("hs_b")), "id_b")
+        _with_shingle_sets(cands, base, text_col, id_col, shingle_k, h32)
         .select("id_a", "id_b", bind(inter, body).alias("_m"))
         .select("id_a", "id_b", "_m.cont_a_in_b", "_m.cont_b_in_a", "_m.jac")
         .where(F.greatest(F.col("cont_a_in_b"), F.col("cont_b_in_a"))

@@ -1,13 +1,15 @@
 """Arrow-batched decode + fidelity checks (SURVEY §2.B E8; reference analog
 $unmarshal + $validate, schisma.mjs:138-172).
 
-``decode_validate`` is an iterator-of-batches ``mapInPandas`` — the one
-place Python runs per batch (never per row): it decodes each image, checks
-the container, compares decoded pixels against the deterministically
-regenerated reference (PSNR >= 40 dB for lossy formats, exact allclose for
-lossless — BASELINE.json:6,15), and cross-checks the declared w/h. Caption
-equality is NOT done here — it's a plain column comparison after a join
-(BASELINE.json:15 'no per-row Python' for things Columns can do).
+``decode_validate`` runs through ``map_rows``, the Arrow row mapper
+every per-row Python operator shares (iterator-of-batches
+``mapInPandas``: Python runs per batch, never per row). It decodes each
+image, checks the container, compares decoded pixels against the
+deterministically regenerated reference (PSNR >= 40 dB for lossy formats,
+exact allclose for lossless — BASELINE.json:6,15), and cross-checks the
+declared w/h. Caption equality is NOT done here — it's a plain column
+comparison after a join (BASELINE.json:15 'no per-row Python' for things
+Columns can do).
 
 Scale notes: the stats path never calls this (column pruning keeps
 ``bytes`` unread there); Arrow batch size for fat binary rows is capped via
@@ -16,9 +18,8 @@ Scale notes: the stats path never calls this (column pruning keeps
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Callable, Iterator
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -66,31 +67,56 @@ def _check_one(image_id, data, fmt, w, h) -> dict:
     return out
 
 
-def decode_validate(df: DataFrame, keep_cols: list[str] | None = None) -> DataFrame:
-    """Append decode/fidelity columns. Input needs
-    ``image_id, bytes, w, h, fmt``; output adds DECODE_RESULT_FIELDS and
-    drops ``bytes`` (never carry the payload past the decode stage)."""
-    keep_cols = keep_cols or ["image_id", "w", "h", "fmt", "part"]
-    keep_cols = [c for c in keep_cols if c in df.columns]
-    in_schema = df.select(*keep_cols, "bytes").schema
-    out_schema = T.StructType(
-        [f for f in in_schema.fields if f.name != "bytes"]
-        + DECODE_RESULT_FIELDS
-    )
+# nullable pandas dtype per Spark result type (other types stay object,
+# which Arrow converts value by value): a plain list of dicts makes an int
+# column that holds a None float64, which rounds any value above 2**53
+_NULLABLE_DTYPES = {
+    T.LongType: "Int64", T.IntegerType: "Int32", T.BooleanType: "boolean",
+    T.DoubleType: "Float64",
+}
+
+
+def map_rows(df: DataFrame, keep_cols: list[str], read_cols: tuple[str, ...],
+             fields: list[T.StructField],
+             per_row: Callable[..., dict]) -> DataFrame:
+    """The one Arrow row mapper behind every per-row Python operator:
+    iterator ``mapInPandas``, so Python runs per batch and never per row.
+
+    ``keep_cols`` contract: the columns of ``keep_cols`` that ``df`` has
+    (``bytes`` never, so the payload never travels past the decode stage)
+    are carried through in front of ``fields``. ``per_row`` is called with
+    the values of ``read_cols`` for each row and returns a dict keyed by
+    the names of ``fields``; read columns that were not kept are dropped.
+    Each result column gets the nullable pandas dtype of its field. The
+    mapper catches nothing: error handling is ``per_row``'s own."""
+    kept = [c for c in dict.fromkeys(keep_cols)
+            if c in df.columns and c != "bytes"]
+    cols = kept + [c for c in dict.fromkeys(read_cols) if c not in kept]
+    out_schema = T.StructType([df.schema[c] for c in kept] + list(fields))
+    dtypes = [(f.name, _NULLABLE_DTYPES.get(type(f.dataType), object))
+              for f in fields]
 
     def mapper(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         worker_init()
         for b in batches:
-            res = [
-                _check_one(r.image_id, r.bytes, r.fmt, r.w, r.h)
-                for r in b.itertuples(index=False)
-            ]
-            rb = pd.DataFrame(res)
-            yield pd.concat(
-                [b.drop(columns=["bytes"]).reset_index(drop=True), rb], axis=1
-            )
+            res = [per_row(*vals) for vals in zip(*(b[c] for c in read_cols))]
+            out = b[kept].reset_index(drop=True)
+            for name, dtype in dtypes:
+                out[name] = pd.array([r[name] for r in res], dtype=dtype)
+            yield out
 
-    return df.select(*keep_cols, "bytes").mapInPandas(mapper, out_schema)
+    return df.select(*cols).mapInPandas(mapper, out_schema)
+
+
+def decode_validate(df: DataFrame, keep_cols: list[str] | None = None) -> DataFrame:
+    """Append DECODE_RESULT_FIELDS to the kept columns. Input needs
+    ``image_id, bytes, w, h, fmt``. ``keep_cols`` (default ``image_id, w,
+    h, fmt, part``) are the input columns carried through, those absent
+    from ``df`` skipped; the columns the decode reads need not be kept,
+    and ``bytes`` is never carried (:func:`map_rows`)."""
+    return map_rows(df, keep_cols or ["image_id", "w", "h", "fmt", "part"],
+                    ("image_id", "bytes", "fmt", "w", "h"),
+                    DECODE_RESULT_FIELDS, _check_one)
 
 
 def caption_violations(df: DataFrame, ref: DataFrame) -> DataFrame:

@@ -10,26 +10,25 @@ the same pixels (raw/bmp/png — all lossless here) hash identically; small
 pixel noise moves few bits, so near-duplicate IMAGES are pairs within a
 small Hamming distance.
 
-Scale shape: hashing is the same iterator ``mapInPandas`` discipline as
-``decode_validate`` (numpy-vectorized per batch, bytes dropped after the
-hash — never carry payload past the decode stage); pairing reuses the
-generic 16-bit banded-Hamming join (``functions.dedup.hamming_near_dups``)
-— O(rows * 4) shuffle, never all-pairs, d<=3 pigeonhole-exact.
+Scale shape: hashing goes through the same Arrow row mapper as
+``decode_validate`` (``decode.map_rows``: iterator ``mapInPandas``, bytes
+dropped after the hash — never carry payload past the decode stage);
+pairing reuses the generic 16-bit banded-Hamming join
+(``functions.dedup.hamming_near_dups``) — O(rows * 4) shuffle, never
+all-pairs, d<=3 pigeonhole-exact.
 """
 
 from __future__ import annotations
 
 from functools import lru_cache
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from schisma_spark.image.decode import map_rows
 from schisma_spark.image.synth import decode_image
-from schisma_spark.session import worker_init
 
 PHASH_SIZE = 32   # resize target
 PHASH_LOW = 8     # low-frequency block -> 64 bits
@@ -91,38 +90,25 @@ def phash64_pixels(px: np.ndarray) -> int:
     return v
 
 
+def _phash_or_none(fmt, w, h, data) -> int | None:
+    try:
+        return phash64_pixels(decode_image(bytes(data), fmt, w, h))
+    except Exception:
+        return None
+
+
 def compute_phash(df: DataFrame,
                   keep_cols: list[str] | None = None,
                   out_col: str = "phash64") -> DataFrame:
     """Append ``out_col`` (int64 perceptual hash; NULL when the payload
-    fails to decode) and DROP ``bytes``. Input needs
-    ``image_id, bytes, fmt, w, h``."""
-    keep_cols = keep_cols or ["image_id", "w", "h", "fmt", "part"]
-    keep_cols = [c for c in keep_cols if c in df.columns]
-    # the decoder needs fmt/w/h even when the caller doesn't keep them
-    work_cols = keep_cols + [c for c in ("fmt", "w", "h")
-                             if c not in keep_cols]
-    in_schema = df.select(*keep_cols, "bytes").schema
-    out_schema = T.StructType(
-        [f for f in in_schema.fields if f.name != "bytes"]
-        + [T.StructField(out_col, T.LongType())]
-    )
-
-    def mapper(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        worker_init()
-        for b in batches:
-            vals = []
-            for r in b.itertuples(index=False):
-                try:
-                    px = decode_image(bytes(r.bytes), r.fmt, r.w, r.h)
-                    vals.append(phash64_pixels(px))
-                except Exception:
-                    vals.append(None)
-            out = b[keep_cols].reset_index(drop=True)
-            out[out_col] = pd.array(vals, dtype="Int64")
-            yield out
-
-    return df.select(*work_cols, "bytes").mapInPandas(mapper, out_schema)
+    fails to decode) to the kept columns. Input needs ``bytes, fmt, w,
+    h``. ``keep_cols`` (default ``image_id, w, h, fmt, part``) follows the
+    one contract of :func:`decode.map_rows`: absent columns skipped, read
+    columns need not be kept, ``bytes`` never carried."""
+    return map_rows(df, keep_cols or ["image_id", "w", "h", "fmt", "part"],
+                    ("fmt", "w", "h", "bytes"),
+                    [T.StructField(out_col, T.LongType())],
+                    lambda *r: {out_col: _phash_or_none(*r)})
 
 
 def image_near_dups(

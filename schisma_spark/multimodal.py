@@ -23,13 +23,14 @@ Design rules carried from the image path:
 from __future__ import annotations
 
 import hashlib
-from typing import Callable, Iterator
+from typing import Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
+from schisma_spark.image.decode import map_rows
 from schisma_spark.image.synth import decode_image
 from schisma_spark.session import worker_init
 
@@ -120,14 +121,10 @@ def image_features(df: DataFrame, out_w: int = 8, out_h: int = 8,
                    hist_bins: int = 8,
                    keep_cols: list[str] | None = None) -> DataFrame:
     """Decode -> resize -> per-channel stats + luma histogram, one
-    mapInPandas pass; drops ``bytes``. Input needs bytes/fmt/w/h."""
-    keep_cols = [c for c in (keep_cols or ["image_id", "part"])
-                 if c in df.columns]
-    in_schema = df.select(*keep_cols, "bytes", "fmt", "w", "h").schema
-    out_schema = T.StructType(
-        [f for f in in_schema.fields if f.name not in ("bytes", "fmt", "w", "h")]
-        + IMAGE_FEATURES_FIELDS
-    )
+    mapInPandas pass. Input needs bytes/fmt/w/h. ``keep_cols`` (default
+    ``image_id, part``) follows the one contract of :func:`map_rows`:
+    absent columns skipped, read columns need not be kept, ``bytes``
+    never carried."""
 
     def one(data, fmt, w, h):
         try:
@@ -147,19 +144,8 @@ def image_features(df: DataFrame, out_w: int = 8, out_h: int = 8,
             "luma_hist": hist.astype("int64").tolist(),
         }
 
-    def mapper(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        worker_init()
-        for b in batches:
-            feats = pd.DataFrame(
-                [one(r.bytes, r.fmt, r.w, r.h) for r in b.itertuples(index=False)]
-            )
-            yield pd.concat(
-                [b[keep_cols].reset_index(drop=True), feats], axis=1
-            )
-
-    return df.select(*keep_cols, "bytes", "fmt", "w", "h").mapInPandas(
-        mapper, out_schema
-    )
+    return map_rows(df, keep_cols or ["image_id", "part"],
+                    ("bytes", "fmt", "w", "h"), IMAGE_FEATURES_FIELDS, one)
 
 
 # ---------------------------------------------------------------------------
@@ -176,35 +162,27 @@ AUDIO_FEATURES_FIELDS = [
 def audio_features(df: DataFrame, id_col: str = "clip_id",
                    bytes_col: str = "bytes",
                    strict: bool = False) -> DataFrame:
-    """Decode audio -> RMS/peak features; iterator mapInPandas, payload
-    dropped. Codec per the registry (fake here, real when installed)."""
-    out_schema = T.StructType(
-        [df.schema[id_col]] + AUDIO_FEATURES_FIELDS
-    )
+    """Decode audio -> RMS/peak features through :func:`map_rows`, which
+    keeps ``id_col`` only and drops the payload. Codec per the registry
+    (fake here, real when installed); ``strict`` re-raises a missing
+    codec's ``NotImplementedError``."""
 
-    def mapper(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        worker_init()
-        for b in batches:
-            rows = []
-            for r in b.itertuples(index=False):
-                try:
-                    wav = decode_audio(bytes(getattr(r, bytes_col)), strict)
-                    rows.append({
-                        "audio_ok": True,
-                        "n_samples": int(wav.shape[0]),
-                        "rms": float(np.sqrt(np.mean(wav**2))),
-                        "peak": float(np.abs(wav).max()),
-                    })
-                except NotImplementedError:
-                    raise
-                except Exception:
-                    rows.append({"audio_ok": False, "n_samples": None,
-                                 "rms": None, "peak": None})
-            out = pd.DataFrame(rows)
-            out.insert(0, id_col, b[id_col].reset_index(drop=True))
-            yield out
+    def one(data):
+        try:
+            wav = decode_audio(bytes(data), strict)
+            return {
+                "audio_ok": True,
+                "n_samples": int(wav.shape[0]),
+                "rms": float(np.sqrt(np.mean(wav**2))),
+                "peak": float(np.abs(wav).max()),
+            }
+        except NotImplementedError:
+            raise
+        except Exception:
+            return {"audio_ok": False, "n_samples": None, "rms": None,
+                    "peak": None}
 
-    return df.select(id_col, bytes_col).mapInPandas(mapper, out_schema)
+    return map_rows(df, [id_col], (bytes_col,), AUDIO_FEATURES_FIELDS, one)
 
 
 VIDEO_FRAMES_FIELDS = [

@@ -53,7 +53,6 @@ def validate_stream(
     The schema compiles ONCE per query, on the first micro-batch: every
     batch has ``spark_schema`` and the compiled columns bind by name, so
     later batches re-point the same result at their frame."""
-    stream = spark.readStream.schema(spark_schema).parquet(input_path)
     manifest = Manifest(manifest_path)
     compiled = []
 
@@ -84,13 +83,29 @@ def validate_stream(
         if extra_process is not None:
             extra_process(batch_df, batch_id)
 
-    writer = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_path)
-    )
+    return _start_stream(spark, input_path, spark_schema, checkpoint_path,
+                         available_now, process)
+
+
+def _start_stream(spark: SparkSession, input_path: str,
+                  spark_schema: T.StructType, checkpoint_path: str,
+                  available_now: bool, process: Callable):
+    """Start ``foreachBatch(process)`` over the parquet files arriving
+    under ``input_path``; ``available_now`` drains what exists and stops."""
+    writer = (spark.readStream.schema(spark_schema).parquet(input_path)
+              .writeStream.foreachBatch(process)
+              .option("checkpointLocation", checkpoint_path))
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
+
+
+def _append_decisions(op: Callable, decisions_path: str) -> Callable:
+    """A ``foreachBatch`` body appending ``op(batch)`` plus ``batch_id``."""
+    def process(batch_df: DataFrame, batch_id: int):
+        (op(batch_df).withColumn("batch_id", F.lit(batch_id))
+         .write.mode("append").parquet(decisions_path))
+    return process
 
 
 def windowed_drift_stream(
@@ -265,21 +280,11 @@ def decontaminate_stream(
     replays write identical rows)."""
     from schisma_spark.functions.dedup import decontaminate
 
-    stream = spark.readStream.schema(spark_schema).parquet(input_path)
-
-    def process(batch_df: DataFrame, batch_id: int):
-        (decontaminate(batch_df, eval_df, text_col, id_col,
-                       **decontam_kw)
-         .withColumn("batch_id", F.lit(batch_id))
-         .write.mode("append").parquet(decisions_path))
-
-    writer = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_path)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_stream(
+        spark, input_path, spark_schema, checkpoint_path, available_now,
+        _append_decisions(lambda b: decontaminate(b, eval_df, text_col,
+                                                  id_col, **decontam_kw),
+                          decisions_path))
 
 
 def incremental_dedup_stream(
@@ -311,21 +316,12 @@ def incremental_dedup_stream(
     re-evaluates it per batch."""
     from schisma_spark.functions.dedup import incremental_dedup
 
-    stream = spark.readStream.schema(spark_schema).parquet(input_path)
-
-    def process(batch_df: DataFrame, batch_id: int):
-        (incremental_dedup(batch_df, corpus_sigs, text_col, id_col,
-                           **dedup_kw)
-         .withColumn("batch_id", F.lit(batch_id))
-         .write.mode("append").parquet(decisions_path))
-
-    writer = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_path)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_stream(
+        spark, input_path, spark_schema, checkpoint_path, available_now,
+        _append_decisions(lambda b: incremental_dedup(b, corpus_sigs,
+                                                      text_col, id_col,
+                                                      **dedup_kw),
+                          decisions_path))
 
 
 def sessionize_stream(

@@ -15,7 +15,11 @@ from schisma_spark.image.fixtures import (
     images_schema_dsl,
     images_table,
 )
-from schisma_spark.image.decode import caption_violations, decode_validate
+from schisma_spark.image.decode import (
+    DECODE_RESULT_FIELDS,
+    caption_violations,
+    decode_validate,
+)
 from schisma_spark.checks import fk_violations
 
 
@@ -86,6 +90,18 @@ def test_decode_validate_end_to_end(spark):
         ~F.col("decode_ok") | ~F.col("pixels_ok") | ~F.col("size_ok")
     ).count() == 0
     checked.unpersist()
+
+
+def test_decode_validate_keep_cols_need_not_hold_read_cols(spark):
+    """``keep_cols`` without ``fmt``/``w``/``h``: the decode still reads
+    them, and the output equals the default call projected onto the kept
+    columns plus the decode fields."""
+    imgs = images_table(spark, 40, seed=42)
+    names = [f.name for f in DECODE_RESULT_FIELDS]
+    got = decode_validate(imgs, keep_cols=["image_id", "part"])
+    assert got.columns == ["image_id", "part", *names]
+    want = decode_validate(imgs).select("image_id", "part", *names)
+    assert got.collect() == want.collect()
 
 
 def test_caption_fidelity(spark):

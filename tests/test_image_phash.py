@@ -114,3 +114,26 @@ def test_image_keep_list_end_to_end(spark):
     assert got["a1"] == (False, "near_dup")
     assert got["broken"] == (False, "invalid_signature")
     assert all(got[f"d{i}"][1] in ("ok", "near_dup") for i in range(3, 12))
+
+
+def test_compute_phash_keeps_63_bit_hashes_beside_a_null(spark):
+    """One Arrow batch holds an undecodable payload (NULL hash) and hashes
+    above 2**53: an int column built with a None turns float64 and rounds
+    them, so every other row must equal the driver-side hash exactly."""
+    from schisma_spark.image.phash import compute_phash
+
+    rows, want = [], {}
+    for i in range(30):
+        px = gen_pixels(f"img-{i:012d}", 32, 32)
+        rows.append(Row(image_id=f"d{i}",
+                        bytes=bytearray(encode_image(px, "raw")),
+                        w=32, h=32, fmt="raw"))
+        want[f"d{i}"] = phash64_pixels(px)
+    rows.append(Row(image_id="broken", bytes=bytearray(b"\x00\x01"),
+                    w=32, h=32, fmt="raw"))
+    want["broken"] = None
+    assert any(v > 2**53 for v in want.values() if v is not None)
+    df = spark.createDataFrame(rows).coalesce(1)  # one partition, one batch
+    got = {r["image_id"]: r["phash64"]
+           for r in compute_phash(df, keep_cols=["image_id"]).collect()}
+    assert got == want

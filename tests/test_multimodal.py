@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from schisma_spark.image.fixtures import images_table
 from schisma_spark.image.synth import gen_pixels
 from schisma_spark.multimodal import (
+    IMAGE_FEATURES_FIELDS,
     audio_features,
     decode_audio,
     image_features,
@@ -49,6 +50,21 @@ def test_image_features(spark):
     assert a == b
 
 
+def test_image_features_keeps_a_read_column(spark):
+    """``fmt`` is both read by the decode and kept: it comes out once,
+    beside the same features the default call computes."""
+    imgs = images_table(spark, 40, seed=42)
+    names = [f.name for f in IMAGE_FEATURES_FIELDS]
+    got = image_features(imgs, keep_cols=["image_id", "fmt"])
+    assert got.columns == ["image_id", "fmt", *names]
+    src = imgs.select("image_id", "fmt").collect()
+    default = image_features(imgs).collect()
+    assert [r["image_id"] for r in src] == [r["image_id"] for r in default]
+    want = [(s["image_id"], s["fmt"], *(d[n] for n in names))
+            for s, d in zip(src, default)]
+    assert [tuple(r) for r in got.collect()] == want
+
+
 def test_audio_features_plumbing(spark):
     df = spark.createDataFrame(
         [Row(clip_id=i, bytes=bytes([i]) * 100) for i in range(20)]
@@ -58,6 +74,9 @@ def test_audio_features_plumbing(spark):
     assert len(rows) == 20
     assert all(r["audio_ok"] and r["n_samples"] == 16000 for r in rows)
     assert all(0.0 <= r["rms"] <= r["peak"] <= 1.0 for r in rows)
+    # strict mode: the missing codec fails the job, never a NULL row
+    with pytest.raises(Exception, match="NotImplementedError"):
+        audio_features(df, strict=True).collect()
     # deterministic fake: same payload -> same features
     a = decode_audio(b"xyz")
     b = decode_audio(b"xyz")
